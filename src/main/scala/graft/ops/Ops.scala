@@ -525,14 +525,19 @@ object Compaction {
     // one beat — but the next beat's re-read stops us, and the
     // commit-point ownership check below is the hard backstop. Daemon +
     // best-effort: a failed rewrite only re-opens the TTL window.
-    @volatile var stop = false
+    //
+    // The body's end WAKES the heartbeat through a latch and then joins
+    // it; it never interrupts it. An interrupt landing inside the
+    // `fs.create(lease, true)` rewrite would leave a truncated payload
+    // with a fresh mtime: the release's token check would then fail and
+    // strand a live-looking orphan lease for a full TTL.
+    val done = new java.util.concurrent.CountDownLatch(1)
     val beat = math.max(250L, ttlMs / 3)
     val hb = new Thread(() => {
       var alive = true
-      while (alive && !stop) {
-        try Thread.sleep(beat)
-        catch { case _: InterruptedException => alive = false }
-        if (alive && !stop) lockFor(key).synchronized {
+      while (alive &&
+          !done.await(beat, java.util.concurrent.TimeUnit.MILLISECONDS))
+        lockFor(key).synchronized {
           try {
             if (readLeaseToken(fs, lease).contains(token)) {
               val out = fs.create(lease, true)
@@ -542,15 +547,13 @@ object Compaction {
             } else alive = false // usurped mid-body: stop beating
           } catch { case _: Exception => () }
         }
-      }
     }, s"graft-swap-lease-heartbeat-${target.getName}")
     hb.setDaemon(true)
     hb.start()
     try body
     finally {
-      stop = true
-      hb.interrupt()
-      releaseSwapLease(fs, lease, token)
+      done.countDown()
+      try hb.join() finally releaseSwapLease(fs, lease, token)
     }
   }
 

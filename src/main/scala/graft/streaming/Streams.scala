@@ -1,8 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{StructField, StructType}
+import graft.ops.Compaction
 
 /** Structured Streaming layer. The reference is pure batch (SURVEY §2.10) —
   * this is the natural extension for the `events` table: the SAME
@@ -123,176 +128,138 @@ object Streams {
         expr(s"l.$key = r.$key AND r.ts >= l.ts AND " +
           s"r.ts <= l.ts + interval $withinSec seconds"))
 
-  /** Upsert one batch of changes into a parquet key-value table:
-    * latest-change-wins within the batch (one row_number window — which
-    * the TopKPerKey strategy executes as a bounded heap), anti-join out
-    * the replaced keys, union the survivors in. The rewrite lands via a
-    * hidden staging dir with the compaction swap contract (manifest
-    * commit, then adopt fresh files, then drop old ones — a mid-swap
-    * crash rolls FORWARD at the next batch via `Compaction.recoverSwap`;
-    * the dot-prefixed staging dir is invisible to readers).
-    *
-    * At warehouse scale the target would be partitioned and only touched
-    * partitions rewritten (`Etl.writePartitioned` + a key→partition
-    * pruning filter before the anti-join); the single-leaf swap here is
-    * the same contract at demo size. */
-  def upsertBatch(batch: DataFrame, targetDir: String, keys: Seq[String],
-      orderCol: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    // latest by orderCol; like any CDC feed, (key, orderCol) is assumed
-    // unique — equal versions of the same key have no defined winner
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(orderCol).desc)
-    // persisted: referenced by the emptiness probe, the anti-join AND the
-    // union — without it the window dedup would run three times per batch
-    val latest = batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn").persist()
-    try {
-      if (latest.isEmpty) return
-      val target = new org.apache.hadoop.fs.Path(targetDir)
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // EVERY mutation of the table dir runs under the single-writer
-      // lease, the seed write included: a bare first-write path would
-      // race a concurrent writer creating the same table on nothing
-      // stronger than ErrorIfExists (TOCTOU on the exists probe). The
-      // dir is created first so the lease file has somewhere to live —
-      // mkdirs is idempotent.
-      fs.mkdirs(target)
-      // single-writer lease across the WHOLE recover→read→merge→stage→
-      // swap sequence: a merge computed against a base another writer
-      // swaps mid-flight would silently lose that writer's rows
-      graft.ops.Compaction.withSwapLease(fs, target) {
-        // a swap that crashed past its commit point left old+new file
-        // sets coexisting — roll it forward BEFORE reading, or the
-        // duplicates of every key absent from this batch would be baked
-        // into the merge
-        graft.ops.Compaction.recoverSwapLocked(fs, target)
-        val hasData = fs.listStatus(target).exists(s =>
-          s.isFile && graft.ops.Compaction.isDataFile(s.getPath))
-        val merged =
-          if (!hasData) latest // seed: the swap adopts it like any batch
-          else spark.read.parquet(targetDir)
-            .join(latest, keys, "left_anti").unionByName(latest)
-        val staging = new org.apache.hadoop.fs.Path(target.getParent,
-          "." + target.getName + "__upserting")
-        if (fs.exists(staging)) fs.delete(staging, true)
-        merged.write.parquet(staging.toString)
-        // shared crash-safe protocol (rename results checked; see
-        // Compaction.swapDataFiles)
-        graft.ops.Compaction.swapDataFilesLocked(fs, staging, target)
-      }
-    } finally latest.unpersist()
-  }
+  // ---- sinks: one commit protocol --------------------------------------------
 
-  /** Streaming upsert sink (the foreachBatch production pattern): every
-    * micro-batch latest-wins-merges into the parquet table at
-    * `targetDir`. Exactly-once for the DURABLE table state: the
-    * checkpoint makes batch replay idempotent (same keys re-merge to the
-    * same values), and a crash inside the file swap rolls forward via the
-    * swap manifest — the next batch (or compaction sweep) completes the
-    * interrupted adoption before reading, so no duplicate survives into a
-    * merge. The one caveat is visibility, not durability: a reader racing
-    * the swap window itself can transiently observe old+new files
-    * together (point-in-time isolation needs a transactional table
-    * format, out of scope). */
-  def upsertSink(stream: DataFrame, targetDir: String, checkpointDir: String,
-      keys: Seq[String], orderCol: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsertBatch(b.toDF(), targetDir, keys, orderCol))
-      .start()
+  /** How [[commitBatch]] recognizes a batch it has already committed. */
+  private sealed trait Guard
+  /** No guard: the merge itself is replay-idempotent. */
+  private case object NoGuard extends Guard
+  /** The committed max of a stamp column the merge writes on its rows. */
+  private final case class Stamp(column: String, batchId: Long) extends Guard
+  /** The [[CdcWatermarkName]] sidecar, written after the swap. */
+  private final case class Sidecar(batchId: Long) extends Guard
 
-  /** One micro-batch of the CDC → SCD2 dimension sink: merges the
-    * batch's change rows (insert/update/delete + monotone `seqCol`) into
-    * the parquet dimension at `targetDir` via [[graft.scd.Scd.scd2Cdc]]
-    * — the streaming form of the reference's batch MERGE
-    * (`Terraform/sql/010_scd_dimensions.sql:391-521`).
+  /** The one commit protocol of every sink below. A batch runs these
+    * steps, in this order:
     *
-    * Exactly-once on top of foreachBatch's at-least-once, the
-    * [[packBatchIncremental]] pattern: every written row is stamped with
-    * the source's monotone `batch_id`; a replayed batch is detected by
-    * the committed max(batch_id) watermark and skipped, and the rewrite
-    * lands through the crash-safe swap (manifest commit + roll-forward
-    * via `Compaction.recoverSwap` before every read), so a batch is
-    * either fully visible or not at all.
+    *  1. `mkdirs` the table root and take its single-writer lease
+    *     ([[graft.ops.Compaction.withSwapLease]]) for the whole batch.
+    *     The seed write is lease-protected like every later batch: a
+    *     bare first write would race a concurrent writer creating the
+    *     same table on nothing stronger than ErrorIfExists.
+    *  2. Heal: roll forward a swap that crashed past its commit point
+    *     (the root's, or EVERY `bucket_id=` leaf's for the bucketed
+    *     layout, whether or not this batch touches it), so no merge
+    *     reads old and new files together.
+    *  3. Replay guard ([[Guard]]): a batch id already committed is
+    *     skipped.
+    *  4. Base read: the table, or the touched bucket leaves; `None` when
+    *     there are no data files, so an empty directory (a crashed seed
+    *     after `mkdirs`) reads as no table.
+    *  5. Stage `merge(base)` into a dot-hidden sibling directory (a
+    *     `None` merge commits nothing).
+    *  6. Swap with the manifest protocol of
+    *     [[graft.ops.Compaction.swapDataFiles]]: the root swap, or one
+    *     swap per touched leaf under that LEAF's lease, the path
+    *     [[graft.ops.Compaction.compact]] locks, so a concurrent bucket
+    *     compaction fails fast (leaf acquisition never blocks, so the
+    *     root→leaf order cannot deadlock). A touched bucket that had data
+    *     but staged nothing adopts an empty staging: its rows are gone.
+    *  7. The sidecar watermark, last.
     *
-    * One effective date per micro-batch — the feed's max `effDateCol` —
-    * matching the reference MERGE's single per-run @date_chargement;
-    * per-ROW effective dating would be event-time SCD, which neither the
-    * reference nor [[graft.scd.Scd.scd2]] defines. The whole dimension
-    * is rewritten per batch: dimension-sized work by definition (facts
-    * never flow through this sink); at warehouse scale the dim would be
-    * partitioned on a stable attribute and only touched partitions
-    * rewritten, as [[upsertBatch]] notes. The first batch seeds the
-    * dimension (every key lands as version 1 via scd2's brand-new
-    * branch against an empty seed). */
-  def scd2CdcBatch(batch: DataFrame, targetDir: String, bk: Seq[String],
-      tracked: Seq[String], seqCol: String, opCol: String,
-      effDateCol: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val target = new org.apache.hadoop.fs.Path(targetDir)
+    * The guard is per sink. A merge that is NOT replay-idempotent (pack's
+    * offset fold, cluster's relabeling, the batch-time whole-table SCD2
+    * merge, whose stale replay would stack versions) stamps its rows
+    * with the batch id: the stamp lands in the SAME swap as the data, so
+    * "committed" is exact. A bucketed batch swaps several leaves, and
+    * those swaps are not atomic together, nor can untouched leaves be
+    * restamped: its watermark lives in the sidecar, written after the
+    * last swap, so a crash before it replays the batch. That replay is
+    * safe because those merges absorb it (a re-applied CDC change is
+    * `unchanged`; the event-time rebuild collapses a re-merged change
+    * onto its own version). The whole-table event-time sink, whose
+    * rebuild renumbers every version anyway, keeps the same sidecar.
+    * The latest-wins upsert is idempotent and needs no guard.
+    *
+    * Driver state is the touched-bucket list, bounded by the bucket
+    * count; a reader racing a swap window can transiently see old and
+    * new files together (point-in-time isolation needs a transactional
+    * table format). */
+  private def commitBatch(spark: SparkSession, targetDir: String,
+      guard: Guard, bucketed: Option[DataFrame] = None)(
+      merge: Option[DataFrame] => Option[DataFrame]): Unit = {
+    val target = new HPath(targetDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def mergeAndLand(existing: Option[DataFrame]): Unit = {
-      // replay guard: null-safe like packBatchIncremental's (an existing
-      // but empty dim yields max = NULL = "no committed batch")
-      val committed = existing.flatMap(o =>
-        Option(o.agg(max("batch_id")).head().getAs[java.lang.Long](0))
-          .map(_.longValue))
-      if (committed.exists(_ >= batchId)) return
-      val effDate = batch.agg(max(col(effDateCol).cast("date"))).head().getDate(0)
-      require(effDate != null,
-        s"scd2CdcBatch: every change row has a null $effDateCol — no " +
-          "effective date for the batch")
-      val eff = effDate.toString
-      // the CDC bookkeeping columns (op, seq, change date) are not dim
-      // attributes: the seed drops them, and scd2 projects updates by the
-      // DIM's attribute names, so they ride along unreferenced
-      val dim = existing.map(_.drop("batch_id")).getOrElse(
-        graft.scd.Scd.seed(batch.drop(opCol, seqCol, effDateCol).limit(0), eff))
-      val merged = graft.scd.Scd
-        .scd2Cdc(dim, batch, bk, tracked, seqCol, opCol, eff)
-        .withColumn("batch_id", lit(batchId))
-      // the seed lands through the same stage+swap as every later batch
-      // (the target dir already exists for the lease, so ErrorIfExists
-      // can't gate the first write — and shouldn't: only the lease may)
-      val staging = new org.apache.hadoop.fs.Path(target.getParent,
-        "." + target.getName + "__scd2cdc")
-      if (fs.exists(staging)) fs.delete(staging, true)
-      merged.write.parquet(staging.toString)
-      graft.ops.Compaction.swapDataFilesLocked(fs, staging, target)
-    }
-
-    // mkdirs-then-lease, like upsertBatch: the seed write is lease-
-    // protected too, closing the TOCTOU where a concurrent writer
-    // creating the same table races the exists probe
+    def hasData(p: HPath) = fs.exists(p) && fs.listStatus(p).exists(s =>
+      s.isFile && Compaction.isDataFile(s.getPath))
+    def leaf(b: Int) = new HPath(target, s"bucket_id=$b")
     fs.mkdirs(target)
-    graft.ops.Compaction.withSwapLease(fs, target) {
-      // single-writer lease across recover→read→merge→stage→swap, same
-      // reasoning as upsertBatch
-      graft.ops.Compaction.recoverSwapLocked(fs, target)
-      val hasData = fs.listStatus(target).exists(s =>
-        s.isFile && graft.ops.Compaction.isDataFile(s.getPath))
-      mergeAndLand(if (hasData) Some(spark.read.parquet(targetDir)) else None)
+    Compaction.withSwapLease(fs, target) {
+      if (bucketed.isEmpty) Compaction.recoverSwapLocked(fs, target)
+      else fs.listStatus(target)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket_id="))
+        .foreach(d => Compaction.recoverSwap(fs, d.getPath))
+      lazy val touched = bucketed.map(_.select("bucket_id").distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq)
+      lazy val base = touched match {
+        case None =>
+          if (hasData(target)) Some(spark.read.parquet(targetDir)) else None
+        case Some(ts) =>
+          val existing = ts.filter(b => hasData(leaf(b)))
+          if (existing.isEmpty) None
+          else Some(spark.read.option("basePath", targetDir)
+            .parquet(existing.map(leaf(_).toString): _*))
+      }
+      val committed = guard match {
+        case NoGuard => false
+        case Sidecar(id) => readCdcWatermark(fs, target).exists(_ >= id)
+        // null-safe: an existing but empty table has max = NULL, which
+        // means "no committed batch", not an NPE on every restart
+        case Stamp(c, id) => base.flatMap(t =>
+          Option(t.agg(max(c)).head().getAs[java.lang.Long](0)))
+          .exists(_ >= id)
+      }
+      if (!committed) merge(base).foreach { rows =>
+        val staging = new HPath(target.getParent,
+          "." + target.getName + "__staging")
+        if (fs.exists(staging)) fs.delete(staging, true)
+        touched match {
+          case None =>
+            rows.write.parquet(staging.toString)
+            Compaction.swapDataFilesLocked(fs, staging, target)
+          case Some(ts) =>
+            rows.write.partitionBy("bucket_id").parquet(staging.toString)
+            ts.foreach { b =>
+              val staged = new HPath(staging, s"bucket_id=$b")
+              // the swap manifest names its staging dir relative to the
+              // leaf's PARENT: move the staged leaf beside it first
+              val st = new HPath(target, s".bucket_id=${b}__incoming")
+              if (fs.exists(staged) || hasData(leaf(b))) {
+                if (fs.exists(st)) fs.delete(st, true)
+                if (!fs.exists(staged)) fs.mkdirs(st)
+                else if (!fs.rename(staged, st)) throw new java.io.IOException(
+                  s"could not stage partition $staged -> $st")
+                fs.mkdirs(leaf(b))
+                Compaction.swapDataFiles(fs, st, leaf(b))
+              }
+            }
+            fs.delete(staging, true)
+        }
+        guard match {
+          case Sidecar(id) => writeCdcWatermark(fs, target, id)
+          case _ => ()
+        }
+      }
     }
   }
 
-  /** Sidecar file holding the committed CDC batch-id watermark for the
-    * PARTITIONED dimension sink: partition-grain rewrites can't restamp
-    * untouched rows with a batch_id column (that would force the full
-    * rewrite the variant exists to avoid), so the watermark lives
-    * beside the data, dot-prefixed and invisible to readers, updated
-    * LAST inside the lease (write-tmp + rename, the manifest pattern). */
+  /** Sidecar holding the committed CDC batch-id watermark (see
+    * [[commitBatch]]): dot-prefixed and invisible to readers, replaced
+    * by write-tmp + rename, the manifest pattern. */
   private val CdcWatermarkName = "._graft_cdc_watermark"
 
-  private def readCdcWatermark(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(target, CdcWatermarkName)
+  private def readCdcWatermark(fs: FileSystem, target: HPath): Option[Long] = {
+    val p = new HPath(target, CdcWatermarkName)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -302,10 +269,10 @@ object Streams {
     }
   }
 
-  private def writeCdcWatermark(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(target, CdcWatermarkName)
-    val tmp = new org.apache.hadoop.fs.Path(target, CdcWatermarkName + ".tmp")
+  private def writeCdcWatermark(fs: FileSystem, target: HPath,
+      batchId: Long): Unit = {
+    val p = new HPath(target, CdcWatermarkName)
+    val tmp = new HPath(target, CdcWatermarkName + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(batchId.toString
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -315,7 +282,7 @@ object Streams {
     // neither watermark file exists. Stores that refuse an occupied
     // destination (HDFS FileSystem.rename) fall back to
     // delete-then-rename — the crash window there is replay-safe
-    // because one CDC merge round is idempotent (see the sink docs).
+    // because the sidecar sinks' merges absorb a replay.
     if (!fs.rename(tmp, p)) {
       if (fs.exists(p)) fs.delete(p, false)
       if (!fs.rename(tmp, p))
@@ -323,339 +290,181 @@ object Streams {
     }
   }
 
-  /** Heal every bucket leaf of a partitioned dimension whose swap
-    * committed but didn't finish — regardless of whether the CURRENT
-    * batch touches that bucket. Streaming re-delivers a crashed batch
-    * with identical content, so its own touched-leaf recovery would
-    * suffice there; but the batch entry points are also public API, and
-    * a caller who never replays the crashed batch would otherwise serve
-    * a stale/partial leaf until some later batch happened to hash into
-    * it. Cost is one root listing plus a manifest probe per leaf —
-    * bounded by nBuckets; [[graft.ops.Compaction.recoverSwap]] takes
-    * the LEAF's own lease only when a manifest is actually present. */
-  private def healAllBucketLeaves(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Unit =
-    fs.listStatus(target)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket_id="))
-      .foreach(d => graft.ops.Compaction.recoverSwap(fs, d.getPath))
-
-  /** Partitioned-dimension variant of [[scd2CdcBatch]]: the dimension is
-    * laid out hive-style on a BUSINESS-KEY-STABLE partition —
-    * `bucket_id = pmod(xxhash64(bk…), nBuckets)`, so every version of a
-    * key lives in one leaf forever — and a batch rewrites ONLY the
-    * leaves its keys hash to. Untouched partitions keep their exact
-    * files (the [[graft.marts.Refresh]] incremental contract); this is
-    * the 100 TB shape, matching the reference MERGE's per-run scoping
-    * (`Terraform/sql/010_scd_dimensions.sql:391-521`) where
-    * [[scd2CdcBatch]] rewrites the whole dim each batch.
-    *
-    * Batch-time by CONTRACT: every change in a micro-batch shares one
-    * effective date (the reference MERGE's single @date_chargement), and
-    * a batch carrying MORE than one distinct `effDateCol` date raises
-    * loudly instead of silently stamping everything at the max — a
-    * genuinely event-dated feed belongs on
-    * [[scd2CdcEventTimeBatchPartitioned]], which splices each change at
-    * its own date.
-    *
-    * The replay watermark moves to a sidecar file ([[CdcWatermarkName]])
-    * because untouched partitions can't be restamped; it is updated LAST
-    * inside the single-writer lease. Crash anywhere before that update
-    * replays the batch — safe because one [[graft.scd.Scd.scd2Cdc]]
-    * round is IDEMPOTENT per partition (re-applying a change to a dim
-    * that already absorbed it classifies as `unchanged`: same tracked
-    * values, no version bump; a replayed delete finds no active row to
-    * close), and a swap that crashed past its commit point rolls forward
-    * via [[healAllBucketLeaves]] before the re-read — EVERY leaf with a
-    * committed manifest, not just the replayed batch's, so even a
-    * caller that never re-delivers the crashed batch reads healed data.
-    *
-    * Locking is two-level. The table-ROOT lease serializes whole
-    * batches (and the sidecar watermark) against other sink writers;
-    * each leaf mutation — heal or swap — additionally holds that LEAF's
-    * own lease, the same path [[graft.ops.Compaction.compact]] locks
-    * when it descends into partition leaves, so a concurrent compaction
-    * of a bucket mid-batch fails fast instead of silently listing the
-    * sink's freshly adopted files as compactable debris (leaf-lease
-    * acquisition never blocks, so the root→leaf order cannot deadlock
-    * against leaf-only lockers).
-    *
-    * One merge job per batch, not one per bucket: the touched leaves are
-    * read with partition pruning, merged once, staged `partitionBy
-    * (bucket_id)`, and adopted leaf-by-leaf through the crash-safe swap
-    * (each staged leaf is renamed to a dot-prefixed sibling of its
-    * target leaf first, so the swap manifest's parent-relative staging
-    * reference resolves). Driver-side state is the touched-bucket id
-    * list — bounded by `nBuckets`, never key-sized. */
-  def scd2CdcBatchPartitioned(batch: DataFrame, targetDir: String,
-      bk: Seq[String], tracked: Seq[String], seqCol: String, opCol: String,
-      effDateCol: String, batchId: Long, nBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    require(nBuckets >= 1, "nBuckets must be positive")
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val target = new HPath(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(target)
-    graft.ops.Compaction.withSwapLease(fs, target) {
-      // heal committed-but-unfinished swaps on ALL leaves before any
-      // read — not just the buckets this batch touches
-      healAllBucketLeaves(fs, target)
-      // replay guard from the sidecar, not a column scan
-      if (!readCdcWatermark(fs, target).exists(_ >= batchId)) {
-        val mm = batch.agg(
-          min(col(effDateCol).cast("date")), max(col(effDateCol).cast("date")))
-          .head()
-        val (minDate, effDate) = (mm.getDate(0), mm.getDate(1))
-        require(effDate != null,
-          s"scd2CdcBatchPartitioned: every change row has a null " +
-            s"$effDateCol — no effective date for the batch")
-        require(minDate == effDate,
-          s"scd2CdcBatchPartitioned is batch-time: one effective date per " +
-            s"batch, got [$minDate, $effDate] — route event-dated feeds " +
-            "to scd2CdcEventTimeBatchPartitioned")
-        val eff = effDate.toString
-        val chg = batch.withColumn("bucket_id",
-          pmod(xxhash64(bk.map(col): _*), lit(nBuckets.toLong)).cast("int"))
-        val touched = chg.select("bucket_id").distinct()
-          .collect().map(_.getInt(0)).sorted
-        def leaf(b: Int) = new HPath(target, s"bucket_id=$b")
-        val existing = touched.filter(b => fs.exists(leaf(b)) &&
-          fs.listStatus(leaf(b)).exists(s =>
-            s.isFile && graft.ops.Compaction.isDataFile(s.getPath)))
-        val dim =
-          if (existing.isEmpty)
-            graft.scd.Scd.seed(
-              chg.drop(opCol, seqCol, effDateCol).limit(0), eff)
-          else spark.read.option("basePath", targetDir)
-            .parquet(existing.map(b => leaf(b).toString): _*)
-        val merged = graft.scd.Scd
-          .scd2Cdc(dim, chg, bk, tracked, seqCol, opCol, eff)
-        val stagingRoot = new HPath(target.getParent,
-          "." + target.getName + "__scd2cdcp")
-        if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
-        merged.write.partitionBy("bucket_id").parquet(stagingRoot.toString)
-        touched.foreach { b =>
-          val staged = new HPath(stagingRoot, s"bucket_id=$b")
-          // a touched bucket stages nothing only when every one of its
-          // change rows was a delete of a never-seen key — nothing to do
-          if (fs.exists(staged)) {
-            // the swap manifest names its staging dir relative to the
-            // target leaf's PARENT: move the staged leaf to a hidden
-            // sibling of the target leaf before adopting
-            val st = new HPath(target, s".bucket_id=${b}__incoming")
-            if (fs.exists(st)) fs.delete(st, true)
-            if (!fs.rename(staged, st)) throw new java.io.IOException(
-              s"could not stage partition $staged -> $st")
-            fs.mkdirs(leaf(b))
-            // swapDataFiles (not ...Locked): takes the LEAF lease, the
-            // path Compaction.compact locks — see the locking scaladoc
-            graft.ops.Compaction.swapDataFiles(fs, st, leaf(b))
-          }
-        }
-        fs.delete(stagingRoot, true)
-        // commit point for replay skipping: everything before this line
-        // re-runs idempotently if we crash
-        writeCdcWatermark(fs, target, batchId)
-      }
-    }
-  }
-
-  /** One micro-batch of the EVENT-TIME CDC → SCD2 dimension sink: the
-    * batch's change rows carry their OWN effective dates and are merged
-    * via [[graft.scd.Scd.scd2CdcEventTime]] — late or out-of-order
-    * changes SPLICE the stored chain at their date instead of stacking
-    * on the end, which is the realistic shape of a change STREAM (the
-    * batch-time [[scd2CdcBatch]] stamps one date per micro-batch).
-    *
-    * Exactly-once like the partitioned sink: the committed batch-id
-    * watermark lives in the [[CdcWatermarkName]] sidecar (the rebuild
-    * renumbers versions, so a batch_id column would be restamped
-    * dimension-wide anyway), updated LAST inside the single-writer
-    * lease. A crash before that update replays the batch — safe because
-    * the event-time rebuild is ABSORBING: a feed event already merged
-    * reappears as a dimension-version event on the same date with the
-    * same attributes, the same-date collapse keeps exactly one of them,
-    * and the rebuilt chain is identical (ScdSpec's round-trip identity
-    * property is exactly this). The whole dimension is rewritten per
-    * batch through the crash-safe swap, dimension-grain by contract. */
-  def scd2CdcEventTimeBatch(batch: DataFrame, targetDir: String,
-      bk: Seq[String], tracked: Seq[String], seqCol: String, opCol: String,
-      effDateCol: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val target = new HPath(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(target)
-    graft.ops.Compaction.withSwapLease(fs, target) {
-      if (!readCdcWatermark(fs, target).exists(_ >= batchId)) {
-        graft.ops.Compaction.recoverSwapLocked(fs, target)
-        val hasData = fs.listStatus(target).exists(s =>
-          s.isFile && graft.ops.Compaction.isDataFile(s.getPath))
-        val dim =
-          if (hasData) spark.read.parquet(targetDir)
-          else graft.scd.Scd.seed(
-            batch.drop(opCol, seqCol, effDateCol).limit(0), "1970-01-01")
-        val merged = graft.scd.Scd.scd2CdcEventTime(dim, batch, bk,
-          tracked, seqCol, opCol, effDateCol)
-        val staging = new HPath(target.getParent,
-          "." + target.getName + "__scd2cdcet")
-        if (fs.exists(staging)) fs.delete(staging, true)
-        merged.write.parquet(staging.toString)
-        graft.ops.Compaction.swapDataFilesLocked(fs, staging, target)
-        writeCdcWatermark(fs, target, batchId)
-      }
-    }
-  }
-
-  /** Partitioned-dimension variant of [[scd2CdcEventTimeBatch]] — the
-    * last cell of the CDC sink matrix, and the realistic 100 TB shape:
-    * late-arriving event-dated changes splice into a dimension far too
-    * big to rewrite per batch. Layout, locking, sidecar watermark and
-    * crash story are [[scd2CdcBatchPartitioned]]'s (bucket_id =
-    * pmod(xxhash64(bk…), nBuckets); table-root lease per batch, leaf
-    * lease per swap — the path a concurrent
-    * [[graft.ops.Compaction.compact]] locks; [[healAllBucketLeaves]]
-    * before every read; watermark updated LAST); the merge is
-    * [[graft.scd.Scd.scd2CdcEventTime]], whose semi/anti split already
-    * confines the per-key rebuild to the batch's touched keys — here it
-    * runs over only the touched BUCKETS' rows, read with partition
-    * pruning, so per-batch work is (touched buckets' dim slice +
-    * changes), never dimension-sized.
-    *
-    * Replay safety: the event-time rebuild is ABSORBING (a re-merged
-    * change reappears as a same-date dimension-version event and the
-    * same-date collapse keeps one — [[scd2CdcEventTimeBatch]]'s
-    * contract), and the touched-bucket set is recomputed
-    * deterministically from the replayed batch's keys.
-    *
-    * One divergence from the batch-time variant's adoption loop: the
-    * event-time rebuild can DELETE every row of a bucket (a version
-    * inserted and deleted the same date leaves no trace), so a touched
-    * bucket with existing data but nothing staged swaps in an EMPTY
-    * staging — dropping the stale rows under the same crash-safe
-    * manifest — instead of skipping. */
-  def scd2CdcEventTimeBatchPartitioned(batch: DataFrame, targetDir: String,
-      bk: Seq[String], tracked: Seq[String], seqCol: String, opCol: String,
-      effDateCol: String, batchId: Long, nBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    require(nBuckets >= 1, "nBuckets must be positive")
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val target = new HPath(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(target)
-    graft.ops.Compaction.withSwapLease(fs, target) {
-      healAllBucketLeaves(fs, target)
-      if (!readCdcWatermark(fs, target).exists(_ >= batchId)) {
-        val chg = batch.withColumn("bucket_id",
-          pmod(xxhash64(bk.map(col): _*), lit(nBuckets.toLong)).cast("int"))
-        val touched = chg.select("bucket_id").distinct()
-          .collect().map(_.getInt(0)).sorted
-        def leaf(b: Int) = new HPath(target, s"bucket_id=$b")
-        def hasData(p: HPath) = fs.exists(p) && fs.listStatus(p).exists(s =>
-          s.isFile && graft.ops.Compaction.isDataFile(s.getPath))
-        val existing = touched.filter(b => hasData(leaf(b)))
-        val dim =
-          if (existing.isEmpty)
-            graft.scd.Scd.seed(
-              chg.drop(opCol, seqCol, effDateCol).limit(0), "1970-01-01")
-          else spark.read.option("basePath", targetDir)
-            .parquet(existing.map(b => leaf(b).toString): _*)
-        val merged = graft.scd.Scd.scd2CdcEventTime(dim, chg, bk, tracked,
-          seqCol, opCol, effDateCol)
-        val stagingRoot = new HPath(target.getParent,
-          "." + target.getName + "__scd2cdcetp")
-        if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
-        merged.write.partitionBy("bucket_id").parquet(stagingRoot.toString)
-        touched.foreach { b =>
-          val staged = new HPath(stagingRoot, s"bucket_id=$b")
-          val st = new HPath(target, s".bucket_id=${b}__incoming")
-          if (fs.exists(staged)) {
-            if (fs.exists(st)) fs.delete(st, true)
-            if (!fs.rename(staged, st)) throw new java.io.IOException(
-              s"could not stage partition $staged -> $st")
-            fs.mkdirs(leaf(b))
-            graft.ops.Compaction.swapDataFiles(fs, st, leaf(b))
-          } else if (hasData(leaf(b))) {
-            // every row of this bucket vanished in the rebuild: adopt an
-            // empty staging so the old files drop through the manifest
-            if (fs.exists(st)) fs.delete(st, true)
-            fs.mkdirs(st)
-            graft.ops.Compaction.swapDataFiles(fs, st, leaf(b))
-          }
-        }
-        fs.delete(stagingRoot, true)
-        writeCdcWatermark(fs, target, batchId)
-      }
-    }
-  }
-
-  /** Streaming form of [[scd2CdcEventTimeBatchPartitioned]]. */
-  def scd2CdcEventTimeSinkPartitioned(stream: DataFrame, targetDir: String,
-      checkpointDir: String, bk: Seq[String], tracked: Seq[String],
-      seqCol: String, opCol: String, effDateCol: String, nBuckets: Int):
-      org.apache.spark.sql.streaming.StreamingQuery =
+  /** The streaming form of a batch entry point: `batchFn` runs on every
+    * micro-batch with its id, under the query's checkpoint. */
+  private def foreachBatchSink(stream: DataFrame, checkpointDir: String,
+      outputMode: String = "append")(
+      batchFn: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        scd2CdcEventTimeBatchPartitioned(b.toDF(), targetDir, bk, tracked,
-          seqCol, opCol, effDateCol, id, nBuckets))
+      .outputMode(outputMode)
+      .foreachBatch((b: Dataset[Row], id: Long) => batchFn(b.toDF(), id))
       .start()
+
+  /** The latest row per key by `orderCol`. Like any CDC feed, (key,
+    * orderCol) is assumed unique: equal versions have no defined winner.
+    * One row_number window, which the TopKPerKey strategy executes as a
+    * bounded heap. */
+  private def latestPerKey(rows: DataFrame, keys: Seq[String],
+      orderCol: String): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).desc)
+    rows.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** `rows` replace their keys in `base`: anti-join + union. `rows` is
+    * read twice, so pass a materialized frame. */
+  private def upsertInto(base: Option[DataFrame], rows: DataFrame,
+      keys: Seq[String]): DataFrame =
+    base.fold(rows)(_.join(rows, keys, "left_anti").unionByName(rows))
+
+  /** Upsert one batch of changes into a parquet key-value table,
+    * latest-change-wins within the batch. Committed by [[commitBatch]]
+    * with no replay guard: re-merging a batch yields the same table. At
+    * warehouse scale the target would be partitioned and only touched
+    * partitions rewritten; the protocol is the same. */
+  def upsertBatch(batch: DataFrame, targetDir: String, keys: Seq[String],
+      orderCol: String): Unit = {
+    // persisted: referenced by the emptiness probe, the anti-join AND the
+    // union — without it the window dedup would run three times per batch
+    val latest = latestPerKey(batch, keys, orderCol).persist()
+    try if (!latest.isEmpty)
+      commitBatch(batch.sparkSession, targetDir, NoGuard)(base =>
+        Some(upsertInto(base, latest, keys)))
+    finally latest.unpersist()
+  }
+
+  /** Streaming upsert sink: every micro-batch goes through
+    * [[upsertBatch]]. The checkpoint plus the idempotent merge make the
+    * durable table state exactly-once. */
+  def upsertSink(stream: DataFrame, targetDir: String, checkpointDir: String,
+      keys: Seq[String], orderCol: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir, "update")((b, _) =>
+      upsertBatch(b, targetDir, keys, orderCol))
+
+  /** The CDC → SCD2 dimension batch, one merge for the four public
+    * variants: batch-time ([[graft.scd.Scd.scd2Cdc]]) or event-time
+    * ([[graft.scd.Scd.scd2CdcEventTime]]), crossed with the whole-table
+    * or the `bucket_id = pmod(xxhash64(bk…), n)` layout. Every version of
+    * a key lives in one bucket forever. */
+  private def cdcBatch(batch: DataFrame, targetDir: String, bk: Seq[String],
+      tracked: Seq[String], seqCol: String, opCol: String, effDateCol: String,
+      batchId: Long, eventTime: Boolean, nBuckets: Option[Int]): Unit = {
+    nBuckets.foreach(n => require(n >= 1, "nBuckets must be positive"))
+    if (batch.isEmpty) return
+    val chg = nBuckets.fold(batch)(n => batch.withColumn("bucket_id",
+      pmod(xxhash64(bk.map(col): _*), lit(n.toLong)).cast("int")))
+    val guard =
+      if (eventTime || nBuckets.isDefined) Sidecar(batchId)
+      else Stamp("batch_id", batchId)
+    // the CDC bookkeeping columns (op, seq, change date) are not dim
+    // attributes: the seed drops them, and the merges project by the
+    // DIM's attribute names, so they ride along unreferenced
+    def seed(eff: String) =
+      graft.scd.Scd.seed(chg.drop(opCol, seqCol, effDateCol).limit(0), eff)
+    commitBatch(batch.sparkSession, targetDir, guard, nBuckets.map(_ => chg)) {
+      existing =>
+        if (eventTime) Some(graft.scd.Scd.scd2CdcEventTime(
+          existing.getOrElse(seed("1970-01-01")), chg, bk, tracked, seqCol,
+          opCol, effDateCol))
+        else {
+          val sink =
+            if (nBuckets.isDefined) "scd2CdcBatchPartitioned" else "scd2CdcBatch"
+          val mm = batch.agg(min(col(effDateCol).cast("date")),
+            max(col(effDateCol).cast("date"))).head()
+          val (minDate, effDate) = (mm.getDate(0), mm.getDate(1))
+          require(effDate != null, s"$sink: every change row has a null " +
+            s"$effDateCol — no effective date for the batch")
+          require(nBuckets.isEmpty || minDate == effDate,
+            s"$sink is batch-time: one effective date per batch, got " +
+              s"[$minDate, $effDate] — route event-dated feeds to " +
+              "scd2CdcEventTimeBatchPartitioned")
+          val eff = effDate.toString
+          val merged = graft.scd.Scd.scd2Cdc(
+            existing.map(_.drop("batch_id")).getOrElse(seed(eff)), chg, bk,
+            tracked, seqCol, opCol, eff)
+          Some(if (nBuckets.isDefined) merged
+            else merged.withColumn("batch_id", lit(batchId)))
+        }
+    }
+  }
+
+  /** One micro-batch of the CDC → SCD2 dimension sink, the streaming form
+    * of the reference's batch MERGE
+    * (`Terraform/sql/010_scd_dimensions.sql:391-521`): the change rows
+    * (insert/update/delete + monotone `seqCol`) merge via
+    * [[graft.scd.Scd.scd2Cdc]] into the whole dimension at `targetDir`.
+    * One effective date per batch, the feed's max `effDateCol`, matching
+    * the reference's single per-run @date_chargement. Every row is
+    * stamped with `batch_id`, the replay guard. The first batch seeds the
+    * dimension (every key lands as version 1). */
+  def scd2CdcBatch(batch: DataFrame, targetDir: String, bk: Seq[String],
+      tracked: Seq[String], seqCol: String, opCol: String,
+      effDateCol: String, batchId: Long): Unit =
+    cdcBatch(batch, targetDir, bk, tracked, seqCol, opCol, effDateCol,
+      batchId, eventTime = false, nBuckets = None)
+
+  /** [[scd2CdcBatch]] on a dimension bucketed by business key: a batch
+    * rewrites only the leaves its keys hash to, and untouched leaves keep
+    * their exact files (the [[graft.marts.Refresh]] incremental
+    * contract). Batch-time by contract: a batch carrying more than one
+    * distinct `effDateCol` date raises instead of stamping everything at
+    * the max — event-dated feeds belong on
+    * [[scd2CdcEventTimeBatchPartitioned]]. Replay is safe because one
+    * scd2Cdc round is idempotent: a re-applied change classifies as
+    * `unchanged`, and a replayed delete finds no active row to close. */
+  def scd2CdcBatchPartitioned(batch: DataFrame, targetDir: String,
+      bk: Seq[String], tracked: Seq[String], seqCol: String, opCol: String,
+      effDateCol: String, batchId: Long, nBuckets: Int): Unit =
+    cdcBatch(batch, targetDir, bk, tracked, seqCol, opCol, effDateCol,
+      batchId, eventTime = false, nBuckets = Some(nBuckets))
+
+  /** One micro-batch of the EVENT-TIME CDC → SCD2 sink: every change row
+    * carries its own effective date, and late or out-of-order changes
+    * SPLICE the stored chain at their date
+    * ([[graft.scd.Scd.scd2CdcEventTime]]). Replay is absorbing: a
+    * re-merged change reappears as a same-date dimension version, the
+    * same-date collapse keeps one, and the rebuilt chain is identical
+    * (ScdSpec's round-trip identity property). */
+  def scd2CdcEventTimeBatch(batch: DataFrame, targetDir: String,
+      bk: Seq[String], tracked: Seq[String], seqCol: String, opCol: String,
+      effDateCol: String, batchId: Long): Unit =
+    cdcBatch(batch, targetDir, bk, tracked, seqCol, opCol, effDateCol,
+      batchId, eventTime = true, nBuckets = None)
+
+  /** [[scd2CdcEventTimeBatch]] on the bucketed layout of
+    * [[scd2CdcBatchPartitioned]]: the event-time rebuild runs over only
+    * the touched buckets' rows, so per-batch work is never
+    * dimension-sized. The rebuild can erase a bucket's last chain (a
+    * version inserted and deleted the same date leaves no trace); that
+    * bucket truncates through the empty-staging swap. */
+  def scd2CdcEventTimeBatchPartitioned(batch: DataFrame, targetDir: String,
+      bk: Seq[String], tracked: Seq[String], seqCol: String, opCol: String,
+      effDateCol: String, batchId: Long, nBuckets: Int): Unit =
+    cdcBatch(batch, targetDir, bk, tracked, seqCol, opCol, effDateCol,
+      batchId, eventTime = true, nBuckets = Some(nBuckets))
 
   /** Streaming form of [[scd2CdcEventTimeBatch]]. */
   def scd2CdcEventTimeSink(stream: DataFrame, targetDir: String,
       checkpointDir: String, bk: Seq[String], tracked: Seq[String],
-      seqCol: String, opCol: String, effDateCol: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        scd2CdcEventTimeBatch(b.toDF(), targetDir, bk, tracked, seqCol,
-          opCol, effDateCol, id))
-      .start()
+      seqCol: String, opCol: String, effDateCol: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(scd2CdcEventTimeBatch(_,
+      targetDir, bk, tracked, seqCol, opCol, effDateCol, _))
 
-  /** Streaming form of [[scd2CdcBatchPartitioned]]. */
-  def scd2CdcSinkPartitioned(stream: DataFrame, targetDir: String,
-      checkpointDir: String, bk: Seq[String], tracked: Seq[String],
-      seqCol: String, opCol: String, effDateCol: String, nBuckets: Int):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        scd2CdcBatchPartitioned(b.toDF(), targetDir, bk, tracked, seqCol,
-          opCol, effDateCol, id, nBuckets))
-      .start()
-
-  /** Streaming CDC/SCD2 sink: a change stream maintains an SCD2
-    * dimension exactly-once (see [[scd2CdcBatch]]). */
+  /** Streaming form of [[scd2CdcBatch]]. */
   def scd2CdcSink(stream: DataFrame, targetDir: String,
       checkpointDir: String, bk: Seq[String], tracked: Seq[String],
-      seqCol: String, opCol: String, effDateCol: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        scd2CdcBatch(b.toDF(), targetDir, bk, tracked, seqCol, opCol,
-          effDateCol, id))
-      .start()
+      seqCol: String, opCol: String, effDateCol: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(scd2CdcBatch(_, targetDir, bk,
+      tracked, seqCol, opCol, effDateCol, _))
 
   /** One micro-batch of incremental sequence packing
     * ([[graft.ext.Curation.packSequences]] under streaming): packs
-    * `batch`'s documents CONTINUING each stratum's token stream from
-    * what the manifest table at `targetDir` already holds (per-stratum
-    * `start_offset` = sum of packed tokens, an offset-table-sized
-    * aggregate), merges the boundary partial sequence ADDITIVELY (the
-    * stratum's open last sequence gains the new batch's docs/tokens),
-    * and lands via [[upsertBatch]]'s crash-safe swap keyed on
-    * (stratum, seq_id). Exactly-once on top of foreachBatch's
-    * at-least-once: a replayed batch is detected by the committed
-    * `version` watermark (the swap is atomic-with-roll-forward, so a
-    * batch is either fully visible or not at all) and skipped.
+    * `batch`'s documents CONTINUING each stratum's token stream from the
+    * manifest table at `targetDir` (per-stratum `start_offset` = sum of
+    * packed tokens), folds each stratum's open boundary sequence in
+    * ADDITIVELY, and upserts keyed on (stratum, seq_id). Rows are stamped
+    * with `version`, the replay guard: the fold is not idempotent.
     *
     * Arrival order IS pack order — streams must deliver documents in
     * `idCol` order for the manifests to reconcile with one batch
@@ -665,52 +474,36 @@ object Streams {
     * assignment, like any order-sensitive streaming fold. */
   def packBatchIncremental(batch: DataFrame, tokenCol: String, idCol: String,
       seqLen: Int, partitionCols: Seq[String], targetDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old =
-      if (!fs.exists(target)) None
-      else {
-        graft.ops.Compaction.recoverSwap(fs, target)
-        Some(spark.read.parquet(targetDir))
-      }
-    // replay guard: versions are the source's monotone batch ids. The
-    // max is read null-safely: an EXISTING but EMPTY manifest table (a
-    // first micro-batch of only zero-token docs packs no sequences)
-    // yields max(version) = NULL, which means "no committed batch", not
-    // a crash-loop NPE on every restart of the replayed batch.
-    val committed = old.flatMap(o =>
-      Option(o.agg(max("version")).head().getAs[java.lang.Long](0))
-        .map(_.longValue))
-    if (committed.exists(_ >= batchId)) return
-    val offsets = old.map { o =>
-      if (partitionCols.isEmpty)
-        o.agg(sum("n_tokens").cast("long").as("start_offset"))
-      else o.groupBy(partitionCols.map(col): _*)
-        .agg(sum("n_tokens").cast("long").as("start_offset"))
+      batchId: Long): Unit =
+    commitBatch(batch.sparkSession, targetDir, Stamp("version", batchId)) {
+      old =>
+        val offsets = old.map { o =>
+          if (partitionCols.isEmpty)
+            o.agg(sum("n_tokens").cast("long").as("start_offset"))
+          else o.groupBy(partitionCols.map(col): _*)
+            .agg(sum("n_tokens").cast("long").as("start_offset"))
+        }
+        val key = partitionCols :+ "seq_id"
+        val packed = graft.ext.Curation.packSequences(batch, tokenCol, idCol,
+          seqLen, partitionCols, startOffsets = offsets)
+        val combined = old match {
+          case None => packed
+          case Some(o) =>
+            // only each stratum's open boundary sequence can collide; fold
+            // it in additively so the upsert stays one-row-per-key
+            val boundary = o.select((key ++ Seq("n_docs", "n_tokens",
+              "first_doc", "last_doc")).map(col): _*)
+              .join(packed.select(key.map(col): _*), key, "left_semi")
+            packed.unionByName(boundary)
+              .groupBy(key.map(col): _*)
+              .agg(sum("n_docs").as("n_docs"),
+                sum("n_tokens").as("n_tokens"),
+                min("first_doc").as("first_doc"),
+                max("last_doc").as("last_doc"))
+        }
+        Some(upsertInto(old,
+          combined.withColumn("version", lit(batchId)).localCheckpoint(), key))
     }
-    val key = partitionCols :+ "seq_id"
-    val packed = graft.ext.Curation.packSequences(batch, tokenCol, idCol,
-      seqLen, partitionCols, startOffsets = offsets)
-    val combined = old match {
-      case None => packed
-      case Some(o) =>
-        // only each stratum's open boundary sequence can collide; fold it
-        // in additively so upsert's key replacement stays one-row-per-key
-        val boundary = o.select((key ++ Seq("n_docs", "n_tokens",
-          "first_doc", "last_doc")).map(col): _*)
-          .join(packed.select(key.map(col): _*), key, "left_semi")
-        packed.unionByName(boundary)
-          .groupBy(key.map(col): _*)
-          .agg(sum("n_docs").as("n_docs"),
-            sum("n_tokens").as("n_tokens"),
-            min("first_doc").as("first_doc"),
-            max("last_doc").as("last_doc"))
-    }
-    upsertBatch(combined.withColumn("version", lit(batchId)),
-      targetDir, key, "version")
-  }
 
   /** Streaming sequence packing: encode upstream however the pipeline
     * likes (e.g. [[graft.ext.Bpe.encode]] — a stateless projection that
@@ -718,15 +511,9 @@ object Streams {
     * [[packBatchIncremental]] into an exactly-once manifest table. */
   def packingSink(stream: DataFrame, targetDir: String, checkpointDir: String,
       tokenCol: String, idCol: String, seqLen: Int,
-      partitionCols: Seq[String]):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        packBatchIncremental(b.toDF(), tokenCol, idCol, seqLen,
-          partitionCols, targetDir, id))
-      .start()
+      partitionCols: Seq[String]): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(packBatchIncremental(_, tokenCol,
+      idCol, seqLen, partitionCols, targetDir, _))
 
   /** One micro-batch of streaming near-dup cluster maintenance: the
     * batch's documents join the corpus as they arrive, with BOTH dedup
@@ -739,98 +526,76 @@ object Streams {
     * index, new×new pairs via the batch-internal LSH pass, then
     * [[graft.ext.Dedup.contractedMerge]] — components run on the
     * BATCH-GRAIN contracted graph, and the cluster table receives only
-    * the DELTA (relabeled old rows via one broadcast inner join + the
-    * batch's rows), so per-batch write volume is touched-rows-sized,
-    * not corpus-sized.
+    * the DELTA (relabeled old rows + the batch's rows), so per-batch
+    * write volume is touched-rows-sized, not corpus-sized.
     *
-    * Exactly-once across BOTH tables on top of foreachBatch's
-    * at-least-once: the cluster table's committed `version` watermark
-    * guards replay, and the index is written FIRST with a latest-wins
-    * upsert keyed on `idCol` — so a crash between the two writes
-    * replays into an idempotent index re-upsert, and pair generation
-    * against an index already containing the batch's own signatures
-    * yields the same merged labels (the extra new×new collisions it
-    * surfaces are edges the within-batch pass already found). */
+    * Exactly-once across BOTH tables: the cluster table's `version` stamp
+    * guards replay, and the index commits FIRST, nested inside the
+    * cluster-table commit, as an idempotent latest-wins upsert — so a
+    * crash between the two swaps replays into an index re-upsert, and
+    * pairs generated against an index already holding the batch's own
+    * signatures merge to the same labels. */
   def clusterBatchIncremental(batch: DataFrame, textCol: String,
       idCol: String, indexDir: String, clustersDir: String,
       threshold: Double, batchId: Long): Unit = {
     import graft.ext.Dedup
     val spark = batch.sparkSession
-    def tableIfExists(dir: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
+    commitBatch(spark, clustersDir, Stamp("version", batchId)) { clusters =>
+      // an at-least-once SOURCE can re-deliver a doc in a DIFFERENT batch
+      // (the version stamp only covers same-batch replay): ids already
+      // clustered are dropped — one corpus scan against the broadcast
+      // batch, then a batch-grain anti join. Membership is tested against
+      // the CLUSTERS table, not the index: after a crash between the two
+      // swaps a doc can be index-present but cluster-absent, and an
+      // index-keyed guard would drop it forever. The checkpoint pins the
+      // filtered batch so the passes below scan the corpus once.
+      val b = (clusters match {
+        case None => batch
+        case Some(c) =>
+          val known = c.join(broadcast(batch.select(col(idCol).as("id"))),
+            Seq("id"), "left_semi").select(col("id").as(idCol))
+          batch.join(broadcast(known), Seq(idCol), "left_anti")
+      }).localCheckpoint()
+      if (b.isEmpty) None // every doc is already clustered
       else {
-        graft.ops.Compaction.recoverSwap(fs, p)
-        Some(spark.read.parquet(dir))
+        val existing = clusters
+          .map(_.select(col("id"), col("cluster_id")))
+          .getOrElse(spark.createDataFrame(new java.util.ArrayList[Row](),
+            StructType(Seq(StructField("id", batch.schema(idCol).dataType),
+              StructField("cluster_id", batch.schema(idCol).dataType)))))
+        var merged: DataFrame = null // labels, computed under the index lease
+        commitBatch(spark, indexDir, NoGuard) { stored =>
+          val within = Dedup.nearDupPairs(b, textCol, idCol)
+            .filter(col("jaccard") >= threshold).select("a_id", "b_id")
+          val pairs = stored match {
+            case None => within
+            case Some(i) =>
+              Dedup.incrementalNearDupPairs(b, textCol, idCol, i.drop("version"))
+                .filter(col("jaccard") >= threshold)
+                .select(col("new_id").as("a_id"), col("old_id").as("b_id"))
+                .unionByName(within)
+          }
+          // contractedMerge materializes the pair plan eagerly, so the old
+          // index files it read are no longer referenced after the swap
+          merged = Dedup.contractedMerge(existing, pairs, "a_id", "b_id",
+            maxIter = 50)
+          Some(upsertInto(stored, latestPerKey(Dedup.signatureIndex(b,
+            textCol, idCol).withColumn("version", lit(batchId)),
+            Seq(idCol), "version").localCheckpoint(), Seq(idCol)))
+        }
+        val changedOld = existing
+          .join(broadcast(merged.select(col("id").as("cluster_id"),
+            col("cluster_id").as("__m"))), Seq("cluster_id"))
+          .select(col("id"), col("__m").as("cluster_id"))
+        val fresh = b.select(col(idCol).as("id"))
+          .join(broadcast(merged.select(col("id"),
+            col("cluster_id").as("__m"))), Seq("id"), "left")
+          .select(col("id"), coalesce(col("__m"), col("id")).as("cluster_id"))
+        Some(upsertInto(clusters, latestPerKey(changedOld.unionByName(fresh)
+          .withColumn("version", lit(batchId)), Seq("id"), "version")
+          .localCheckpoint(), Seq("id")))
       }
     }
-    val clusters = tableIfExists(clustersDir)
-    val committed = clusters.flatMap(c =>
-      Option(c.agg(max("version")).head().getAs[java.lang.Long](0))
-        .map(_.longValue))
-    if (committed.exists(_ >= batchId)) return
-    val idx = tableIfExists(indexDir).map(_.drop("version"))
-    // an at-least-once SOURCE can re-deliver a doc in a DIFFERENT batch
-    // (the version watermark only covers same-batch replay): ids already
-    // ingested are dropped — one corpus scan against the broadcast batch,
-    // then a batch-grain anti join. Membership is tested against the
-    // CLUSTERS table, not the index: the index is written first, so
-    // after a crash between the two writes a doc can be index-present
-    // but cluster-absent — an index-keyed guard would drop it forever,
-    // while the clusters-keyed guard lets the replay finish its cluster
-    // rows (the index re-upsert is idempotent, and pairs generated
-    // against an index already holding the batch's own signatures merge
-    // to the same labels). The checkpoint pins the filtered batch so the
-    // passes below scan the corpus once for the guard.
-    val b = (clusters match {
-      case None => batch
-      case Some(c) =>
-        val known = c.join(broadcast(batch.select(col(idCol).as("id"))),
-          Seq("id"), "left_semi").select(col("id").as(idCol))
-        batch.join(broadcast(known), Seq(idCol), "left_anti")
-    }).localCheckpoint()
-    val within = Dedup.nearDupPairs(b, textCol, idCol)
-      .filter(col("jaccard") >= threshold).select("a_id", "b_id")
-    val pairs = idx match {
-      case None => within
-      case Some(i) =>
-        Dedup.incrementalNearDupPairs(b, textCol, idCol, i)
-          .filter(col("jaccard") >= threshold)
-          .select(col("new_id").as("a_id"), col("old_id").as("b_id"))
-          .unionByName(within)
-    }
-    val existing = clusters
-      .map(_.select(col("id"), col("cluster_id")))
-      .getOrElse(batch.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            batch.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("cluster_id",
-            batch.schema(idCol).dataType)))))
-    val merged = Dedup.contractedMerge(existing, pairs, "a_id", "b_id",
-      maxIter = 50)
-    // index write sits AFTER the merge (contractedMerge materializes the
-    // pair plan eagerly, so the old index files it read are no longer
-    // referenced once the upsert swaps them) but BEFORE the clusters
-    // write — the crash-ordering that makes the two-table commit heal:
-    // index-present/cluster-absent replays re-upsert the index
-    // idempotently and then finish the cluster rows.
-    upsertBatch(Dedup.signatureIndex(b, textCol, idCol)
-        .withColumn("version", lit(batchId)),
-      indexDir, Seq(idCol), "version")
-    val changedOld = existing
-      .join(broadcast(merged.select(col("id").as("cluster_id"),
-        col("cluster_id").as("__m"))), Seq("cluster_id"))
-      .select(col("id"), col("__m").as("cluster_id"))
-    val fresh = b.select(col(idCol).as("id"))
-      .join(broadcast(merged.select(col("id"),
-        col("cluster_id").as("__m"))), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__m"), col("id")).as("cluster_id"))
-    upsertBatch(changedOld.unionByName(fresh)
-        .withColumn("version", lit(batchId)),
-      clustersDir, Seq("id"), "version")
   }
 
   /** Streaming dedup-cluster sink: every micro-batch of documents folds
@@ -840,15 +605,9 @@ object Streams {
     * documents seen so far (StreamsSpec proves that parity). */
   def dedupClusterSink(stream: DataFrame, textCol: String, idCol: String,
       indexDir: String, clustersDir: String, checkpointDir: String,
-      threshold: Double = 0.8):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        clusterBatchIncremental(b.toDF(), textCol, idCol, indexDir,
-          clustersDir, threshold, id))
-      .start()
+      threshold: Double = 0.8): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir)(clusterBatchIncremental(_,
+      textCol, idCol, indexDir, clustersDir, threshold, _))
 
   /** LEFT-OUTER watermarked interval join — the common enrichment shape
     * (every click, with its conversion if one arrived within the bound):

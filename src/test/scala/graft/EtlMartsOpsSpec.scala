@@ -488,6 +488,42 @@ class EtlMartsOpsSpec extends SparkSpec {
     fs.delete(new HPath(tgt, "._graft_swap_lease"), false)
   }
 
+  test("swap lease: a release while the heartbeat is mid-rewrite leaves " +
+      "no orphan lease; the next writer acquires at once") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val base = java.nio.file.Files.createTempDirectory("graft-lease-release")
+    val tgt = new HPath(new java.io.File(base.toFile, "table").toString)
+    val raw = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    raw.mkdirs(tgt)
+    // a store whose lease rewrite is slow: the heartbeat's
+    // create(lease, overwrite = true) has truncated the file when it
+    // signals, and the body ends inside that window
+    val inRewrite = new java.util.concurrent.CountDownLatch(1)
+    val slow = new org.apache.hadoop.fs.FilterFileSystem(raw) {
+      override def create(f: HPath,
+          permission: org.apache.hadoop.fs.permission.FsPermission,
+          overwrite: Boolean, bufferSize: Int, replication: Short,
+          blockSize: Long, progress: org.apache.hadoop.util.Progressable):
+          org.apache.hadoop.fs.FSDataOutputStream = {
+        val out = super.create(f, permission, overwrite, bufferSize,
+          replication, blockSize, progress)
+        if (overwrite && f.getName == "._graft_swap_lease") {
+          inRewrite.countDown()
+          Thread.sleep(400)
+        }
+        out
+      }
+    }
+    val ttl = 800L
+    Compaction.withSwapLease(slow, tgt, ttl) {
+      assert(inRewrite.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    assert(!raw.exists(new HPath(tgt, "._graft_swap_lease")),
+      "the release left a lease behind")
+    Compaction.acquireSwapLease(raw, tgt, ttl)
+    raw.delete(new HPath(tgt, "._graft_swap_lease"), false)
+  }
+
   test("a swap crashed past its commit point rolls forward on recovery") {
     import org.apache.hadoop.fs.{Path => HPath}
     val base = java.nio.file.Files.createTempDirectory("graft-swap-rec")

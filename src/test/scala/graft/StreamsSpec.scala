@@ -140,6 +140,59 @@ class StreamsSpec extends SparkSpec {
     assert(spark.read.parquet(target).count() == 2)
   }
 
+  /** One batch of every entry point of the sink commit protocol: its
+    * name, the table directories it writes under a base directory (the
+    * first is the leased target), and a run landing one batch there. */
+  private case class SinkCase(name: String, tables: Seq[String],
+      run: java.nio.file.Path => Unit)
+
+  private def sinkCases: Seq[SinkCase] = {
+    def at(base: java.nio.file.Path) = base.resolve("t").toString
+    val changes = Seq((1L, "one", "A", 1L, "I", "2024-01-01"))
+      .toDF("k", "name", "seg", "seq", "op", "change_date")
+    val packDocs = Seq((3L, "en", 5), (4L, "en", 7)).toDF("doc_id", "lang", "n")
+    val textDocs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy dog"),
+      (3L, "an entirely different sentence about warehouses"))
+      .toDF("doc_id", "text")
+    Seq(
+      SinkCase("upsertBatch", Seq("t"), b => Streams.upsertBatch(
+        Seq((1L, 1L, "a")).toDF("k", "ver", "v"), at(b), Seq("k"), "ver")),
+      SinkCase("scd2CdcBatch", Seq("t"), b => Streams.scd2CdcBatch(changes,
+        at(b), Seq("k"), Seq("seg"), "seq", "op", "change_date", 0L)),
+      SinkCase("scd2CdcBatchPartitioned", Seq("t"), b =>
+        Streams.scd2CdcBatchPartitioned(changes, at(b), Seq("k"), Seq("seg"),
+          "seq", "op", "change_date", 0L, 4)),
+      SinkCase("scd2CdcEventTimeBatch", Seq("t"), b =>
+        Streams.scd2CdcEventTimeBatch(changes, at(b), Seq("k"), Seq("seg"),
+          "seq", "op", "change_date", 0L)),
+      SinkCase("scd2CdcEventTimeBatchPartitioned", Seq("t"), b =>
+        Streams.scd2CdcEventTimeBatchPartitioned(changes, at(b), Seq("k"),
+          Seq("seg"), "seq", "op", "change_date", 0L, 4)),
+      SinkCase("packBatchIncremental", Seq("t"), b =>
+        Streams.packBatchIncremental(packDocs, "n", "doc_id", 8, Seq("lang"),
+          at(b), 0L)),
+      SinkCase("clusterBatchIncremental", Seq("clusters", "index"), b =>
+        Streams.clusterBatchIncremental(textDocs, "text", "doc_id",
+          b.resolve("index").toString, b.resolve("clusters").toString, 0.8,
+          0L)))
+  }
+
+  test("an empty table directory reads as 'no table': every batch entry " +
+      "point seeds a pre-created empty target") {
+    sinkCases.foreach { c =>
+      val base = java.nio.file.Files.createTempDirectory("graft-sink-empty")
+      // the state a crashed seed leaves: mkdirs ran, the write did not
+      c.tables.foreach(t =>
+        java.nio.file.Files.createDirectories(base.resolve(t)))
+      c.run(base)
+      c.tables.foreach { t =>
+        assert(spark.read.parquet(base.resolve(t).toString).count() > 0,
+          s"${c.name}: $t")
+      }
+    }
+  }
+
   test("the SEED write is lease-protected too: a concurrent writer on a " +
       "brand-new table fails fast instead of racing ErrorIfExists") {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -174,6 +227,23 @@ class StreamsSpec extends SparkSpec {
     Streams.scd2CdcBatch(changes, dim.toString, Seq("k"), Seq("seg"),
       "seq", "op", "change_date", batchId = 0L)
     assert(spark.read.parquet(dim.toString).count() == 1)
+    // the same contract on every batch entry point: a foreign lease on
+    // the target fails the batch fast, and nothing is written anywhere
+    sinkCases.foreach { c =>
+      val b = java.nio.file.Files.createTempDirectory("graft-seed-lease-all")
+      val t = new HPath(b.resolve(c.tables.head).toString)
+      fs.mkdirs(t)
+      graft.ops.Compaction.acquireSwapLease(fs, t)
+      val e = intercept[java.io.IOException](c.run(b))
+      assert(e.getMessage.contains("held by another writer"),
+        s"${c.name}: ${e.getMessage}")
+      assert(b.toFile.list().toSeq == Seq(c.tables.head), c.name)
+      assert(new java.io.File(t.toString).list().toSeq ==
+        Seq("._graft_swap_lease"), c.name)
+      fs.delete(new HPath(t, "._graft_swap_lease"), false)
+      c.run(b) // writer gone: the seed lands
+      assert(spark.read.parquet(t.toString).count() > 0, c.name)
+    }
   }
 
   test("stream-static enrichment matches the batch broadcast join") {
