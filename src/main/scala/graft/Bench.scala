@@ -4,9 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
-  * A warmup pass at sf0.001 first populates codegen caches, parquet
+  * A warmup pass at sf0.001 first populates the codegen cache, parquet
   * footers and JIT so the timed pass measures steady-state query cost,
-  * not JVM startup. Queries run in sorted name order (deterministic).
+  * not JVM startup. The codegen half of that holds because
+  * [[graft.core.GraftSession]] sizes Spark's generated-class cache above
+  * the suite's ~1.5k-class working set (Spark's 100-entry default evicted
+  * every class before its timed use); the warm-up and timed-pass compile
+  * counts go to stderr so a regression is visible. Queries run in sorted
+  * name order (deterministic).
   *
   * Robustness: (a) a query that throws is listed in an "errors" array in
   * the JSON (its elapsed time still recorded) so a crash is never
@@ -33,11 +38,17 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => nameFilter.forall(_.contains(n)))
     val errors = scala.collection.mutable.LinkedHashSet[String]()
+    // Janino compiles so far (each one is a codegen-cache miss)
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // warmup (not timed): same plans at the smallest scale factor
+    val warmupStart = compiles()
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
     }
+    val warmupCompiles = compiles() - warmupStart
+    var timedCompiles, timedRuns = 0L
     spark.sharedState.cacheManager.clearCache()
     def timed(name: String): Double = {
       // measurement isolation: a finished query can leave localCheckpoint
@@ -53,10 +64,14 @@ object Bench {
       // before the timed region starts; the wait is outside the timer.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
+      val c0 = compiles()
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).count(); errors -= name }
       catch { case _: Throwable => errors += name }
-      (System.nanoTime() - t0) / 1e9
+      val sec = (System.nanoTime() - t0) / 1e9
+      timedCompiles += compiles() - c0
+      timedRuns += 1
+      sec
     }
     // Host-speed calibration (r12 protocol, pinned r13): a fixed
     // synthetic probe — 50M-row hash scan over 8 input partitions and a
@@ -131,6 +146,8 @@ object Bench {
         }
       }
     }
+    System.err.println(s"[bench] codegen compiles: warm-up pass $warmupCompiles, " +
+      s"timed passes $timedCompiles over $timedRuns timed runs")
     // seconds formatted to 6 decimals (µs precision — far below host
     // noise): r17's round-over-round diff was lost because the capture
     // kept only a ~4 KB tail and the full-precision JSON didn't fit; a

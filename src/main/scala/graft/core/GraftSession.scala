@@ -29,6 +29,26 @@ import org.apache.spark.sql.SparkSession
   * from there.
   */
 object GraftSession {
+  /** Size of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
+    * a static conf, default 100). The cache is an LRU keyed by generated
+    * source, so a class is reused only if it survives until its next use.
+    * Measured working sets (4-core host, Janino compiles counted through
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`): one round of the nine
+    * perfbench `mart_reads` queries generates ~230 distinct classes,
+    * `warehouse_load` ~225 and `curation` ~135, the full 150-query suite
+    * at sf0.001 ~1.5k. At 100 entries every class was evicted before its
+    * next use: a second round of the mart queries recompiled 215 classes,
+    * and now 0 (with `useIdInClassName` below). `graft.Bench` at sf0.1:
+    * the warm-up pass compiles 1207 classes and the 475 timed runs 72;
+    * peak metaspace 192 → 203 MB. 4000 leaves >2.5x headroom; a full
+    * cache holds metaspace at ~210 MB vs ~185 MB at 100 entries
+    * (docs/SCALING.md §"Session / conf").
+    *
+    * Spark sizes the cache ONCE per JVM, from `SQLConf.get` at the first
+    * compile: a session built outside this factory that compiles first
+    * brings back the 100-entry default for the life of the JVM. */
+  val CodegenCacheEntries = 4000
+
   /** Shuffle partitions for a given core count (1x, see scaladoc);
     * SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for sizing experiments. */
   def shufflePartitionsFor(cores: Int): Int =
@@ -84,6 +104,11 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // AQE numbers a query's codegen stages in materialization order,
+      // which varies run to run; with the id in the class name the same
+      // stage's source (the cache key) changed with it and recompiled
+      .config("spark.sql.codegen.useIdInClassName", "false")
     // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs applied LAST, for
     // conf A/B sweeps (dev) and per-deployment tuning (prod) without a
     // code change. Loud on stderr so a leftover exported experiment var

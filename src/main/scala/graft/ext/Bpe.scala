@@ -233,13 +233,16 @@ object Bpe {
     * Scale shape (100 TB): ONE corpus-sized shuffle (word count), one
     * bounded driver fetch — `maxVocabWords` is the explicit budget, and
     * the count is checked BEFORE collecting so an unexpectedly diverse
-    * corpus fails loudly instead of OOMing the driver (fall back to
-    * [[train]], or pre-filter the corpus). The loop itself is
-    * O(total symbols) amortized per merge via incremental pair-count
-    * maintenance + a lazy-deletion heap: a 32k–100k vocab trains in
-    * driver seconds with ZERO per-merge Spark jobs, vs [[train]]'s
-    * one-job-per-round (measured ~0.2 s/round floor — hours at 100k
-    * rounds; docs/SCALING.md has the table).
+    * corpus never OOMs the driver. Over budget at floor 1 it returns
+    * the distributed [[train]]'s merges instead (result-identical, one
+    * job per round). With `minWordFreq > 1` it fails loudly instead:
+    * [[train]] has no word floor, so falling back would silently return
+    * the unfloored merges.
+    * The loop itself is O(total symbols) amortized per merge via
+    * incremental pair-count maintenance + a lazy-deletion heap: a
+    * 32k–100k vocab trains in driver seconds with ZERO per-merge Spark
+    * jobs, vs [[train]]'s one-job-per-round (measured ~0.2 s/round
+    * floor — hours at 100k rounds; docs/SCALING.md has the table).
     *
     * `minWordFreq` is the raw-web-crawl valve: a 100 TB crawl's
     * distinct-word count (URLs, typos, numbers, hashes) blows past any
@@ -259,19 +262,28 @@ object Bpe {
     require(minWordFreq >= 1L, "minWordFreq must be >= 1")
     // floor applied pre-collect, distributed — the whole point: the
     // driver never sees (nor counts against its budget) sub-floor words.
-    // Checkpointed (r18): the budget-guard count and the collect are two
-    // actions — lazy, each would run the corpus word-count shuffle.
+    // Persisted (r18): the budget-guard count and the collect are two
+    // actions — lazy, each would run the corpus word-count shuffle. Freed
+    // before training, so an over-budget vocab does not hold storage
+    // memory through the fallback's per-round jobs.
     val words = vocab(df, textCol).filter(col("freq") >= minWordFreq)
-      .localCheckpoint()
-    val n = words.count()
-    require(n <= maxVocabWords,
-      s"distinct-word vocabulary ($n, at minWordFreq=$minWordFreq) " +
-        s"exceeds the driver budget ($maxVocabWords): raise " +
-        "maxVocabWords or minWordFreq, pre-filter the corpus, or use " +
-        "the distributed train()")
-    val rows = words.collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    trainOnVocab(rows, numMerges)
+      .persist()
+    val (n, rows) =
+      try {
+        val n = words.count()
+        (n, if (n > maxVocabWords) None
+            else Some(words.collect().map(r => (r.getString(0), r.getLong(1)))))
+      } finally words.unpersist()
+    rows match {
+      case Some(v) => trainOnVocab(v, numMerges)
+      case None =>
+        require(minWordFreq == 1L,
+          s"distinct-word vocabulary ($n, at minWordFreq=$minWordFreq) " +
+            s"exceeds the driver budget ($maxVocabWords), and the " +
+            "distributed train() has no word floor: raise maxVocabWords " +
+            "or minWordFreq, or pre-filter the corpus")
+        train(df, textCol, numMerges)
+    }
   }
 
   /** The in-memory merge loop of [[trainLocal]] (exposed for the spec):

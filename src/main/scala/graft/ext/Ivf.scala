@@ -76,6 +76,7 @@ object Ivf {
     // driver-blocking job per training for a value the sample already
     // carries (r19; dims are uniform by the operator's contract)
     val dim = centroids.headOption.map(_.size).getOrElse(0)
+    require(dim > 0, s"cannot train IVF on an empty corpus or embeddings (dim $dim)")
     (1 to iters).foreach { _ =>
       // cell assignment in a PROJECTION BELOW the Generate, exploded in a
       // second select — evaluated once per row (Generate only forwards

@@ -248,11 +248,22 @@ class BpeSpec extends SparkSpec {
 
   test("trainLocal: the maxVocabWords driver budget fails loudly before " +
       "collecting") {
-    val docs = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
+    // with a word floor: six words at frequency 2 pass it and exceed the
+    // budget, and the unfloored train() fallback (the floor-1 case, next
+    // test) would change the merges, so it fails instead
+    val docs = Seq((1L, "a b c d e f a b c d e f")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      Bpe.trainLocal(docs, "text", 4, maxVocabWords = 3)
+      Bpe.trainLocal(docs, "text", 4, maxVocabWords = 3, minWordFreq = 2L)
     }
     assert(e.getMessage.contains("driver budget"))
+  }
+
+  test("trainLocal: over the driver budget it returns the distributed " +
+      "train()'s merges instead of failing") {
+    val docs = graft.core.Tables.load(spark, sf001, "documents")
+      .select("doc_id", "text")
+    assert(Bpe.trainLocal(docs, "text", 64, maxVocabWords = 0) ==
+      Bpe.trainLocal(docs, "text", 64))
   }
 
   test("trainLocal minWordFreq: floor=1 ≡ no floor on the gate corpus; " +
@@ -265,13 +276,13 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.trainLocal(docs, "text", 128, minWordFreq = 1L) ==
       Bpe.trainLocal(docs, "text", 128))
     // a raw-crawl-shaped corpus: 3 head words carry the mass, a long
-    // tail of singleton "URLs" blows a tiny driver budget…
+    // tail of singleton "URLs" blows a tiny driver budget (unfloored,
+    // trainLocal falls back to the distributed train())…
     val tail = (1 to 200).map(i => s"httpx${i}zz").mkString(" ")
     val crawl = Seq((1L, ("the quick fox " * 50) + tail))
       .toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Bpe.trainLocal(crawl, "text", 4, maxVocabWords = 10)
-    }
+    assert(Bpe.trainLocal(crawl, "text", 4, maxVocabWords = 10) ==
+      Bpe.train(crawl, "text", 4))
     // …but a freq floor of 2 collapses the tail INSIDE the distributed
     // count, so the same budget passes and merges are learned from the
     // head words only

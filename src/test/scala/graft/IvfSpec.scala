@@ -112,4 +112,12 @@ class IvfSpec extends SparkSpec {
       .select("vec_id").as[Long].collect()
     assert(got.contains(3L)) // the query vector itself, cosine 1
   }
+
+  test("training on an empty corpus fails fast instead of building " +
+      "zero-dimensional centroids") {
+    val e = intercept[IllegalArgumentException] {
+      Ivf.train(corpus.limit(0), "embedding", "vec_id", k = 4, iters = 1)
+    }
+    assert(e.getMessage.contains("empty corpus"))
+  }
 }

@@ -37,4 +37,26 @@ class QueriesSpec extends SparkSpec {
     val b = graft.queries.Relational.coocBitmapForce(spark, sf001).collect()
     assert(a.nonEmpty && a.toSeq == b.toSeq)
   }
+
+  test("the codegen cache holds a round of the mart_reads queries: a second " +
+      "round compiles (almost) no new classes") {
+    // Spark sizes its generated-class cache once per JVM from SQLConf.get
+    // at the first compile; a session built outside GraftSession that
+    // compiled first would leave the 100-entry default in force, and
+    // every mart round (~230 classes) would recompile all of it
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      graft.core.GraftSession.CodegenCacheEntries.toString)
+    // the nine queries of the benchmark's mart_reads workload
+    val marts = Seq("mart_dashboard", "mart_entreprises", "mart_logement",
+      "sec_rls_visibility", "sec_rbac_scope", "sec_connexion_history",
+      "sec_active_sessions", "j_star_join", "w_latest_per_key")
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def round(): Unit = marts.foreach(SparkEntry.queries(_)(spark, sf001).collect())
+    round()
+    val before = compiles()
+    round()
+    val second = compiles() - before
+    assert(second <= 20, s"a second mart round compiled $second classes")
+  }
 }
