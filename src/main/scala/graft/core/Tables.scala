@@ -1,6 +1,15 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
 
 /** Test-data table access for the driver's TPC-H-ish star schema
   * (`/root/repo/TESTDATA.md`). One parquet file per table under a
@@ -56,8 +65,64 @@ object Tables {
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(path(sfDir, name))
+    val df = readParquet(spark, Seq(path(sfDir, name)))
     if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** `spark.read.options(options).parquet(paths: _*)` without Spark's
+    * schema-inference job. Without `mergeSchema`, Spark infers a parquet
+    * schema from ONE footer, the first data file by path, but reads it in
+    * a one-task job (`SchemaMergeUtils.mergeSchemasInParallel`): tens of
+    * milliseconds of scheduling per table load, several per short query.
+    * Here the driver reads that same footer and converts it with the same
+    * function, under the session's conf, then hands Spark the schema.
+    * The scan, partition discovery and the resulting plan are Spark's.
+    *
+    * Spark's own inference runs instead when `mergeSchema` is on (option
+    * or session conf), when no data file is found (a missing path or an
+    * empty directory keeps Spark's error), or when the footer cannot be
+    * read (a corrupt file keeps Spark's error and `ignoreCorruptFiles`).
+    * Parquet summary files (`_metadata`, `_common_metadata`), which Spark
+    * would prefer, are not consulted; Spark 4 does not write them. */
+  def readParquet(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = spark.read.options(options)
+    val conf = spark.sessionState.conf
+    val schema =
+      if (new ParquetOptions(options, conf).mergeSchema) None
+      else try {
+        val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+        paths.flatMap(firstDataFile(_, hadoopConf))
+          .minByOption(_.getPath.toString).map { f =>
+            val meta = ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(f, hadoopConf),
+              ParquetMetadataConverter.SKIP_ROW_GROUPS)
+            ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+              new ParquetToSparkSchemaConverter(conf))
+          }
+      } catch { case NonFatal(_) => None }
+    schema.fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  /** The data file Spark's schema inference would read under `path`: the
+    * smallest full path among the leaf files, skipping the names its file
+    * index skips (`_x` but not `_k=v` partition directories, `.x`,
+    * `x._COPYING_`). None for a missing path (a glob included) or no
+    * data file. Depth-first, siblings ordered by name (a directory's name
+    * with a trailing `/`, the order of its descendants' full paths), so
+    * the walk stops at the first file instead of listing the whole tree. */
+  private[graft] def firstDataFile(path: String,
+      hadoopConf: Configuration): Option[FileStatus] = {
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+      n.startsWith(".") || n.endsWith("._COPYING_")
+    val root = new HPath(path)
+    val fs = root.getFileSystem(hadoopConf)
+    def walk(st: FileStatus): Option[FileStatus] =
+      if (st.isFile) Some(st)
+      else fs.listStatus(st.getPath).filterNot(c => hidden(c.getPath.getName))
+        .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+        .iterator.map(walk).collectFirst { case Some(f) => f }
+    if (fs.exists(root)) walk(fs.getFileStatus(root)) else None
   }
 
   /** The testdata's `events.ts` parquet annotation has changed across
@@ -81,8 +146,4 @@ object Tables {
       df.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
     case _ => df
   }
-
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

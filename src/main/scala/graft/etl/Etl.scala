@@ -79,14 +79,16 @@ object Etl {
   }
 
   /** Idempotent load guard (reference skip-if-loaded,
-    * `load_facts.py:163-167`): append only when the target is absent or
-    * empty. Returns true when the write happened. */
+    * `load_facts.py:163-167`): write only when the target has no data
+    * files or reads as zero rows. Returns true when the write happened.
+    * A target that cannot be read fails the call and is left in place:
+    * unreadable is not empty. */
   def appendIfEmpty(spark: SparkSession, df: DataFrame, path: String): Boolean = {
-    val exists =
-      try spark.read.parquet(path).limit(1).count() > 0
-      catch { case _: Throwable => false }
-    if (!exists) { df.write.mode("overwrite").parquet(path); true }
-    else false
+    val loaded = graft.core.Tables.firstDataFile(path,
+        spark.sparkContext.hadoopConfiguration).isDefined &&
+      !graft.core.Tables.readParquet(spark, Seq(path)).isEmpty
+    if (!loaded) df.write.mode("overwrite").parquet(path)
+    !loaded
   }
 
   /** Computed persisted column (reference `solde_naturel AS (naissances -

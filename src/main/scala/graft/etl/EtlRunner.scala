@@ -110,10 +110,6 @@ object EtlNotifier {
       : EtlRunner.ReportSink =
     reports => { val (s, b) = format(jobName, reports); send(s, b) }
 
-  /** Print the report to stdout (the no-infrastructure default). */
-  def console(jobName: String): EtlRunner.ReportSink =
-    transport(jobName, (_, body) => println(body))
-
   /** Append the report to a parquet table — one row per stage, stamped
     * with the job name and wall-clock run time, queryable next to the
     * ops log (`EtlLog`). One tiny single-partition write per run. */

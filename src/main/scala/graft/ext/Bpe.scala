@@ -388,16 +388,6 @@ object Bpe {
     out.result()
   }
 
-  /** Learned merges as a one-row-per-merge frame (the reporting shape
-    * of `x_bpe_train`). */
-  def trainDf(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    train(df, textCol, numMerges)
-      .map(m => (m.rank, m.lhs, m.rhs, m.lhs + m.rhs, m.count))
-      .toDF("rank", "lhs", "rhs", "merged", "cnt")
-  }
-
   /** Binary (UTF-8 byte) string order — the collation BOTH engines use
     * for ORDER BY (Spark's UTF8String and DuckDB compare bytewise),
     * equal to code-point order. Scala/Java's natural `String` sort is

@@ -972,8 +972,4 @@ object Dedup {
     // Sign pattern → 64-char bit string.
     array_join(transform(acc, x => when(x > 0, "1").otherwise("0")), "")
   }
-
-  /** Hamming distance between two equal-length bit strings. */
-  def hammingDist(a: Column, b: Column): Column =
-    size(filter(zip_with(split(a, ""), split(b, ""), (x, y) => x =!= y), x => x))
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge DataFrames. The connected-
@@ -233,6 +233,7 @@ object Graph {
     val idType = withDeg.schema("__src").dataType
     val rows = withDeg
       .select(col("__src").cast("long"), col("__dst").cast("long"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
       .collect()
     // node index: every id appearing as src or dst
     val idx = new scala.collection.mutable.LongMap[Int]()
@@ -244,8 +245,8 @@ object Graph {
     val dstIdx = new Array[Int](e)
     var i = 0
     while (i < e) {
-      srcIdx(i) = indexOf(rows(i).getLong(0))
-      dstIdx(i) = indexOf(rows(i).getLong(1))
+      srcIdx(i) = indexOf(rows(i)._1)
+      dstIdx(i) = indexOf(rows(i)._2)
       i += 1
     }
     val nN = ids.size

@@ -79,16 +79,6 @@ object LangModel {
       .select(col("bigram"), col("bc"), col("c1"))
   }
 
-  /** Bigram model over the corpus: P(w2|w1) = c(w1 w2) / c(w1), both
-    * counts exact integers (so every engine derives the identical model).
-    * `minCount` drops rare bigrams from the MODEL table (the standard
-    * frequency floor that bounds model size at corpus scale); scoring
-    * treats pruned bigrams with a count floor of `minCount` so the score
-    * stays defined. */
-  def bigramModel(docs: DataFrame, textCol: String, idCol: String,
-      minCount: Long = 1L): DataFrame =
-    modelFromBigrams(docBigrams(docs, textCol, idCol), minCount)
-
   /** Score every document against the corpus bigram model: per-doc mean
     * negative log-probability of its bigram stream (cross-entropy, nats).
     * Output: (idCol, n_bigrams, cross_entropy) — docs with < 2 tokens have

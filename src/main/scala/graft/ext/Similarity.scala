@@ -268,17 +268,6 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
-  /** [[nearDupEmbeddings]] with the signature width auto-sized from the
-    * corpus count — same linear-in-n rationale as [[knnJoinAuto]]; the
-    * recall trade (near-dups split across buckets go unreported) is the
-    * standard LSH one and is recovered by unioning several independent
-    * plane sets, not by coarsening buckets. */
-  def nearDupEmbeddingsAuto(corpus: DataFrame, embCol: String, idCol: String,
-      threshold: Double, dim: Int, targetBucketSize: Int = 512): DataFrame =
-    nearDupEmbeddings(corpus, embCol, idCol, threshold,
-      bits = autoBits(graft.core.RowCounts.hint(corpus), targetBucketSize),
-      dim = dim)
-
   // ---- scalar quantization ----------------------------------------------
 
   /** Symmetric int8 scalar quantization: clamp to ±clip, map to [-127,127].

@@ -1,6 +1,8 @@
 package graft.marts
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Quality
 
@@ -19,13 +21,14 @@ import graft.ops.Quality
   * to those groups. Every reference datamart qualifies: they group by
   * (annee, departement) and never aggregate across those keys.
   *
-  * Scale shape: the digest compare collects ONLY the drifted group keys
+  * Scale shape: the digest compare is one collect of one row per group
   * (bounded by the group grain — year × department is catalog-sized,
-  * never fact-sized); the rebuild reads the drifted slice (partition-
-  * prunable when the source shares the layout) and lands via dynamic
-  * partition overwrite; groups that disappeared from the source have
-  * their partition directories dropped explicitly (dynamic overwrite
-  * only touches partitions present in the write).
+  * never fact-sized), which also becomes the next digest table; the
+  * rebuild reads the drifted slice (partition-prunable when the source
+  * shares the layout) and lands via dynamic partition overwrite; groups
+  * that disappeared from the source have their partition directories
+  * dropped explicitly (dynamic overwrite only touches partitions present
+  * in the write).
   */
 object Refresh {
 
@@ -38,11 +41,6 @@ object Refresh {
 
   private def digestPath(martDir: String) = s"$martDir/$DigestDir"
 
-  /** Incrementally refresh the materialized mart at `martDir`:
-    * digest-compare `source` per `groupCols` against the stored digest
-    * table, rebuild only drifted groups via `build`, drop vanished
-    * groups, store the new digests. First call (no digest table yet)
-    * materializes everything. */
   /** Group-key types that survive the string round-trip used by the drift
     * machinery (collect as Spark-cast string → compare/delete by that
     * string). Binary and nested types do not — fail fast instead of
@@ -62,62 +60,58 @@ object Refresh {
     }
   }
 
-  /** Collect the group-key tuples of `df` as STRINGS RENDERED BY SPARK'S
-    * OWN CAST — the one canonical form shared by the literal filter, the
-    * broadcast semi-join and the partition-directory encoding. Driver-side
-    * `String.valueOf` disagrees with the SQL cast for timestamp
-    * ("…00:00:00.0" vs "…00:00:00") and some decimal/float renderings, so
-    * keys must never be stringified outside this function. */
-  private def collectKeyStrings(df: DataFrame,
-      groupCols: Seq[String]): Seq[Map[String, String]] =
-    df.select(groupCols.map(c => col(c).cast("string").as(c)): _*)
-      .collect()
-      .map { r =>
-        groupCols.zipWithIndex.map { case (c, i) =>
-          require(!r.isNullAt(i),
-            s"NULL group key in column '$c' — null partition keys are not " +
-              "supported by the incremental refresh (reject them upstream)")
-          c -> r.getString(i)
-        }.toMap
-      }.toSeq
+  /** The group key of row `r`, whose first `groupCols.size` fields are
+    * the key columns CAST TO STRING BY SPARK'S OWN CAST: the one canonical
+    * form shared by the literal filter, the broadcast semi-join and the
+    * partition-directory encoding. Driver-side `String.valueOf` disagrees
+    * with the SQL cast for timestamp ("…00:00:00.0" vs "…00:00:00") and
+    * some decimal/float renderings, so keys must never be stringified
+    * outside Spark. */
+  private def keyOf(r: Row, groupCols: Seq[String]): Map[String, String] =
+    groupCols.zipWithIndex.map { case (c, i) =>
+      require(!r.isNullAt(i),
+        s"NULL group key in column '$c' — null partition keys are not " +
+          "supported by the incremental refresh (reject them upstream)")
+      c -> r.getString(i)
+    }.toMap
 
+  /** Incrementally refresh the materialized mart at `martDir`:
+    * digest-compare `source` per `groupCols` against the stored digest
+    * table, rebuild only drifted groups via `build`, drop vanished
+    * groups, store the new digests. First call (no digest table yet)
+    * materializes everything. */
   def refreshIncremental(spark: SparkSession, source: DataFrame,
       groupCols: Seq[String], digestCols: Seq[String],
       build: DataFrame => DataFrame, martDir: String): Report = {
     require(groupCols.nonEmpty, "need at least one partition column")
     requireRoundTrippableKeys(source, groupCols)
     val fresh = Quality.groupDigest(source, groupCols, digestCols)
-      .withColumnRenamed("digest", "__new_digest")
-      .withColumnRenamed("n_rows", "__new_rows")
     val fs = new org.apache.hadoop.fs.Path(martDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val havePrior = fs.exists(new org.apache.hadoop.fs.Path(digestPath(martDir)))
 
-    val (driftKeys, removedKeys, unchanged) =
-      if (!havePrior) {
-        // first materialization: everything drifts, nothing to remove
-        (collectKeyStrings(fresh, groupCols),
-          Seq.empty[Map[String, String]], 0L)
-      } else {
-        val stored = spark.read.parquet(digestPath(martDir))
-          .withColumnRenamed("digest", "__old_digest")
-          .withColumnRenamed("n_rows", "__old_rows")
-        // full outer: catches changed, brand-new AND vanished groups
-        val cmp = fresh.join(stored, groupCols, "full_outer").persist()
-        try {
-          def keysOf(df: DataFrame) = collectKeyStrings(df, groupCols)
-          val drift = keysOf(cmp.filter(col("__old_digest").isNull ||
-            !(col("__new_digest") === col("__old_digest") &&
-              col("__new_rows") === col("__old_rows"))))
-          val removed = keysOf(cmp.filter(col("__new_digest").isNull))
-          val same = cmp.filter(col("__new_digest") === col("__old_digest") &&
-            col("__new_rows") === col("__old_rows")).count()
-          // a vanished group has NULL new digest: it lands in `drift` via
-          // the isNull-or-different test only when old exists & new null —
-          // exclude it from the rebuild list (there is nothing to build)
-          (drift.diff(removed), removed, same)
-        } finally cmp.unpersist()
-      }
+    // ONE action at group grain: each group's fresh and stored digest
+    // (full outer: changed, brand-new AND vanished groups), with its key
+    // both as Spark-cast strings and typed. The driver holds one row per
+    // group, the bound the drift-key list has when every group drifts.
+    val stored =
+      if (havePrior) spark.read.schema(fresh.schema).parquet(digestPath(martDir))
+      else spark.createDataFrame(java.util.List.of[Row](), fresh.schema)
+    val n = groupCols.size
+    val rows = fresh.join(stored
+        .withColumnRenamed("digest", "__old_digest")
+        .withColumnRenamed("n_rows", "__old_rows"), groupCols, "full_outer")
+      .select(groupCols.map(c => col(c).cast("string")) ++ groupCols.map(col) ++
+        Seq("digest", "n_rows", "__old_digest", "__old_rows").map(col): _*)
+      .collect()
+    def inSource(r: Row) = !r.isNullAt(2 * n)
+    def same(r: Row) = inSource(r) && !r.isNullAt(2 * n + 2) &&
+      r.getLong(2 * n) == r.getLong(2 * n + 2) &&
+      r.getLong(2 * n + 1) == r.getLong(2 * n + 3)
+    val driftKeys = rows.filter(r => inSource(r) && !same(r))
+      .map(keyOf(_, groupCols)).toSeq
+    val removedKeys = rows.filterNot(inSource).map(keyOf(_, groupCols)).toSeq
+    val unchanged = rows.count(same).toLong
 
     if (!havePrior) {
       // first materialization: one full build, no per-group filter
@@ -143,11 +137,12 @@ object Refresh {
       }.mkString("/")
       fs.delete(new org.apache.hadoop.fs.Path(s"$martDir/$rel"), true)
     }
-    // store the digest table for the next refresh (hidden from readers:
-    // the underscore-prefixed dir is ignored by Spark's file index)
-    fresh
-      .withColumnRenamed("__new_digest", "digest")
-      .withColumnRenamed("__new_rows", "n_rows")
+    // store the digest table for the next refresh from the collected rows,
+    // not a second digest pass over the source (hidden from readers: the
+    // underscore-prefixed dir is ignored by Spark's file index)
+    val digests = rows.filter(inSource).map(r => Row.fromSeq(
+      (n until 2 * n + 2).map(r.get))).toSeq
+    spark.createDataFrame(digests.asJava, fresh.schema).coalesce(1)
       .write.mode("overwrite").parquet(digestPath(martDir))
     Report(driftKeys, removedKeys, unchanged)
   }

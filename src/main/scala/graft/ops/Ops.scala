@@ -751,7 +751,7 @@ object Compaction {
         val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
         if (parts.length <= want) None
         else {
-          spark.read.parquet(d.toString).coalesce(want)
+          graft.core.Tables.readParquet(spark, Seq(d.toString)).coalesce(want)
             .write.mode("overwrite").parquet(tmp.toString)
           val freshCount = fs.listStatus(tmp)
             .count(s => s.isFile && isDataFile(s.getPath))
@@ -794,10 +794,6 @@ object TableApi {
     require(limit >= 1 && limit <= cfg.maxLimit, s"limit out of range: $limit")
     spark.table(table).limit(limit)
   }
-
-  def readJson(spark: SparkSession, cfg: Config, table: String,
-      limit: Int): Seq[String] =
-    read(spark, cfg, table, limit).toJSON.collect().toSeq
 
   /** `GET /tables/summary` analogue (reference
     * `analytics/api/app/routers/tables.py:15-19` over the notebook's

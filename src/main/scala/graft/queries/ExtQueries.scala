@@ -783,7 +783,11 @@ object ExtQueries {
       // exchanges). Same grams: the U+0001-separated bigram rendering
       // maps 1:1 onto the space-joined shingle (tokens cannot contain
       // either separator), translated back after the aggregate at
-      // gram grain. (docBigrams spreads its input itself.)
+      // gram grain. (docBigrams spreads its input itself.) df is a row
+      // count per bigram, which equals the oracle's count(DISTINCT doc_id)
+      // only because `documents.doc_id` is unique: docBigrams emits one
+      // row per (doc_id, bigram), and a repeated doc_id would count twice.
+      // LangModelSpec checks that uniqueness on the test data.
       LangModel.docBigrams(docs(s, d), "text", "doc_id")
         .groupBy("bigram").agg(
           sum(col("tf")).as("cnt"),

@@ -47,7 +47,4 @@ object Fp {
 object Q {
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(sql))
-  /** Non-SQL-expressible op: driver records a weaker rows-only check. */
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
 }

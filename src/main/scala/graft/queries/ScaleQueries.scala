@@ -34,7 +34,7 @@ object ScaleQueries {
             .withColumn("annee", year(col("o_orderdate")).cast("int")),
           dir.toString, "annee")
     }
-    s.read.parquet(dir.toString)
+    Tables.readParquet(s, Seq(dir.toString))
   }
 
   val all: Seq[Q] = Seq(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{StructField, StructType}
+import graft.core.Tables
 import graft.ops.Compaction
 
 /** Structured Streaming layer. The reference is pure batch (SURVEY §2.10) —
@@ -51,7 +52,7 @@ object Streams {
   /** File-source stream over an events directory (schema locked to the
     * batch table so batch parity holds). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = spark.read.parquet(dir).schema
+    val batchSchema = Tables.readParquet(spark, Seq(dir)).schema
     val raw = spark.readStream.schema(batchSchema).parquet(dir)
     if (batchSchema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -203,12 +204,13 @@ object Streams {
         .collect().map(_.getInt(0)).sorted.toSeq)
       lazy val base = touched match {
         case None =>
-          if (hasData(target)) Some(spark.read.parquet(targetDir)) else None
+          if (hasData(target)) Some(Tables.readParquet(spark, Seq(targetDir)))
+          else None
         case Some(ts) =>
           val existing = ts.filter(b => hasData(leaf(b)))
           if (existing.isEmpty) None
-          else Some(spark.read.option("basePath", targetDir)
-            .parquet(existing.map(leaf(_).toString): _*))
+          else Some(Tables.readParquet(spark, existing.map(leaf(_).toString),
+            Map("basePath" -> targetDir)))
       }
       val committed = guard match {
         case NoGuard => false
@@ -351,7 +353,13 @@ object Streams {
       tracked: Seq[String], seqCol: String, opCol: String, effDateCol: String,
       batchId: Long, eventTime: Boolean, nBuckets: Option[Int]): Unit = {
     nBuckets.foreach(n => require(n >= 1, "nBuckets must be positive"))
-    if (batch.isEmpty) return
+    // one aggregate answers both batch probes: is it empty, and (batch-
+    // time) the range of its change dates; the dates are checked inside
+    // the merge, after the replay guard
+    val effDay = col(effDateCol).cast("date")
+    val probe = batch.agg(count(lit(1)),
+      (if (eventTime) Nil else Seq(min(effDay), max(effDay))): _*).head()
+    if (probe.getLong(0) == 0) return
     val chg = nBuckets.fold(batch)(n => batch.withColumn("bucket_id",
       pmod(xxhash64(bk.map(col): _*), lit(n.toLong)).cast("int")))
     val guard =
@@ -370,9 +378,7 @@ object Streams {
         else {
           val sink =
             if (nBuckets.isDefined) "scd2CdcBatchPartitioned" else "scd2CdcBatch"
-          val mm = batch.agg(min(col(effDateCol).cast("date")),
-            max(col(effDateCol).cast("date"))).head()
-          val (minDate, effDate) = (mm.getDate(0), mm.getDate(1))
+          val (minDate, effDate) = (probe.getDate(1), probe.getDate(2))
           require(effDate != null, s"$sink: every change row has a null " +
             s"$effDateCol — no effective date for the batch")
           require(nBuckets.isEmpty || minDate == effDate,

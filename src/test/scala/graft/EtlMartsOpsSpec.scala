@@ -67,6 +67,20 @@ class EtlMartsOpsSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 2)
   }
 
+  test("appendIfEmpty fails on an unreadable target and leaves it in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-idem-bad")
+    val bad = dir.resolve("part-00000.parquet")
+    val junk = "not a parquet file".getBytes("UTF-8")
+    java.nio.file.Files.write(bad, junk)
+    intercept[Exception](Etl.appendIfEmpty(spark, Seq(1, 2).toDF("x"),
+      dir.toString))
+    assert(java.nio.file.Files.readAllBytes(bad).sameElements(junk))
+    // a directory with no data files still counts as empty
+    val empty = java.nio.file.Files.createTempDirectory("graft-idem-empty")
+    assert(Etl.appendIfEmpty(spark, Seq(1, 2).toDF("x"), empty.toString))
+    assert(spark.read.parquet(empty.toString).count() == 2)
+  }
+
   test("demographie datamart computes guarded rates") {
     val temps = Seq((1, 2021)).toDF("temps_id", "annee")
     val geo = Seq((1, "59", "Nord", "DEPARTEMENT"), (2, "00", "Zero", "DEPARTEMENT"))
@@ -665,6 +679,42 @@ class EtlMartsOpsSpec extends SparkSpec {
       Seq("annee", "departement_code"), Seq("valeur"), build, martDir)
     assert(r3.rebuilt.isEmpty && r3.removed.isEmpty && r3.unchanged == 5)
     assert(files("annee=2024/departement_code=59") == before59)
+  }
+
+  test("incremental refresh: the stored digest table equals the source's " +
+      "groupDigest after every refresh") {
+    import graft.marts.Refresh
+    import graft.ops.Quality
+    val martDir = java.nio.file.Files.createTempDirectory("graft-digests")
+      .resolve("mart").toString
+    val groupCols = Seq("annee", "departement_code")
+    val build = (src: org.apache.spark.sql.DataFrame) =>
+      src.groupBy(groupCols.map(col): _*).agg(sum("valeur").as("total"))
+    def fact(rows: (Int, String, Double)*) =
+      rows.toDF("annee", "departement_code", "valeur")
+    def digests(df: org.apache.spark.sql.DataFrame) =
+      df.select("annee", "departement_code", "digest", "n_rows")
+        .as[(Int, String, Long, Long)].collect().toSet
+    val versions = Seq(
+      fact((2023, "59", 10.0), (2023, "62", 7.0), (2024, "59", 1.0)),
+      // a group changes, one appears
+      fact((2023, "59", 10.0), (2023, "62", 8.0), (2024, "59", 1.0),
+        (2024, "80", 2.0)),
+      // nothing changes
+      fact((2023, "59", 10.0), (2023, "62", 8.0), (2024, "59", 1.0),
+        (2024, "80", 2.0)),
+      // a group vanishes, another gains a row
+      fact((2023, "59", 10.0), (2023, "59", 3.0), (2024, "59", 1.0),
+        (2024, "80", 2.0)))
+    versions.foreach { v =>
+      Refresh.refreshIncremental(spark, v, groupCols, Seq("valeur"), build,
+        martDir)
+      assert(digests(spark.read.parquet(s"$martDir/_digests")) ==
+        digests(Quality.groupDigest(v, groupCols, Seq("valeur"))))
+      assert(spark.read.parquet(martDir).select("annee", "departement_code",
+        "total").as[(Int, String, Double)].collect().toSet ==
+        build(v).as[(Int, String, Double)].collect().toSet)
+    }
   }
 
   test("large drift sets refresh via broadcast semi-join, small via literal filter") {

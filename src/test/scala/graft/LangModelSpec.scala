@@ -16,6 +16,20 @@ class LangModelSpec extends SparkSpec {
     assert(out(3) == s"x${LangModel.Sep}y") // empty tokens filtered
   }
 
+  test("x_ngram_topk's df as a row count relies on documents.doc_id being unique") {
+    // the query counts (doc_id, bigram) rows per bigram as df; that is the
+    // oracle's count(DISTINCT doc_id) only while no doc_id repeats
+    Seq(sf001, new java.io.File(sf001).getParent + "/sf0.01").foreach { d =>
+      val r = graft.core.Tables.load(spark, d, "documents")
+        .agg(count(lit(1)), count_distinct(col("doc_id")),
+          count(col("doc_id"))).head()
+      assert(r.getLong(0) > 0, d)
+      assert(r.getLong(1) == r.getLong(0) && r.getLong(2) == r.getLong(0),
+        s"$d: ${r.getLong(0)} documents but ${r.getLong(1)} distinct " +
+          s"non-null doc_ids")
+    }
+  }
+
   test("crossEntropy matches the hand-derived bigram model") {
     // model: c(a,b)=2, c(a,c)=1, c1(a)=3 -> P(b|a)=2/3, P(c|a)=1/3
     val docs = Seq((1L, "a b"), (2L, "a b"), (3L, "a c")).toDF("doc_id", "text")

@@ -20,6 +20,25 @@ trait SparkSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Number of Spark jobs `body` starts on this thread, counted through a
+    * job group and the status tracker. The tracker's store takes job
+    * events in order, so once a sentinel job submitted after `body` shows
+    * in it, every job of `body` shows too. */
+  def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "jobsRunBy")
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(group + "-sentinel", "jobsRunBy sentinel")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(group + "-sentinel").isEmpty) {
+      assert(System.nanoTime() < deadline, "the sentinel job never showed")
+      Thread.sleep(10)
+    }
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   /** Run `body` with the given SQL confs set, restoring previous values
     * (or unsetting) afterwards — the shared session outlives each suite. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
