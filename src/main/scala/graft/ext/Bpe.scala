@@ -151,8 +151,7 @@ object Bpe {
 
   /** [[train]] plus the driver-round count (each round = one vocab-grain
     * pair-count job + one bounded fetch) — the number a production-vocab
-    * cost model needs (rounds × per-round latency; see
-    * tools.BpeTrainBench and docs/SCALING.md). */
+    * cost model needs (rounds × per-round latency; see docs/SCALING.md). */
   private[graft] def trainRounds(df: DataFrame, textCol: String,
       numMerges: Int, checkpointEvery: Int = 16,
       batchSize: Int = 64): (Seq[Merge], Int) = {
@@ -446,7 +445,7 @@ object Bpe {
     * the hash-indexed [[graft.functions.VocabLookupAll]] expression
     * (`transform` + `element_at` over a map literal LINEAR-SCANS the
     * literal per subword: measured 38 s vs flat at a 100k vocab on the
-    * same data — tools.VocabPlanProbe, docs/SCALING.md). `vocab` comes
+    * same data — docs/SCALING.md). `vocab` comes
     * from [[tokenVocab]] over the TRAINING corpus; a subword of an
     * in-vocabulary character stream cannot miss it (every subword is a
     * base character or a merged token), while a character the training

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.DriverGate
 
 /** Deduplication operators for training-data pipelines, designed for the
   * 100 TB shape of the problem:
@@ -653,22 +654,9 @@ object Dedup {
     // corpora). Larger graphs or non-integral ids fall through to the
     // distributed loop unchanged — no correctness cliff, only a
     // latency one, and the threshold is conf-tunable per deployment.
-    val integralIds = edges.schema("src").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    val localMax = {
-      val raw = pairs.sparkSession.conf
-        .get("spark.graft.cc.localMaxEdges", "1000000")
-      try raw.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.cc.localMaxEdges must be a long, got '$raw'")
-      }
-    }
+    val integralIds = DriverGate.integralIds(edges.schema("src").dataType)
+    val localMax = DriverGate.budget(pairs.sparkSession,
+      "spark.graft.cc.localMaxEdges", 1000000L)
     if (integralIds && nEdges <= localMax) {
       localMinLabel(edges) match {
         case Some(out) =>

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import graft.core.DriverGate
 
 /** Iterative graph analytics over edge DataFrames. The connected-
   * components machinery lives with its client in [[Dedup]] (near-dup
@@ -121,22 +122,9 @@ object Graph {
     // outputs / certificate margins). Larger graphs, non-integral ids
     // or tol-gated runs fall through to the distributed loop unchanged —
     // the 100 TB path — and the gate is conf-tunable per deployment.
-    val localMax = {
-      val raw = edges.sparkSession.conf
-        .get("spark.graft.pagerank.localMaxEdges", "4000000")
-      try raw.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.pagerank.localMaxEdges must be a long, got '$raw'")
-      }
-    }
-    val integralIds = withDeg.schema("__src").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
+    val localMax = DriverGate.budget(edges.sparkSession,
+      "spark.graft.pagerank.localMaxEdges", 4000000L)
+    val integralIds = DriverGate.integralIds(withDeg.schema("__src").dataType)
     if (tol.isEmpty && integralIds && localMax > 0 &&
         withDeg.count() <= localMax) {
       val out = localPageRank(withDeg, iters, damping)

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why not `transform(toks, t => element_at(map_lit, t))`: Spark map
   * LITERALS are `ArrayBasedMapData`, and `GetMapValue`/`element_at`
   * probes them with a LINEAR key scan — O(|vocab|) per subword. Measured
-  * (tools.VocabPlanProbe, sf0.01 docs, 16 cpus): the same encode goes
+  * (docs/SCALING.md, sf0.01 docs, 16 cpus): the same encode goes
   * 0.4 s → 5.0 s → 21 s → 38 s at 32 → 16k → 50k → 100k vocab entries,
   * linear in vocab size while plan/analysis time stays flat (~0.15 s) —
   * per-lookup scanning, not plan bloat. A production 32k–100k BPE vocab

@@ -96,6 +96,32 @@ class EtlMartsOpsSpec extends SparkSpec {
       .getAs[Any]("taux_natalite") == null)
   }
 
+  test("revenus datamart takes AVG/MIN/MAX per (annee, departement)") {
+    val temps = Seq((1, 2021), (2, 2021), (3, 2022)).toDF("temps_id", "annee")
+    val geo = Seq((1, "59", "Nord", "DEPARTEMENT"), (2, "02", "Aisne", "DEPARTEMENT"),
+      (3, "32", "Hauts-de-France", "REGION"))
+      .toDF("geo_id", "departement_code", "departement_nom", "niveau_geo")
+    val fait = Seq(
+      (1, 1, 20000.0, 11000.0, 38000.0, 15.0),
+      (2, 1, 22000.0, 12000.0, 41000.0, 17.0), // same (2021, 59) cell
+      (3, 1, 23000.0, 12500.0, 42000.0, 14.0), // 2022 → own cell
+      (1, 2, 19000.0, 10000.0, 35000.0, 20.0),
+      (1, 3, 99000.0, 1.0, 999000.0, 99.0))    // REGION geo → dropped
+      .toDF("temps_id", "geo_id", "revenu_median", "revenu_d1", "revenu_d9",
+        "taux_pauvrete")
+    val dm = Datamarts.revenusDepartement(fait, temps, geo)
+      .as[(Int, String, String, Double, Double, Double, Double)].collect()
+    assert(dm.map(r => (r._1, r._2)).sorted.toSeq ==
+      Seq((2021, "02"), (2021, "59"), (2022, "59")))
+    val nord21 = dm.find(r => r._1 == 2021 && r._2 == "59").get
+    assert(nord21._3 == "Nord")
+    assert(math.abs(nord21._4 - 21000.0) < 1e-9) // AVG revenu_median
+    assert(nord21._5 == 11000.0)                 // MIN revenu_d1
+    assert(nord21._6 == 41000.0)                 // MAX revenu_d9
+    assert(math.abs(nord21._7 - 16.0) < 1e-9)    // AVG taux_pauvrete
+    assert(!dm.exists(_._2 == "32"), "a REGION row reached the mart")
+  }
+
   test("entreprises datamart groups the 4-way star by activity attributes") {
     val temps = Seq((1, 2021), (2, 2022)).toDF("temps_id", "annee")
     val geo = Seq((1, "59", "Nord", "DEPARTEMENT"), (2, "XX", "Reg", "REGION"))
@@ -820,40 +846,19 @@ class EtlMartsOpsSpec extends SparkSpec {
 
   test("profile default is one pass: 50 columns, a handful of jobs") {
     import graft.ops.Profile
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val colNames = (0 until 50).map(i => s"c$i")
     val wide = spark.range(2000).select(
       colNames.zipWithIndex.map { case (c, i) =>
         (col("id") % (i + 2)).as(c)
       }: _*)
-    def countJobs(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // listener events are async: wait until the count stops moving
-        var last = -1; var stable = 0; var waited = 0
-        while (stable < 2 && waited < 5000) {
-          Thread.sleep(100); waited += 100
-          val c = counter.get()
-          if (c == last) stable += 1 else { stable = 0; last = c }
-        }
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     var approx: Map[String, (String, Long, Long, Long)] = Map.empty
-    val approxJobs = countJobs {
+    val approxJobs = jobsRunBy {
       approx = Profile.describe(wide, colNames)
         .select("column", "n", "n_null", "n_distinct")
         .as[(String, Long, Long, Long)].collect()
         .map(r => r._1 -> r).toMap
     }
-    val exactJobs = countJobs {
+    val exactJobs = jobsRunBy {
       Profile.describe(wide, colNames, exactDistinct = true).collect()
     }
     // one aggregate pass (AQE may materialize its stages as 2-3 jobs)

@@ -98,39 +98,10 @@ class LlmPipelineSpec extends SparkSpec {
       Seq("doc_id"), "left_anti")
     val split = Curation.leakSafeSplitClustered(docs, "doc_id", clusters)
 
-    // deterministic job counter: drain the async listener bus by polling
-    // until job-end events have caught up with job-starts and the count
-    // is stable across two consecutive polls (no fixed sleep)
-    def countJobs[T](body: => T): (T, Int) = {
-      val starts = new java.util.concurrent.atomic.AtomicInteger
-      val ends = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.incrementAndGet()
-        override def onJobEnd(
-            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          ends.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val result = body
-        val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-        var stable = 0
-        var last = -1
-        while (stable < 2 && System.nanoTime < deadline) {
-          val s = starts.get
-          if (s == ends.get && s == last) stable += 1 else stable = 0
-          last = s
-          Thread.sleep(50)
-        }
-        (result, starts.get)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-
     // identical membership to the self-contained convenience path
-    val (selfContained, selfJobs) = countJobs {
-      Curation.leakSafeSplit(docs, "text", "doc_id")
+    var selfContained = Seq.empty[(Long, Long, String)]
+    val selfJobs = jobsRunBy {
+      selfContained = Curation.leakSafeSplit(docs, "text", "doc_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
         .sortBy(_._1).toSeq
     }
@@ -146,7 +117,7 @@ class LlmPipelineSpec extends SparkSpec {
     // derives from the OBSERVED self-contained job count (not a fixed
     // constant AQE job splitting could drift past): the composed reads
     // must cost well under half of what the full pair machinery does.
-    val (_, composedJobs) = countJobs { split.count(); deduped.count() }
+    val composedJobs = jobsRunBy { split.count(); deduped.count() }
     assert(composedJobs * 2 < selfJobs,
       s"pair stage re-ran: $composedJobs jobs for the composed reads " +
         s"vs $selfJobs for the self-contained path")

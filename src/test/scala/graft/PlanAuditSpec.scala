@@ -124,46 +124,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("RowCounts.hint answers from parquet footers: zero Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
-    // count ONLY jobs from this thread's job group — other suites share
-    // the session and their concurrent jobs must not fail this probe
-    def countJobs(body: => Unit): Int = {
-      val group = s"rowcounts-probe-${System.nanoTime()}"
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          if (Option(j.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) {
-            counter.incrementAndGet(); ()
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      spark.sparkContext.setJobGroup(group, "rowcounts probe")
-      try {
-        body
-        // listener events are async: wait until the count stops moving
-        var last = -1; var stable = 0; var waited = 0
-        while (stable < 2 && waited < 5000) {
-          Thread.sleep(100); waited += 100
-          val c = counter.get()
-          if (c == last) stable += 1 else { stable = 0; last = c }
-        }
-        counter.get()
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(l)
-      }
-    }
-    // the listener probe can still catch foreign jobs under the shared
+    // the job-group count can still catch foreign jobs under the shared
     // parallel-suite session (Spark's localProperties is an
     // InheritableThreadLocal: a shared pool thread created anywhere in the
     // JVM while our group is set inherits it and then attributes a FOREIGN
     // suite's jobs to us for the pool thread's whole lifetime — observed
     // as a persistent nonzero across re-probes). So the PRIMARY regression
     // catch is RowCounts' own deterministic fallback counter, asserted
-    // after every probe; the listener only has to observe ONE clean probe
+    // after every probe; `jobsRunBy` only has to observe ONE clean probe
     // out of several — a memoized re-probe is genuinely job-free, so a
     // regression that launches jobs through a path the fallback counter
     // cannot see still fails all retries on a quiet JVM (isolation run).
@@ -172,7 +141,7 @@ class PlanAuditSpec extends SparkSpec {
       val fbBefore = fallbacks
       var attempts = List.empty[Int]
       while (attempts.lastOption != Some(0) && attempts.size < 4)
-        attempts = attempts :+ countJobs(body)
+        attempts = attempts :+ jobsRunBy(body)
       assert(fallbacks == fbBefore,
         s"$label took the count() fallback ${fallbacks - fbBefore} times")
       assert(attempts.lastOption.contains(0),
