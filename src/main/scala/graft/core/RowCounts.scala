@@ -34,7 +34,7 @@ object RowCounts {
   /** Past this many files, footer-summing on the driver is itself a
     * metadata storm — use catalog statistics (path 1) or accept the
     * distributed count. */
-  private val MaxFooterFiles = 4096
+  private[core] val MaxFooterFiles = 4096
 
   private val cache = new ConcurrentHashMap[String, java.lang.Long]()
 

@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -7,6 +8,8 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
@@ -102,6 +105,47 @@ object Tables {
           }
       } catch { case NonFatal(_) => None }
     schema.fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  /** The max of an integer column of a parquet-backed `df`, from the
+    * row-group statistics in its files' footers, read on the driver: no
+    * Spark job. `Some(None)` when no file holds a non-null value (no
+    * rows, or the column is all null). `None` when the footers cannot
+    * tell, and the caller must aggregate: a file without the column or
+    * without its statistics, a column that is not a signed 32- or 64-bit
+    * integer, an unreadable footer, or more files than [[RowCounts]]
+    * reads footers for. `df` must be a plain scan of its files: filters
+    * and projections above it are not seen. */
+  private[graft] def footerMax(df: DataFrame,
+      column: String): Option[Option[Long]] = {
+    val files = df.inputFiles
+    if (files.length > RowCounts.MaxFooterFiles) None
+    else try {
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      def fileMax(path: String): Option[Option[Long]] = {
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(new HPath(path), conf),
+          ParquetMetadataConverter.NO_FILTER)
+        val schema = meta.getFileMetaData.getSchema
+        val integral = schema.containsField(column) && {
+          val t = schema.getType(schema.getFieldIndex(column))
+          t.isPrimitive && Set(PrimitiveTypeName.INT32, PrimitiveTypeName.INT64)
+            .contains(t.asPrimitiveType.getPrimitiveTypeName) &&
+            (t.getLogicalTypeAnnotation match {
+              case null => true
+              case i: IntLogicalTypeAnnotation => i.isSigned
+              case _ => false
+            })
+        }
+        val stats = meta.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+          .find(_.getPath.toDotString == column).flatMap(c => Option(c.getStatistics)))
+        if (!integral || stats.exists(_.forall(_.isEmpty))) None
+        else Some(stats.flatten.filter(_.hasNonNullValue)
+          .map(_.genericGetMax.asInstanceOf[Number].longValue).maxOption)
+      }
+      val perFile = files.toSeq.map(fileMax)
+      if (perFile.contains(None)) None else Some(perFile.flatten.flatten.maxOption)
+    } catch { case NonFatal(_) => None }
   }
 
   /** The data file Spark's schema inference would read under `path`: the

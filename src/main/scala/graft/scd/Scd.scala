@@ -1,7 +1,9 @@
 package graft.scd
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Slowly-changing-dimension operators — the reference's signature
   * capability (reference `Terraform/sql/010_scd_dimensions.sql:30-521`,
@@ -61,12 +63,30 @@ object Scd {
     * `dim` must carry the Meta columns (see `seed`); `updates` carries the
     * attribute columns only. */
   def scd2(dim: DataFrame, updates: DataFrame, bk: Seq[String],
-      tracked: Seq[String], effectiveDate: String): DataFrame = {
+      tracked: Seq[String], effectiveDate: String): DataFrame =
+    scd2Merge(dim, updates, bk, tracked, effectiveDate, opCol = None)
+
+  /** `lit(s).cast("date")` as a bound value ([[graft.core.Bound]]), so
+    * the merges of successive effective dates share their compiled
+    * classes; a string Spark cannot parse keeps the cast and its error. */
+  private def dateOf(s: String): Column =
+    DateTimeUtils.stringToDate(UTF8String.fromString(s))
+      .fold(lit(s).cast("date"))(d =>
+        graft.core.Bound.value(java.time.LocalDate.ofEpochDay(d.toLong)))
+
+  /** [[scd2]]'s one full-outer pass. With `opCol`, `updates` is a CDC
+    * feed's latest row per key and a `'D'` row closes the key instead:
+    * a matched `'D'` emits only the closed current version, an unmatched
+    * one emits nothing, and a row whose op is null is dropped. */
+  private def scd2Merge(dim: DataFrame, updates: DataFrame, bk: Seq[String],
+      tracked: Seq[String], effectiveDate: String,
+      opCol: Option[String]): DataFrame = {
     val attrs = dim.columns.filterNot(Meta.contains).toSeq
-    val eff = lit(effectiveDate).cast("date")
+    val eff = dateOf(effectiveDate)
     val hist = dim.filter(col("est_actif") === 0)
     val cur = dim.filter(col("est_actif") === 1).alias("d")
-    val u = updates.alias("u")
+    val u = opCol.fold(updates)(op => updates.filter(col(op).isNotNull))
+      .alias("u")
     val j = cur.join(u, bkCond("d", "u", bk), "full_outer")
     val matched = bk.map(k => col(s"d.$k").isNotNull).reduce(_ && _) &&
       bk.map(k => col(s"u.$k").isNotNull).reduce(_ && _)
@@ -80,16 +100,19 @@ object Scd {
     // CHAINED merge (m_scd2_cdc runs two rounds; a streaming sink runs
     // one per batch over the previous batch's output) re-executed the
     // whole previous round inside each branch. Each joined row instead
-    // emits its 1–2 output rows from a single projection via explode:
+    // emits its 0–2 output rows from a single projection via explode:
+    //   matched delete     → the closed old version (CDC only),
+    //   unmatched delete   → nothing (a null array explodes to no row),
     //   matched+changed    → the closed old version + the new version,
     //   matched+unchanged
     //     or dim-only      → the current row as-is,
     //   update-only        → version 1.
-    // Branch order in the when-chain puts the two-row case first; the
-    // conditions are mutually exclusive and exhaustive over full-outer
-    // rows, so the emitted row set is exactly the old union's. Measured
-    // (isolated sf0.1, matched calibration): m_scd2_cdc 3.26 → 1.27 s,
-    // m_scd2_merge 0.53 → 0.40 s (plans/r18/m_scd2_cdc_after.txt).
+    // Branch order in the when-chain puts the delete cases first, then
+    // the two-row case; the conditions are mutually exclusive and
+    // exhaustive over full-outer rows, so the emitted row set is exactly
+    // the old union's. Measured (isolated sf0.1, matched calibration):
+    // m_scd2_cdc 3.26 → 1.27 s, m_scd2_merge 0.53 → 0.40 s
+    // (plans/r18/m_scd2_cdc_after.txt).
     def outRow(attrSide: String, version: Column, actif: Column,
         debut: Column, fin: Column): Column =
       struct(attrs.map(c => col(s"$attrSide.$c").as(c)) ++
@@ -103,10 +126,15 @@ object Scd {
     val uNext = outRow("u", col("d.version") + 1, lit(1), eff,
       lit(null).cast("date"))
     val uFirst = outRow("u", lit(1), lit(1), eff, lit(null).cast("date"))
+    val upsert = opCol match {
+      case None => when(changed, array(dClosed, uNext))
+      case Some(op) =>
+        val del = col(s"u.$op") === "D"
+        when(del && matched, array(dClosed)).when(del, lit(null))
+          .when(changed, array(dClosed, uNext))
+    }
     val emitted = j.select(explode(
-        when(changed, array(dClosed, uNext))
-          .when(newOnly, array(uFirst))
-          .otherwise(array(dAsIs))).as("__r"))
+        upsert.when(newOnly, array(uFirst)).otherwise(array(dAsIs))).as("__r"))
       .select(col("__r.*"))
     hist.select((attrs ++ Meta).map(col): _*)
       .unionByName(emitted)
@@ -166,11 +194,13 @@ object Scd {
 
   /** SCD2 MERGE of a CDC feed (insert/update/delete rows with a monotone
     * `seqCol`): the latest change per key wins ([[applyCdc]]'s window —
-    * change-sized, never base-sized), upserts run the one-pass [[scd2]]
+    * change-sized, never base-sized), and that one latest row per key
+    * runs through [[scd2]]'s single full-outer pass: upserts
     * close-and-append, and hard deletes — which plain SCD2 never sees —
     * CLOSE the key's current version without opening a successor, so the
     * dimension keeps full history and the key simply has no active row
-    * afterwards. Re-inserting a previously deleted key starts a fresh
+    * afterwards. A key whose latest change has a null op is left as it
+    * is. Re-inserting a previously deleted key starts a fresh
     * version chain at 1: validity intervals stay disjoint ([[asOf]] and
     * [[pitJoin]] read correctly), only the version NUMBER repeats —
     * documented honestly; the reference's batch MERGE
@@ -184,20 +214,8 @@ object Scd {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(bk.map(col): _*).orderBy(col(seqCol).desc)
     val latest = changes.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val upserts = latest.filter(col(opCol) =!= "D").drop(opCol, seqCol)
-    val delKeys = latest.filter(col(opCol) === "D")
-      .select(bk.map(col): _*).withColumn("__del", lit(1))
-    val merged = scd2(dim, upserts, bk, tracked, effectiveDate)
-    val eff = lit(effectiveDate).cast("date")
-    // delete-close: date_fin stamped while est_actif is still readable
-    merged.join(delKeys, bk, "left")
-      .withColumn("date_fin_validite",
-        when(col("__del") === 1 && col("est_actif") === 1, eff)
-          .otherwise(col("date_fin_validite")))
-      .withColumn("est_actif",
-        when(col("__del") === 1, 0).otherwise(col("est_actif")))
-      .drop("__del")
+      .filter(col("__rn") === 1).drop("__rn", seqCol)
+    scd2Merge(dim, latest, bk, tracked, effectiveDate, Some(opCol))
   }
 
   /** EVENT-TIME SCD2 merge of a CDC feed — each change row carries its

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{StructField, StructType}
-import graft.core.Tables
+import graft.core.{Bound, Tables}
 import graft.ops.Compaction
 
 /** Structured Streaming layer. The reference is pure batch (SURVEY §2.10) —
@@ -153,12 +153,16 @@ object Streams {
     *     layout, whether or not this batch touches it), so no merge
     *     reads old and new files together.
     *  3. Replay guard ([[Guard]]): a batch id already committed is
-    *     skipped.
+    *     skipped. A stamp's committed max is read from the data files'
+    *     footer statistics ([[graft.core.Tables.footerMax]]), or, where
+    *     they cannot tell, from an aggregate over the base.
     *  4. Base read: the table, or the touched bucket leaves; `None` when
     *     there are no data files, so an empty directory (a crashed seed
     *     after `mkdirs`) reads as no table.
     *  5. Stage `merge(base)` into a dot-hidden sibling directory (a
-    *     `None` merge commits nothing).
+    *     `None` merge commits nothing). The whole-table layout writes one
+    *     file per `spark.sql.files.maxPartitionBytes` of the plan's
+    *     estimated size.
     *  6. Swap with the manifest protocol of
     *     [[graft.ops.Compaction.swapDataFiles]]: the root swap, or one
     *     swap per touched leaf under that LEAF's lease, the path
@@ -218,7 +222,8 @@ object Streams {
         // null-safe: an existing but empty table has max = NULL, which
         // means "no committed batch", not an NPE on every restart
         case Stamp(c, id) => base.flatMap(t =>
-          Option(t.agg(max(c)).head().getAs[java.lang.Long](0)))
+          Tables.footerMax(t, c).getOrElse(Option(
+            t.agg(max(c)).head().getAs[java.lang.Long](0)).map(_.longValue)))
           .exists(_ >= id)
       }
       if (!committed) merge(base).foreach { rows =>
@@ -227,7 +232,14 @@ object Streams {
         if (fs.exists(staging)) fs.delete(staging, true)
         touched match {
           case None =>
-            rows.write.parquet(staging.toString)
+            // a small table is written as one file by one task, not one
+            // file per upstream partition: each write task deserializes
+            // the whole Hadoop conf (docs/SCALING.md §"Session / conf")
+            val split = spark.sessionState.conf.filesMaxPartitionBytes
+            val files = (rows.queryExecution.optimizedPlan.stats.sizeInBytes +
+              split - 1) / split
+            rows.coalesce(files.max(1).min(Int.MaxValue).toInt)
+              .write.parquet(staging.toString)
             Compaction.swapDataFilesLocked(fs, staging, target)
           case Some(ts) =>
             rows.write.partitionBy("bucket_id").parquet(staging.toString)
@@ -390,7 +402,7 @@ object Streams {
             existing.map(_.drop("batch_id")).getOrElse(seed(eff)), chg, bk,
             tracked, seqCol, opCol, eff)
           Some(if (nBuckets.isDefined) merged
-            else merged.withColumn("batch_id", lit(batchId)))
+            else merged.withColumn("batch_id", Bound.value(batchId)))
         }
     }
   }
@@ -508,7 +520,8 @@ object Streams {
                 max("last_doc").as("last_doc"))
         }
         Some(upsertInto(old,
-          combined.withColumn("version", lit(batchId)).localCheckpoint(), key))
+          combined.withColumn("version", Bound.value(batchId)).localCheckpoint(),
+          key))
     }
 
   /** Streaming sequence packing: encode upstream however the pipeline
@@ -586,7 +599,7 @@ object Streams {
           merged = Dedup.contractedMerge(existing, pairs, "a_id", "b_id",
             maxIter = 50)
           Some(upsertInto(stored, latestPerKey(Dedup.signatureIndex(b,
-            textCol, idCol).withColumn("version", lit(batchId)),
+            textCol, idCol).withColumn("version", Bound.value(batchId)),
             Seq(idCol), "version").localCheckpoint(), Seq(idCol)))
         }
         val changedOld = existing
@@ -598,7 +611,7 @@ object Streams {
             col("cluster_id").as("__m"))), Seq("id"), "left")
           .select(col("id"), coalesce(col("__m"), col("id")).as("cluster_id"))
         Some(upsertInto(clusters, latestPerKey(changedOld.unionByName(fresh)
-          .withColumn("version", lit(batchId)), Seq("id"), "version")
+          .withColumn("version", Bound.value(batchId)), Seq("id"), "version")
           .localCheckpoint(), Seq("id")))
       }
     }

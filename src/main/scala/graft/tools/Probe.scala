@@ -1,16 +1,18 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import graft.SparkEntry
 import graft.ops.QueryMetrics
 
 /** Per-query profile of declared queries: for each query × data dir, the
-  * min-of-N wall time of `count()` (the action `graft.Bench` times) and
-  * what the cluster did in that fastest run ([[QueryMetrics]]), one JSON
-  * line each. `--plan <dir>` also writes each query's formatted physical
-  * plan on the first dir to `<dir>/<query>.txt` (the `plans/r18/` format).
+  * min-of-N wall time of `count()` (the action `graft.Bench` times), what
+  * the cluster did in that fastest run ([[QueryMetrics]]) and the codegen
+  * compiles of the N runs, one JSON line each. `--plan <dir>` also writes
+  * each query's formatted physical plan on the first dir to
+  * `<dir>/<query>.txt` (the `plans/r18/` format).
   *
   *   tools/run.sh graft.tools.Probe <q1,q2,…> <sfDir>[,<sfDir>…] [--runs N] [--plan <dir>]
   *
@@ -21,18 +23,21 @@ import graft.ops.QueryMetrics
 object Probe {
 
   final case class Result(query: String, dir: String, wallS: Double,
-      metrics: QueryMetrics.Snapshot) {
+      metrics: QueryMetrics.Snapshot, compiles: Long) {
     def json: String =
       s"""{"query":"$query","sf":"$dir","wall_s":""" +
         "%.6f".formatLocal(java.util.Locale.ROOT, wallS) +
         s""","shuffle_write_bytes":${metrics.shuffleWriteBytes},""" +
         s""""records_read":${metrics.recordsRead},""" +
-        s""""spill_bytes":${metrics.spillBytes},"tasks":${metrics.tasks}}"""
+        s""""spill_bytes":${metrics.spillBytes},"tasks":${metrics.tasks},""" +
+        s""""compiles":$compiles}"""
   }
 
   /** Profiles every query in `names` on every dir in `dirs`, in that
     * order. Each run starts from an empty SQL cache and no persisted RDDs,
-    * as in `graft.Bench`; the metrics are those of the fastest run. */
+    * as in `graft.Bench`; the metrics are those of the fastest run, and
+    * `compiles` counts the Janino compiles (generated classes the
+    * codegen cache did not hold) over all N runs. */
   def probe(spark: SparkSession, names: Seq[String], dirs: Seq[String],
       runs: Int, planDir: Option[String]): Seq[Result] = {
     val queries = SparkEntry.queries
@@ -48,7 +53,9 @@ object Probe {
         Files.write(Paths.get(d, s"$q.txt"), plan.getBytes("UTF-8"))
       }
     }
+    def compiled() = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     for (q <- names; dir <- dirs) yield {
+      val before = compiled()
       val timed = (1 to runs).map { _ =>
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values
@@ -60,7 +67,7 @@ object Probe {
         }
       }
       val (wall, m) = timed.minBy(_._1)
-      Result(q, dir, wall, m)
+      Result(q, dir, wall, m, compiled() - before)
     }
   }
 

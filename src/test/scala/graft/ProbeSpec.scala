@@ -31,4 +31,12 @@ class ProbeSpec extends SparkSpec {
     assert(e.getMessage.contains("no_such_query"), e.getMessage)
     assert(!Files.exists(planDir), "probe did work before failing")
   }
+
+  test("a second probe of the same query compiles no classes") {
+    Probe.probe(spark, Seq("j_star_join"), Seq(sf001), runs = 1, planDir = None)
+    val second = Probe.probe(spark, Seq("j_star_join"), Seq(sf001), runs = 2,
+      planDir = None)
+    assert(second.map(_.compiles) == Seq(0L), second.map(_.json))
+    assert(second.head.json.endsWith(",\"compiles\":0}"), second.head.json)
+  }
 }

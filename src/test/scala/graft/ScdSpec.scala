@@ -190,6 +190,89 @@ class ScdSpec extends SparkSpec {
       e.toString)
   }
 
+  /** The two-pass form of [[Scd.scd2Cdc]] the engine ran before the
+    * deletes moved into scd2's full-outer pass: [[Scd.scd2]] over the
+    * latest non-delete rows, then a left join of the delete keys that
+    * closes their current versions. Kept here as the reference. */
+  private def scd2CdcTwoPass(dim: org.apache.spark.sql.DataFrame,
+      changes: org.apache.spark.sql.DataFrame, bk: Seq[String],
+      tracked: Seq[String], seqCol: String, opCol: String,
+      effectiveDate: String): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(bk.map(col): _*).orderBy(col(seqCol).desc)
+    val latest = changes.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+    val upserts = latest.filter(col(opCol) =!= "D").drop(opCol, seqCol)
+    val delKeys = latest.filter(col(opCol) === "D")
+      .select(bk.map(col): _*).withColumn("__del", lit(1))
+    val merged = Scd.scd2(dim, upserts, bk, tracked, effectiveDate)
+    val eff = lit(effectiveDate).cast("date")
+    merged.join(delKeys, bk, "left")
+      .withColumn("date_fin_validite",
+        when(col("__del") === 1 && col("est_actif") === 1, eff)
+          .otherwise(col("date_fin_validite")))
+      .withColumn("est_actif",
+        when(col("__del") === 1, 0).otherwise(col("est_actif")))
+      .drop("__del")
+  }
+
+  test("scd2Cdc's one-pass merge equals the two-pass merge: deletes of " +
+      "absent and closed keys, delete-then-reinsert, null-op shadows, " +
+      "history-only keys, a mixed batch") {
+    // key 1 a three-version chain (v3 active); key 2 closed by a delete
+    // (history only); key 3 a closed v1 + active v2; key 4 active v1;
+    // key 5 history only
+    val dim0 = etDim.filter($"k" =!= 3L).unionByName(Seq(
+      (3L, "A", 1, 0, "2020-01-01", "2021-01-01"),
+      (3L, "B", 2, 1, "2021-01-01", null),
+      (4L, "Q", 1, 1, "2020-01-01", null),
+      (5L, "H", 1, 0, "2020-01-01", "2020-06-01"))
+      .toDF("k", "seg", "version", "est_actif", "deb", "fin")
+      .select($"k", $"seg", $"version", $"est_actif",
+        $"deb".cast("date").as("date_debut_validite"),
+        $"fin".cast("date").as("date_fin_validite")))
+    def feed(rows: (Long, String, Long, String)*) =
+      rows.toDF("k", "seg", "seq", "op")
+    val nullOp: String = null
+    def both(dim: org.apache.spark.sql.DataFrame,
+        changes: org.apache.spark.sql.DataFrame, eff: String) = {
+      val one = Scd.scd2Cdc(dim, changes, Seq("k"), Seq("seg"), "seq", "op",
+        eff)
+      val two = scd2CdcTwoPass(dim, changes, Seq("k"), Seq("seg"), "seq",
+        "op", eff).select(one.columns.map(col): _*)
+      assert(one.exceptAll(two).count() == 0 && two.exceptAll(one).count() == 0,
+        s"one-pass ${etRows(one)} vs two-pass ${etRows(two)}")
+      one
+    }
+    val cases = Seq(
+      "delete of an absent key" -> feed((9L, "Z", 1L, "D")),
+      "delete of an already closed key" -> feed((2L, "X", 1L, "D")),
+      "null-op latest row shadows an earlier change" ->
+        feed((1L, "N", 1L, "U"), (1L, "N2", 2L, nullOp),
+          (8L, "I8", 1L, "I"), (8L, "I8", 2L, nullOp)),
+      "a history-only key: untouched, then re-inserted" ->
+        feed((4L, "Q2", 1L, "U"), (5L, "H2", 2L, "I")),
+      "a mixed I/U/D batch" ->
+        feed((1L, "C", 1L, "U"), (1L, "D1", 2L, "U"), (3L, "B", 3L, "U"),
+          (4L, "Q", 4L, "D"), (6L, "N6", 5L, "I"), (7L, "N7", 6L, "I"),
+          (7L, "N7", 7L, "D"), (2L, "X2", 8L, "I")))
+    cases.foreach { case (name, changes) =>
+      withClue(name)(both(dim0, changes, "2024-01-01"))
+    }
+    // the null op shadows key 1's update: key 1 keeps its active A
+    assert(etRows(Scd.scd2Cdc(dim0, cases(2)._2, Seq("k"), Seq("seg"),
+      "seq", "op", "2024-01-01").filter($"k" === 1L)) ==
+      Seq((1L, "A", 1, 0, "2020-01-01", "2021-01-01"),
+        (1L, "B", 2, 0, "2021-01-01", "2022-01-01"),
+        (1L, "C", 3, 1, "2022-01-01", null)))
+    // delete, then re-insert in the next batch: the chain restarts at 1
+    val deleted = both(dim0, feed((4L, "Q", 1L, "D")), "2024-01-01")
+    val reinserted = both(deleted, feed((4L, "R", 1L, "I")), "2024-02-01")
+    assert(etRows(reinserted.filter($"k" === 4L)) == Seq(
+      (4L, "Q", 1, 0, "2020-01-01", "2024-01-01"),
+      (4L, "R", 1, 1, "2024-02-01", null)), etRows(reinserted).toString)
+  }
+
   test("scd3 keeps previous value in companion column") {
     val updates = Seq(("59", "Nord-New")).toDF("code", "nom")
     val out = Scd.scd3(dim.drop(Scd.Meta: _*), updates, Seq("code"), "nom",

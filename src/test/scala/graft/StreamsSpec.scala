@@ -633,6 +633,103 @@ class StreamsSpec extends SparkSpec {
     assert(dimRows(spark.read.parquet(target).drop("batch_id")) == wantRows)
   }
 
+  test("scd2CdcBatch reuses its generated classes: after two warm-up " +
+      "batches, a batch with a new effective date and batch id compiles " +
+      "none") {
+    val target = java.nio.file.Files.createTempDirectory("graft-cdc-codegen")
+      .resolve("dim").toString
+    def batch(day: Int, id: Long): Unit = {
+      val d = f"2024-01-$day%02d"
+      val changes = Seq(
+        (1L, "one", s"S$day", 1L, "U", d),
+        (2L, "two", "A", 2L, "U", d),
+        (3L, "three", "B", 3L, if (id % 2 == 0) "I" else "D", d),
+        (10L + id, "new", "C", 4L, "I", d))
+        .toDF("k", "name", "seg", "seq", "op", "change_date")
+      Streams.scd2CdcBatch(changes, target, Seq("k"), Seq("seg"), "seq",
+        "op", "change_date", id)
+    }
+    def compiles() =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+        .getCount
+    batch(1, 0L)
+    batch(2, 1L)
+    val before = compiles()
+    batch(3, 2L)
+    val third = compiles() - before
+    assert(third == 0, s"the third batch compiled $third classes")
+    val table = spark.read.parquet(target)
+    assert(table.agg(max("batch_id")).head().getLong(0) == 2L)
+    assert(table.filter($"k" === 1L && $"est_actif" === 1)
+      .select($"seg", $"version", $"date_debut_validite".cast("string"))
+      .as[(String, Int, String)].collect().toSeq == Seq(("S3", 3, "2024-01-03")))
+  }
+
+  test("scd2CdcBatch's replay guard: committed ids are skipped whether the " +
+      "footers answer or a file without the stamp sends it to the aggregate") {
+    val target = java.nio.file.Files.createTempDirectory("graft-cdc-guard")
+      .resolve("dim").toString
+    def changes(seg: String, d: String) =
+      Seq((1L, "one", seg, 1L, "U", d), (2L, "two", seg, 2L, "I", d))
+        .toDF("k", "name", "seg", "seq", "op", "change_date")
+    def run(seg: String, d: String, id: Long) = Streams.scd2CdcBatch(
+      changes(seg, d), target, Seq("k"), Seq("seg"), "seq", "op",
+      "change_date", id)
+    def rows() = spark.read.parquet(target)
+      .select($"k", $"seg", $"version", $"est_actif", $"batch_id")
+      .as[(Long, String, Int, Int, Option[Long])].collect().toSeq.sorted
+    run("A", "2024-01-01", 0L)
+    run("B", "2024-02-01", 1L)
+    val committed = rows()
+    assert(committed.map(_._5).distinct == Seq(Some(1L)))
+    run("C", "2024-03-01", 1L) // replay of 1 with stale content
+    run("D", "2024-03-01", 0L)
+    assert(rows() == committed)
+    // a data file without the stamp column: the footers cannot tell, the
+    // aggregate does, and the replay is still skipped
+    val dimCols = spark.read.parquet(target).drop("batch_id")
+    val extra = java.nio.file.Files.createTempDirectory("graft-cdc-extra")
+      .resolve("x").toString
+    dimCols.filter($"k" === 1L && $"est_actif" === 1)
+      .withColumn("k", lit(99L)).coalesce(1).write.parquet(extra)
+    val stray = new java.io.File(extra).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    assert(stray.renameTo(new java.io.File(target, "zz-no-stamp.parquet")))
+    assert(graft.core.Tables.footerMax(
+      graft.core.Tables.readParquet(spark, Seq(target)), "batch_id").isEmpty)
+    val withStray = rows()
+    run("E", "2024-03-01", 1L)
+    assert(rows() == withStray)
+    run("F", "2024-03-01", 2L) // a new id lands
+    assert(rows().filter(_._4 == 1).map(r => (r._1, r._2, r._5)) ==
+      Seq((1L, "F", Some(2L)), (2L, "F", Some(2L)), (99L, "B", Some(2L))))
+  }
+
+  test("a whole-table commit writes one file per maxPartitionBytes of " +
+      "estimated size") {
+    val base = java.nio.file.Files.createTempDirectory("graft-commit-size")
+    def batch(from: Long, ver: Long) = spark.range(from, from + 20000, 1, 8)
+      .select($"id".as("k"), lit(ver).as("ver"),
+        concat(lit("value-"), $"id".cast("string")).as("v"))
+    def dataFiles(dir: String) = new java.io.File(dir).listFiles().count(f =>
+      graft.ops.Compaction.isDataFile(new org.apache.hadoop.fs.Path(f.toString)))
+    def upsert(from: Long, ver: Long, dir: String) =
+      Streams.upsertBatch(batch(from, ver), dir, Seq("k"), "ver")
+    val dflt = base.resolve("default").toString
+    upsert(0L, 1L, dflt)
+    upsert(10000L, 2L, dflt) // a merge: the base's rows and the batch's
+    assert(dataFiles(dflt) == 1)
+    val small = base.resolve("small").toString
+    upsert(0L, 1L, small)
+    withSQLConf("spark.sql.files.maxPartitionBytes" -> "16384") {
+      upsert(10000L, 2L, small)
+    }
+    assert(dataFiles(small) >= 2, s"${dataFiles(small)} files")
+    val (a, b) = (spark.read.parquet(dflt), spark.read.parquet(small))
+    assert(a.count() == 30000 && a.exceptAll(b).count() == 0 &&
+      b.exceptAll(a).count() == 0)
+  }
+
   test("event-time CDC/SCD2 sink: streamed out-of-order batches equal " +
       "sequential event-time merges; replay is a no-op") {
     val cols = Seq("k", "name", "seg", "seq", "op", "eff")

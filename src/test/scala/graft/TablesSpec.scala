@@ -56,4 +56,42 @@ class TablesSpec extends SparkSpec {
       Tables.load(spark, sf001, t).schema))
     assert(n == 0, s"$n jobs")
   }
+
+  test("footerMax reads a stamp's max from the footers: across files, " +
+      "none for an empty or all-null table, unknown when a file lacks it") {
+    val base = java.nio.file.Files.createTempDirectory("graft-footermax")
+    def max(dir: String) =
+      Tables.footerMax(Tables.readParquet(spark, Seq(dir)), "batch_id")
+    val several = base.resolve("several").toString
+    spark.range(0, 100, 1, 4).select($"id".as("batch_id"), $"id".as("v"))
+      .write.parquet(several)
+    assert(new java.io.File(several).list().count(_.endsWith(".parquet")) == 4)
+    assert(max(several) == Some(Some(99L)))
+    val ints = base.resolve("ints").toString
+    Seq(3, 7, 5).toDF("batch_id").write.parquet(ints)
+    assert(max(ints) == Some(Some(7L)))
+    val empty = base.resolve("empty").toString
+    Seq.empty[Long].toDF("batch_id").write.parquet(empty)
+    assert(Tables.readParquet(spark, Seq(empty)).count() == 0)
+    assert(max(empty) == Some(None))
+    val nulls = base.resolve("nulls").toString
+    Seq(Option.empty[Long], None).toDF("batch_id").write.parquet(nulls)
+    assert(max(nulls) == Some(None))
+    // a later file without the column: the footers cannot tell, and the
+    // aggregate still reads the max of the files that have it
+    val mixed = base.resolve("mixed").toString
+    Seq(4L, 9L).toDF("batch_id").coalesce(1).write.parquet(mixed)
+    Seq(1L).toDF("v").coalesce(1).write.parquet(base.resolve("novalue").toString)
+    val stray = new java.io.File(base.resolve("novalue").toString).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    assert(stray.renameTo(new java.io.File(mixed, "zz-no-stamp.parquet")))
+    val t = Tables.readParquet(spark, Seq(mixed))
+    assert(Tables.footerMax(t, "batch_id").isEmpty)
+    assert(t.agg(org.apache.spark.sql.functions.max("batch_id")).head()
+      .getLong(0) == 9L)
+    // a column that is not an integer cannot be a stamp
+    val strings = base.resolve("strings").toString
+    Seq("3", "7").toDF("batch_id").write.parquet(strings)
+    assert(max(strings).isEmpty)
+  }
 }
