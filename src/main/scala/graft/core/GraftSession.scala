@@ -24,9 +24,9 @@ import org.apache.spark.sql.SparkSession
   * map-side partial-agg spill is Spark's intended behavior (spillable
   * fallback in ObjectHashAggregate/SortAggregate) and measures ≤
   * cpu-adjusted linear at equal cpus (j_cooccurrence 6.03x/decade). On
-  * a real cluster shuffle partitions still scale with total cores (the
-  * override below, ~2-3k at the 1000-executor target); AQE coalesces
-  * from there.
+  * a real cluster shuffle partitions still scale with total cores
+  * (`SPARK_GRAFT_CONF="spark.sql.shuffle.partitions=N"`, ~2-3k at the
+  * 1000-executor target); AQE coalesces from there.
   */
 object GraftSession {
   /** Size of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
@@ -49,39 +49,17 @@ object GraftSession {
     * brings back the 100-entry default for the life of the JVM. */
   val CodegenCacheEntries = 4000
 
-  /** Shuffle partitions for a given core count (1x, see scaladoc);
-    * SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for sizing experiments. */
-  def shufflePartitionsFor(cores: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") match {
-      case None => cores
-      case Some(raw) =>
-        val n = raw.trim.toIntOption.filter(_ > 0).getOrElse(
-          throw new IllegalArgumentException(
-            s"SPARK_GRAFT_SHUFFLE_PARTITIONS must be a positive int, got '$raw'"))
-        // loud: the override also reaches test/bench sessions, so a
-        // leftover exported experiment var must be identifiable in logs
-        System.err.println(
-          s"[graft] SPARK_GRAFT_SHUFFLE_PARTITIONS override active: $n " +
-            s"(default would be $cores)")
-        n
-    }
-
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    builder(s"local[$cores]", cores).getOrCreate()
-
-  /** `cores` is the executor thread count; shuffle partitions derive
-    * from it via [[shufflePartitionsFor]]. */
-  def builder(master: String, cores: Int): SparkSession.Builder =
-    builderWithPartitions(master, shufflePartitionsFor(cores))
-
-  def builderWithPartitions(master: String, shufflePartitions: Int): SparkSession.Builder = {
+  /** `cores` is the executor thread count, and the shuffle partition
+    * count (1x, see scaladoc). `SPARK_GRAFT_CONF` (below) overrides any
+    * conf, `spark.sql.shuffle.partitions` included. */
+  def builder(master: String, cores: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
       .appName("graft-engine")
       // engine extensions: RLS injection (inert until configured), custom
       // functions, bounded-heap top-k-per-key strategy
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -112,7 +90,7 @@ object GraftSession {
     // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs applied LAST, for
     // conf A/B sweeps (dev) and per-deployment tuning (prod) without a
     // code change. Loud on stderr so a leftover exported experiment var
-    // is identifiable in any log, like the shuffle-partitions override.
+    // is identifiable in any log.
     sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
       .foldLeft(b) { (bb, kv) =>

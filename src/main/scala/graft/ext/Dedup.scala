@@ -10,9 +10,9 @@ import graft.core.DriverGate
   *  - exact: hash-groupBy on a content digest. One shuffle keyed by a
   *    16-byte digest — uniformly distributed, no skew, and AQE coalesces
   *    the post-shuffle partitions.
-  *  - near-dup: MinHash signatures computed per-row with higher-order
-  *    functions (no UDF, no shuffle), then LSH banding so the candidate
-  *    join is an equi-join on (band, bandValue) buckets instead of an
+  *  - near-dup: MinHash signatures computed per-row by one fused codegen
+  *    expression (no UDF, no shuffle), then LSH banding so the candidate
+  *    join is an equi-join on one folded band digest instead of an
   *    O(n²) cross join. Only candidate pairs pay the exact-Jaccard cost.
   *  - SimHash: 64-bit per-row signature; near-dups differ in few bits.
   *
@@ -384,33 +384,49 @@ object Dedup {
     array_min(transform(set,
       t => substring(md5(concat(lit(s"$seed:"), t).cast("binary")), 1, 16)))
 
-  /** k-wide signature as individual columns mh0..mh{k-1}, via the fused
-    * per-row [[graft.functions.MinHashSig]] codegen expression (one string
-    * pass + k·|shingles| md5 calls — no interpreted lambdas, no shuffle).
-    * Docs with fewer than `shingleN` tokens are dropped (no signature). */
-  def withMinhashSignature(df: DataFrame, textCol: String, k: Int = 8,
-      shingleN: Int = 3): DataFrame = {
+  // The MinHash-LSH kernel. Every near-dup entry point — batch,
+  // from-index, incremental, streaming and bucketed — composes these
+  // steps, so each exists once: `signed` (the signing projection),
+  // `banded` (the band projection, every value read through `sigAt`),
+  // `jaccard` (the verify) and `verifiedPairs` (the candidate join +
+  // fetch + verify). The stream probe in
+  // `graft.streaming.Streams` composes the same steps.
+
+  /** The signing projection: the `keep` columns plus `sig` (k minhash
+    * values), `dsh` (distinct shingle set) and `n_shingles`, from ONE
+    * fused per-row codegen pass ([[graft.functions.MinHashSig]] — one
+    * string pass + k·|shingles| md5 calls, no shuffle, no interpreted
+    * lambdas). Docs with fewer than `shingleN` tokens have no signature
+    * and are dropped. Row-local, so it runs unchanged on a stream; the
+    * batch callers apply [[graft.core.Tables.spread]] first (it probes
+    * `toRdd`, which a streaming frame cannot run). */
+  private[graft] def signed(df: DataFrame, textCol: String,
+      keep: Seq[String], k: Int, shingleN: Int): DataFrame = {
     graft.functions.MinHashSig.register(df.sparkSession, shingleN, k)
-    val sig = graft.functions.MinHashSig.minhashSig(col(textCol), shingleN, k)
-    // one ordered projection (NOT withColumns(Map), whose hash-map iteration
-    // order would scramble the mh0..mh{k-1} schema order for k > 4)
-    df.withColumn("__m", sig)
+    df.select(keep.map(col) :+ graft.functions.MinHashSig
+        .minhashSig(col(textCol), shingleN, k).as("__m"): _*)
       .filter(col("__m").isNotNull)
-      .select(df.columns.toIndexedSeq.map(col) ++
-        (0 until k).map(i => col("__m.sig")(i).as(s"mh$i")): _*)
+      .select(keep.map(col) ++ Seq(col("__m.sig").as("sig"),
+        col("__m.dsh").as("dsh"), col("__m.n_shingles").as("n_shingles")): _*)
   }
 
-  /** LSH band value: digest of `rowsPerBand` adjacent signature columns.
-    * Docs agreeing on all hashes in any band become candidates. */
-  def bandValue(sig: Seq[Column]): Column =
-    md5(concat_ws("|", sig: _*).cast("binary"))
+  /** k-wide signature as individual columns mh0..mh{k-1} next to every
+    * column of `df` (one ordered projection, so the mh columns keep
+    * their order for any k). Docs with fewer than `shingleN` tokens are
+    * dropped (no signature). */
+  def withMinhashSignature(df: DataFrame, textCol: String, k: Int = 8,
+      shingleN: Int = 3): DataFrame = {
+    val cols = df.columns.toIndexedSeq
+    signed(df, textCol, cols, k, shingleN)
+      .select(cols.map(col) ++ (0 until k).map(i => col("sig")(i).as(s"mh$i")): _*)
+  }
 
-  /** Guarded access into a stored signature index's `sig` array: the
-    * elements are non-null by construction ([[signatureIndex]] filters
-    * null signatures), so a null read means position `i` is OUT OF RANGE
-    * — the caller's `k` is wider than the index was built with. Without
-    * this guard, concat_ws inside [[bandValue]] silently drops the null
-    * and band digests collide/diverge, degrading candidate recall with
+  /** Guarded read of position `i` of a signed frame's `sig` array: the
+    * elements are non-null by construction ([[signed]] filters null
+    * signatures), so a short array means the caller's `k` is wider than
+    * a stored index was built with. Without this guard concat_ws inside
+    * [[banded]] would silently drop the missing values and band
+    * digests would collide or diverge, degrading candidate recall with
     * no error. Raise loudly instead. (A k NARROWER than the stored index
     * is fine: seeds are positional, so a prefix is itself a valid
     * k-signature.)
@@ -418,77 +434,97 @@ object Dedup {
     * ONE branch per row carries the whole guard: element 0 (read exactly
     * once per row, in band 0) checks `size(sig) >= k` and raises OUR
     * message; every other element is a plain positional read. The guard
-    * expression is part of the same banding projection row, and Spark
-    * evaluates every projected expression for a row it emits (when()
-    * short-circuits only its own branches), so a short signature can
-    * never slip through silently — and codegen's in-order emission makes
-    * the size check fire BEFORE any out-of-range positional read could
-    * surface ANSI's positionless INVALID_ARRAY_INDEX (the k-wider spec
-    * test pins that message ordering). r16 guarded all k elements with
-    * get()+when each, which measured 21% on `x_dedup_incremental` at
-    * sf1; this form measures at the unguarded cost (A/B table in
-    * docs/SCALING.md §r17). */
+    * is part of the same banding projection row, and Spark evaluates
+    * every projected expression for a row it emits (when() short-circuits
+    * only its own branches), so a short signature can never slip through
+    * — and codegen's in-order emission makes the size check fire BEFORE
+    * an out-of-range positional read could surface ANSI's positionless
+    * INVALID_ARRAY_INDEX (the k-wider spec test pins that ordering on
+    * the batch, incremental and streaming paths). Guarding all k
+    * elements with get()+when each measured 21% on `x_dedup_incremental`
+    * at sf1; this form measures at the unguarded cost (docs/SCALING.md
+    * §"Dedup / text"). */
   private def sigAt(i: Int, k: Int): Column =
     if (i == 0)
-      // the isNull arm guards a NULL sig array too: signatureIndex never
-      // writes one, but a hand-built index could — and under ANSI,
-      // size(NULL) is NULL, the when-condition would be false, and
-      // sig(0) would yield silently-null band digests where the
-      // contract is raise-loudly
+      // the isNull arm guards a NULL sig array too: signed never yields
+      // one, but a hand-built index could — and under ANSI, size(NULL)
+      // is NULL, the when-condition would be false, and sig(0) would
+      // yield silently-null band digests where the contract is
+      // raise-loudly
       when(size(col("sig")).isNull || size(col("sig")) < k, raise_error(lit(
         s"signature index narrower than k=$k (sig null or size(sig) < $k)" +
           " — was the index built with a smaller k?")))
         .otherwise(col("sig")(0))
     else col("sig")(i)
 
-  /** Candidate near-duplicate pairs (aId < bId) from banded minhash
-    * signatures, with exact shingle-set Jaccard computed per candidate
-    * pair. Docs shorter than one shingle are excluded (no signature).
+  /** The band projection: one row per (signed doc, band) with `cols` and
+    * the band key `band_val`, the folded digest md5("b|v1|…|vr") of band
+    * b's `k / bands` signature values. Folding the band index into the
+    * digest gives the candidate join ONE equi-key — the shape a bucketed
+    * layout can pre-partition ([[graft.streaming.Streams.writeBandedIndex]]);
+    * bucketing on a per-band digest alone still exchanges a
+    * (band, digest) join. Two docs share a key iff they agree on every
+    * value of one band, so the candidates equal those of the per-band
+    * (band_idx, md5(values)) encoding the DuckDB oracles use, unless md5
+    * collides. */
+  private[graft] def banded(signed: DataFrame, k: Int, bands: Int,
+      cols: Column*): DataFrame = {
+    require(k % bands == 0, "k must divide into bands")
+    val rows = k / bands
+    val keys = (0 until bands).map(b => md5(concat_ws("|", lit(b.toString) +:
+      (0 until rows).map(r => sigAt(b * rows + r, k)): _*).cast("binary")))
+    signed.select(cols :+ explode(array(keys: _*)).as("band_val"): _*)
+  }
+
+  /** Exact Jaccard |A∩B| / (|A| + |B| − |A∩B|) of two distinct-shingle
+    * sets with their sizes, via native array_intersect; null for two
+    * empty sets. try_divide, not a nullif on the divisor: Spark rewrites
+    * nullif into a separate projection, which would evaluate the
+    * intersection twice; here it is one common subexpression. */
+  private[graft] def jaccard(da: Column, na: Column, db: Column,
+      nb: Column): Column = {
+    val inter = size(array_intersect(da, db)).cast("long")
+    try_divide(inter.cast("double"), na + nb - inter)
+  }
+
+  /** Candidate join + verify over two signed frames (`idCol`, `sig`,
+    * `dsh`, `n_shingles`): docs sharing a band key are candidates,
+    * `keep(aId, bId)` filters them (a < b within one frame, a ≠ b across
+    * two), each pair appears once, and its two shingle sets are fetched
+    * by id-join for the exact [[jaccard]]. The band equi-join shuffles
+    * (id, band digest) rows, never all-pairs; the fetch joins move
+    * candidate-volume rows only. Returns (aId, bId, jaccard). */
+  private[graft] def verifiedPairs(left: DataFrame, right: DataFrame,
+      idCol: String, aId: String, bId: String,
+      keep: (Column, Column) => Column, k: Int, bands: Int): DataFrame = {
+    def fetch(side: DataFrame, id: String, s: String) = side.select(
+      col(idCol).as(id), col("dsh").as(s"__d$s"), col("n_shingles").as(s"__n$s"))
+    banded(left, k, bands, col(idCol).as(aId))
+      .join(banded(right, k, bands, col(idCol).as(bId)), "band_val")
+      .filter(keep(col(aId), col(bId)))
+      .select(aId, bId).distinct()
+      .join(fetch(left, aId, "a"), aId)
+      .join(fetch(right, bId, "b"), bId)
+      .select(col(aId), col(bId), jaccard(col("__da"), col("__na"),
+        col("__db"), col("__nb")).as("jaccard"))
+  }
+
+  /** Candidate near-duplicate pairs (a_id < b_id) from banded minhash
+    * signatures, with the exact shingle-set Jaccard of each candidate.
+    * Docs shorter than one shingle are excluded (no signature).
     *
-    * Shape at scale: signatures + distinct-shingle sets come from ONE
-    * fused per-row codegen pass ([[graft.functions.MinHashSig]] — no
-    * shuffle, no interpreted lambdas); the only wide operations are the
-    * band equi-join (shuffle carries (id, 16-byte band digest) rows, never
-    * all-pairs) and the two id-joins that fetch shingle sets for the few
-    * surviving candidates. Exact Jaccard is a per-pair array intersection
-    * on those candidates only. The signature table is persisted because
-    * band join + both Jaccard fetches read it; at warehouse scale it is
-    * written to a table once and reused across dedup runs. */
+    * The signature frame is persisted because the band join and both
+    * Jaccard fetches read it — and a later call over the same input
+    * plans an `InMemoryTableScan` of that entry instead of signing the
+    * text again. At warehouse scale the [[signatureIndex]] is a stored
+    * table instead ([[nearDupPairsFromIndex]]). */
   def nearDupPairs(
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 8, bands: Int = 2, shingleN: Int = 3): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    graft.functions.MinHashSig.register(df.sparkSession, shingleN, k)
-    val sig = graft.core.Tables.spread(df)
-      .select(col(idCol),
-        graft.functions.MinHashSig.minhashSig(col(textCol), shingleN, k).as("__m"))
-      .filter(col("__m").isNotNull)
-      .select(col(idCol), col("__m.sig").as("__sig"),
-        col("__m.dsh").as("__dsh"), col("__m.n_shingles").as("__n"))
+    require(k % bands == 0, "k must divide into bands") // before the persist
+    val sigs = signatureIndex(df, textCol, idCol, k, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // long-format (id, bandIdx, bandVal) so one equi-join covers all bands
-    val long = sig.select(col(idCol),
-      posexplode(array((0 until bands).map(b => bandValue(
-        (0 until rows).map(r => col("__sig")(b * rows + r)))): _*))
-        .as(Seq("band_idx", "band_val")))
-    val cand = long.select(col(idCol).as("a_id"), col("band_idx"), col("band_val"))
-      .join(long.select(col(idCol).as("b_id"), col("band_idx"), col("band_val")),
-        Seq("band_idx", "band_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    // exact Jaccard per candidate: |A∩B| via native array_intersect on the
-    // two fetched distinct-shingle sets
-    cand
-      .join(sig.select(col(idCol).as("a_id"), col("__dsh").as("__da"),
-        col("__n").as("__na")), "a_id")
-      .join(sig.select(col(idCol).as("b_id"), col("__dsh").as("__db"),
-        col("__n").as("__nb")), "b_id")
-      .withColumn("__inter", size(array_intersect(col("__da"), col("__db"))).cast("long"))
-      .select(col("a_id"), col("b_id"),
-        (col("__inter").cast("double") /
-          nullif(col("__na") + col("__nb") - col("__inter"), lit(0L)))
-          .as("jaccard"))
+    verifiedPairs(sigs, sigs, idCol, "a_id", "b_id", _ < _, k, bands)
   }
 
   /** The signature index for incremental dedup: one row per doc with its
@@ -497,16 +533,8 @@ object Dedup {
     * corpus (parquet next to the corpus); daily batches then dedup
     * against the index without ever rescanning corpus text. */
   def signatureIndex(df: DataFrame, textCol: String, idCol: String,
-      k: Int = 8, shingleN: Int = 3): DataFrame = {
-    graft.functions.MinHashSig.register(df.sparkSession, shingleN, k)
-    graft.core.Tables.spread(df)
-      .select(col(idCol),
-        graft.functions.MinHashSig.minhashSig(col(textCol), shingleN, k)
-          .as("__m"))
-      .filter(col("__m").isNotNull)
-      .select(col(idCol), col("__m.sig").as("sig"),
-        col("__m.dsh").as("dsh"), col("__m.n_shingles").as("n_shingles"))
-  }
+      k: Int = 8, shingleN: Int = 3): DataFrame =
+    signed(graft.core.Tables.spread(df), textCol, Seq(idCol), k, shingleN)
 
   /** Incremental near-dup pairs — the daily-ingest shape: candidates come
     * from banding the NEW batch against an EXISTING [[signatureIndex]],
@@ -514,19 +542,15 @@ object Dedup {
     * never old×old (the index side was already deduped when it was
     * built). Returns (new_id, old_id, jaccard) for the new batch's
     * collisions; drop new ids whose best jaccard clears the threshold,
-    * then append the survivors' signatures to the index. */
+    * then append the survivors' signatures to the index.
+    *
+    * The batch's signatures are NOT persisted: in a long-lived session
+    * nothing would unpersist them, so the band join and the Jaccard fetch
+    * each sign the (batch-sized) text. A caller that has both indexes
+    * materialized uses [[incrementalNearDupPairsFromIndex]]. */
   def incrementalNearDupPairs(newBatch: DataFrame, textCol: String,
       idCol: String, index: DataFrame, k: Int = 8,
       bands: Int = 2): DataFrame =
-    // NO persist of the batch signatures: this API runs once per ingest
-    // batch in a long-lived session, and cacheManager would pin a
-    // persisted frame until an explicit unpersist nobody holds a handle
-    // for. The two consumers (band join + jaccard fetch) recompute the
-    // signature pass instead — one extra codegen scan of the NEW BATCH,
-    // which is batch-sized by definition, against the full corpus index
-    // either way. A caller that has already materialized both indexes
-    // (the stored-table deployment shape) uses
-    // [[incrementalNearDupPairsFromIndex]] directly.
     incrementalNearDupPairsFromIndex(
       signatureIndex(newBatch, textCol, idCol, k), index, idCol, k, bands)
 
@@ -536,29 +560,8 @@ object Dedup {
     * scans. */
   def incrementalNearDupPairsFromIndex(newIndex: DataFrame,
       index: DataFrame, idCol: String, k: Int = 8,
-      bands: Int = 2): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    def long(sig: DataFrame, as: String) = sig.select(col(idCol).as(as),
-      posexplode(array((0 until bands).map(b => bandValue(
-        (0 until rows).map(r => sigAt(b * rows + r, k)))): _*))
-        .as(Seq("band_idx", "band_val")))
-    val cand = long(newIndex, "new_id")
-      .join(long(index, "old_id"), Seq("band_idx", "band_val"))
-      .filter(col("new_id") =!= col("old_id"))
-      .select("new_id", "old_id").distinct()
-    cand
-      .join(newIndex.select(col(idCol).as("new_id"), col("dsh").as("__da"),
-        col("n_shingles").as("__na")), "new_id")
-      .join(index.select(col(idCol).as("old_id"), col("dsh").as("__db"),
-        col("n_shingles").as("__nb")), "old_id")
-      .withColumn("__inter",
-        size(array_intersect(col("__da"), col("__db"))).cast("long"))
-      .select(col("new_id"), col("old_id"),
-        (col("__inter").cast("double") /
-          nullif(col("__na") + col("__nb") - col("__inter"), lit(0L)))
-          .as("jaccard"))
-  }
+      bands: Int = 2): DataFrame =
+    verifiedPairs(newIndex, index, idCol, "new_id", "old_id", _ =!= _, k, bands)
 
   /** [[nearDupPairs]] over an already-materialized [[signatureIndex]]
     * (the stored-table deployment shape): banded within-index candidate
@@ -567,30 +570,8 @@ object Dedup {
     * scan cost; an in-session frame should be checkpointed ONCE instead
     * of letting each of the three consumers here re-run its lineage). */
   def nearDupPairsFromIndex(index: DataFrame, idCol: String,
-      k: Int = 8, bands: Int = 2): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    val long = index.select(col(idCol),
-      posexplode(array((0 until bands).map(b => bandValue(
-        (0 until rows).map(r => sigAt(b * rows + r, k)))): _*))
-        .as(Seq("band_idx", "band_val")))
-    val cand = long.select(col(idCol).as("a_id"), col("band_idx"), col("band_val"))
-      .join(long.select(col(idCol).as("b_id"), col("band_idx"), col("band_val")),
-        Seq("band_idx", "band_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    cand
-      .join(index.select(col(idCol).as("a_id"), col("dsh").as("__da"),
-        col("n_shingles").as("__na")), "a_id")
-      .join(index.select(col(idCol).as("b_id"), col("dsh").as("__db"),
-        col("n_shingles").as("__nb")), "b_id")
-      .withColumn("__inter",
-        size(array_intersect(col("__da"), col("__db"))).cast("long"))
-      .select(col("a_id"), col("b_id"),
-        (col("__inter").cast("double") /
-          nullif(col("__na") + col("__nb") - col("__inter"), lit(0L)))
-          .as("jaccard"))
-  }
+      k: Int = 8, bands: Int = 2): DataFrame =
+    verifiedPairs(index, index, idCol, "a_id", "b_id", _ < _, k, bands)
 
   /** Near-dup removal: drop the higher id of every candidate pair whose
     * exact Jaccard clears the threshold. */

@@ -540,9 +540,11 @@ object Streams {
     * (what future batches band-join against) and the (id, cluster_id)
     * cluster table at `clustersDir`.
     *
-    * Per batch: new×old pairs via
-    * [[graft.ext.Dedup.incrementalNearDupPairs]] against the stored
-    * index, new×new pairs via the batch-internal LSH pass, then
+    * Per batch: the batch is signed once ([[graft.ext.Dedup.signatureIndex]],
+    * locally checkpointed), then new×old pairs via
+    * [[graft.ext.Dedup.incrementalNearDupPairsFromIndex]] against the
+    * stored index, new×new pairs via
+    * [[graft.ext.Dedup.nearDupPairsFromIndex]], then
     * [[graft.ext.Dedup.contractedMerge]] — components run on the
     * BATCH-GRAIN contracted graph, and the cluster table receives only
     * the DELTA (relabeled old rows + the batch's rows), so per-batch
@@ -582,14 +584,19 @@ object Streams {
           .getOrElse(spark.createDataFrame(new java.util.ArrayList[Row](),
             StructType(Seq(StructField("id", batch.schema(idCol).dataType),
               StructField("cluster_id", batch.schema(idCol).dataType)))))
+        // the batch is signed ONCE: the new×new pairs, the new×old pairs
+        // and the index upsert all read this checkpoint (a persist here
+        // would leave one cache entry per micro-batch behind)
+        val sigs = Dedup.signatureIndex(b, textCol, idCol).localCheckpoint()
         var merged: DataFrame = null // labels, computed under the index lease
         commitBatch(spark, indexDir, NoGuard) { stored =>
-          val within = Dedup.nearDupPairs(b, textCol, idCol)
+          val within = Dedup.nearDupPairsFromIndex(sigs, idCol)
             .filter(col("jaccard") >= threshold).select("a_id", "b_id")
           val pairs = stored match {
             case None => within
             case Some(i) =>
-              Dedup.incrementalNearDupPairs(b, textCol, idCol, i.drop("version"))
+              Dedup.incrementalNearDupPairsFromIndex(sigs, i.drop("version"),
+                  idCol)
                 .filter(col("jaccard") >= threshold)
                 .select(col("new_id").as("a_id"), col("old_id").as("b_id"))
                 .unionByName(within)
@@ -598,8 +605,8 @@ object Streams {
           // index files it read are no longer referenced after the swap
           merged = Dedup.contractedMerge(existing, pairs, "a_id", "b_id",
             maxIter = 50)
-          Some(upsertInto(stored, latestPerKey(Dedup.signatureIndex(b,
-            textCol, idCol).withColumn("version", Bound.value(batchId)),
+          Some(upsertInto(stored, latestPerKey(
+            sigs.withColumn("version", Bound.value(batchId)),
             Seq(idCol), "version").localCheckpoint(), Seq(idCol)))
         }
         val changedOld = existing
@@ -688,72 +695,68 @@ object Streams {
     *     Spark upgrade ever starts late-filtering this operator, the
     *     pinned spec fails and this contract must be revisited.
     *
-    * At 100 TB the static index long table re-shuffles per micro-batch
-    * unless the band join broadcasts; [[writeBandedIndex]] +
-    * [[nearDupStreamBucketed]] pre-bucket the index by band digest so
-    * the stream side alone moves (plan-asserted in StreamsSpec).
-    * Carrying `dsh` through the explode costs bands× replication of the
-    * shingle sets — bounded by batch size, the price of statelessness. */
+    * At 100 TB the static index is banded again for every micro-batch
+    * and exchanged for the band join unless it broadcasts;
+    * [[writeBandedIndex]] stores the banded index bucketed by its band
+    * key once, and [[nearDupStreamBucketed]] runs this same probe over
+    * it with only the stream side exchanged (plan-asserted in
+    * StreamsSpec). Carrying `dsh` through the explode costs bands×
+    * replication of the new docs' shingle sets — bounded by batch size,
+    * the price of statelessness. */
   def nearDupStream(newDocs: DataFrame, textCol: String, idCol: String,
       index: DataFrame, k: Int = 8, bands: Int = 2,
       shingleN: Int = 3, threshold: Double = 0.8,
       eventTimeCol: Option[String] = None,
       stateTtl: String = "10 minutes",
       lateness: Option[String] = None): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
     lateness.foreach { l =>
       require(intervalMicros(l) >= intervalMicros(stateTtl),
         s"lateness ($l) must be >= stateTtl ($stateTtl): the watermark " +
           "delay bounds the dedup-state window, so a smaller lateness " +
           "would silently shrink the dedup guarantee below the TTL contract")
     }
-    val rows = k / bands
-    graft.functions.MinHashSig.register(newDocs.sparkSession, shingleN, k)
-    def bandCol(sig: org.apache.spark.sql.Column, b: Int) =
-      graft.ext.Dedup.bandValue((0 until rows).map(r => sig(b * rows + r)))
-    // eventTimeCol bounds the cross-batch pair-dedup state: without it
-    // (None) dropDuplicates state holds every flagged pair for the
-    // query's lifetime — dup-volume per corpus, but unbounded over an
-    // endless ingest. With it, dropDuplicatesWithinWatermark expires
-    // pair state once the watermark passes; the documented tradeoff is
-    // that a pair re-flagged AFTER expiry is re-emitted (downstream
-    // upserts absorb this — flagging is idempotent). Late rows are NOT
-    // dropped at the dedup (measured — see the scaladoc); the watermark
-    // delay only sets pair-state lifetime, and `lateness` (>= stateTtl)
-    // widens it independently of the nominal TTL.
-    val wmDelay = lateness.getOrElse(stateTtl)
-    val src = eventTimeCol
-      .map(ts => watermarkable(newDocs, ts).withWatermark(ts, wmDelay))
-      .getOrElse(newDocs)
-    val carry = eventTimeCol.toSeq.map(col)
-    val newLong = src
-      .select(col(idCol) +: carry :+
-        graft.functions.MinHashSig.minhashSig(col(textCol), shingleN, k)
-          .as("__m"): _*)
-      .filter(col("__m").isNotNull)
-      .select(Seq(col(idCol).as("new_id"), col("__m.dsh").as("__da"),
-        col("__m.n_shingles").as("__na"),
-        posexplode(array((0 until bands).map(b => bandCol(col("__m.sig"), b)): _*))
-          .as(Seq("band_idx", "band_val"))) ++ carry: _*)
-    val idxLong = index.select(col(idCol).as("old_id"),
-      col("dsh").as("__db"), col("n_shingles").as("__nb"),
-      posexplode(array((0 until bands).map(b => bandCol(col("sig"), b)): _*))
-        .as(Seq("band_idx", "band_val")))
-    val scored = newLong.join(idxLong, Seq("band_idx", "band_val"))
+    probeIndex(newDocs, textCol, idCol, bandedIndex(index, idCol, k, bands),
+      k, bands, shingleN, threshold,
+      eventTimeCol.map(_ -> lateness.getOrElse(stateTtl)))
+  }
+
+  /** The stream probe both [[nearDupStream]] and [[nearDupStreamBucketed]]
+    * run: sign and band the new docs (carrying their shingle sets and
+    * the event-time column), join the banded index on the band key,
+    * verify each candidate's exact Jaccard and emit each flagged pair
+    * once.
+    *
+    * `watermark` = (event-time column, delay) bounds the cross-batch
+    * pair-dedup state: without it dropDuplicates state holds every
+    * flagged pair for the query's lifetime — dup-volume per corpus, but
+    * unbounded over an endless ingest. With it,
+    * dropDuplicatesWithinWatermark expires pair state once the watermark
+    * passes; a pair re-flagged AFTER expiry is re-emitted (downstream
+    * upserts absorb this — flagging is idempotent). Late rows are NOT
+    * dropped at the dedup (measured — see [[nearDupStream]]). */
+  private def probeIndex(newDocs: DataFrame, textCol: String, idCol: String,
+      indexLong: DataFrame, k: Int, bands: Int, shingleN: Int,
+      threshold: Double, watermark: Option[(String, String)]): DataFrame = {
+    import graft.ext.Dedup
+    val carry = watermark.map(_._1).toSeq
+    val src = watermark.fold(newDocs) { case (ts, delay) =>
+      watermarkable(newDocs, ts).withWatermark(ts, delay)
+    }
+    val newLong = Dedup.banded(
+      Dedup.signed(src, textCol, idCol +: carry, k, shingleN), k, bands,
+      Seq(col(idCol).as("new_id"), col("dsh").as("__da"),
+        col("n_shingles").as("__na")) ++ carry.map(col): _*)
+    val scored = newLong.join(indexLong, "band_val")
       .filter(col("new_id") =!= col("old_id"))
-      .withColumn("__inter",
-        size(array_intersect(col("__da"), col("__db"))).cast("long"))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        nullif(col("__na") + col("__nb") - col("__inter"), lit(0L)))
+      .select(Seq(col("new_id"), col("old_id"), Dedup.jaccard(col("__da"),
+        col("__na"), col("__db"), col("__nb")).as("jaccard")) ++
+        carry.map(col): _*)
       .filter(col("jaccard") >= threshold)
-    eventTimeCol match {
-      case Some(ts) => scored
-        .select(col("new_id"), col("old_id"), col("jaccard"), col(ts))
+    watermark match {
+      case Some((ts, _)) => scored
         .dropDuplicatesWithinWatermark("new_id", "old_id")
         .drop(ts)
-      case None => scored
-        .select("new_id", "old_id", "jaccard")
-        .dropDuplicates("new_id", "old_id")
+      case None => scored.dropDuplicates("new_id", "old_id")
     }
   }
 
@@ -771,27 +774,14 @@ object Streams {
 
   // ---- bucketed static index (the 100 TB layout) ---------------------------
 
-  /** Band digest with the band INDEX folded in, so the candidate join
-    * needs a single equi-key — the shape a bucketed layout can
-    * pre-partition. A cross-band digest collision would only create an
-    * extra candidate pair, which the exact Jaccard verify then drops —
-    * correctness never depends on band separation. */
-  private def foldedBand(sig: Column, b: Int, rows: Int): Column =
-    md5(concat_ws("|",
-      lit(b) +: (0 until rows).map(r => sig(b * rows + r)): _*).cast("binary"))
-
-  /** Long form of a static [[graft.ext.Dedup.signatureIndex]] — one row
-    * per (doc, band) with folded band digests. Write it with
-    * [[writeBandedIndex]]; probe it with [[nearDupStreamBucketed]]. */
-  def bandedIndexLong(index: DataFrame, idCol: String, k: Int = 8,
-      bands: Int = 2): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    index.select(col(idCol).as("old_id"), col("dsh").as("__db"),
-      col("n_shingles").as("__nb"),
-      explode(array((0 until bands).map(b => foldedBand(col("sig"), b, rows)): _*))
-        .as("band_val"))
-  }
+  /** Banded form of a static [[graft.ext.Dedup.signatureIndex]]: one row
+    * per (doc, band) with the doc's shingle set and the band key —
+    * (old_id, __db, __nb, band_val), the layout [[writeBandedIndex]]
+    * stores and [[probeIndex]] joins. */
+  private def bandedIndex(index: DataFrame, idCol: String, k: Int,
+      bands: Int): DataFrame =
+    graft.ext.Dedup.banded(index, k, bands, col(idCol).as("old_id"),
+      col("dsh").as("__db"), col("n_shingles").as("__nb"))
 
   /** Materializes the banded index bucketed by `band_val` — the
     * production layout the [[nearDupStream]] scaladoc promises: the
@@ -803,34 +793,14 @@ object Streams {
   def writeBandedIndex(index: DataFrame, idCol: String, table: String,
       buckets: Int, k: Int = 8, bands: Int = 2): Unit =
     graft.etl.Etl.writeBucketed(
-      bandedIndexLong(index, idCol, k, bands), table, "band_val", buckets)
+      bandedIndex(index, idCol, k, bands), table, "band_val", buckets)
 
   /** [[nearDupStream]] against a pre-bucketed [[writeBandedIndex]] table
-    * (pass `spark.table(name)`). Identical flagging semantics; the join
-    * key is the folded band digest alone, matching the bucket layout. */
+    * (pass `spark.table(name)`): the same probe, over the stored banded
+    * index instead of one banded per micro-batch. */
   def nearDupStreamBucketed(newDocs: DataFrame, textCol: String,
       idCol: String, indexLong: DataFrame, k: Int = 8, bands: Int = 2,
-      shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    graft.functions.MinHashSig.register(newDocs.sparkSession, shingleN, k)
-    val newLong = newDocs
-      .select(col(idCol),
-        graft.functions.MinHashSig.minhashSig(col(textCol), shingleN, k)
-          .as("__m"))
-      .filter(col("__m").isNotNull)
-      .select(col(idCol).as("new_id"), col("__m.dsh").as("__da"),
-        col("__m.n_shingles").as("__na"),
-        explode(array((0 until bands).map(b => foldedBand(col("__m.sig"), b, rows)): _*))
-          .as("band_val"))
-    newLong.join(indexLong, Seq("band_val"))
-      .filter(col("new_id") =!= col("old_id"))
-      .withColumn("__inter",
-        size(array_intersect(col("__da"), col("__db"))).cast("long"))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        nullif(col("__na") + col("__nb") - col("__inter"), lit(0L)))
-      .filter(col("jaccard") >= threshold)
-      .select("new_id", "old_id", "jaccard")
-      .dropDuplicates("new_id", "old_id")
-  }
+      shingleN: Int = 3, threshold: Double = 0.8): DataFrame =
+    probeIndex(newDocs, textCol, idCol, indexLong, k, bands, shingleN,
+      threshold, None)
 }

@@ -32,6 +32,13 @@ class ExtSpec extends SparkSpec {
     assert(j14 == 1.0)
   }
 
+  test("nearDupPairs persists its signature frame: a second call over the " +
+      "same input plans an InMemoryTableScan") {
+    Dedup.nearDupPairs(docs, "text", "doc_id").collect()
+    val again = Dedup.nearDupPairs(docs, "text", "doc_id")
+    assert(finalPlanOf(again).contains("InMemoryTableScan"))
+  }
+
   test("spanDedup keeps first occurrence per chunk and reassembles in order") {
     val df = Seq(
       (1L, "a b c d a b"),  // chunks: "a b", "c d", "a b" (self-dup)
@@ -232,6 +239,27 @@ class ExtSpec extends SparkSpec {
         narrow, "doc_id", k = 8, bands = 2).collect()
     }
     assert(msgs(e2).exists(_.contains("narrower than k=8")), e2.toString)
+    // the streaming probe and the bucketed-index write band the same
+    // stored index through the same guard
+    val e4 = intercept[Exception] {
+      graft.streaming.Streams.nearDupStream(docs, "text", "doc_id", narrow)
+        .collect()
+    }
+    assert(msgs(e4).exists(_.contains("narrower than k=8")), e4.toString)
+    try {
+      val e5 = intercept[Exception] {
+        graft.streaming.Streams.writeBandedIndex(narrow, "doc_id",
+          "narrow_ndidx", 2)
+      }
+      assert(msgs(e5).exists(_.contains("narrower than k=8")), e5.toString)
+    } finally {
+      // the failed write registers no table but leaves its directory
+      spark.sql("DROP TABLE IF EXISTS narrow_ndidx")
+      val dir = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), "narrow_ndidx")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(dir, true)
+    }
     // a NULL sig row (hand-built/corrupt index) must raise the same
     // loud message, not pass silently: under ANSI, size(NULL) is NULL,
     // so a bare size(sig) < k guard would be false and sig(0) would

@@ -1065,6 +1065,27 @@ class StreamsSpec extends SparkSpec {
     assert(healed(1000001L) == healed(1L))
   }
 
+  test("clusterBatchIncremental signs each batch once into a checkpoint " +
+      "and leaves no cache entry behind") {
+    val docs = graft.core.Tables.load(spark, sf001, "documents")
+      .select("doc_id", "text")
+    val base = java.nio.file.Files.createTempDirectory("graft-ccnocache")
+    spark.catalog.clearCache()
+    Seq((Long.MinValue, 120L), (120L, 320L), (320L, Long.MaxValue))
+      .zipWithIndex.foreach { case ((lo, hi), i) =>
+        Streams.clusterBatchIncremental(
+          docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
+          "text", "doc_id", base.resolve("index").toString,
+          base.resolve("clusters").toString, 0.8, batchId = i.toLong)
+      }
+    assert(spark.read.parquet(base.resolve("clusters").toString).count() ==
+      docs.count())
+    val cache = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "a micro-batch left a persisted frame behind")
+  }
+
   test("packBatchIncremental: an existing-but-EMPTY manifest table reads " +
       "as 'no committed batch' (null-safe watermark), not an NPE") {
     val base = java.nio.file.Files.createTempDirectory("graft-packempty")
