@@ -625,9 +625,8 @@ object Curation {
   }
 
   /** The composition point: split against PRECOMPUTED near-dup clusters
-    * ((id, cluster_id), the [[Dedup.clusterPairs]] /
-    * [[Dedup.clusterPairsStar]] contract — singletons may be absent, they
-    * default to their own id). A pipeline that already ran near-dedup
+    * ((id, cluster_id), the [[Dedup.clusterPairs]] contract — singletons
+    * may be absent, they default to their own id). A pipeline that already ran near-dedup
     * feeds its cluster frame here and pays LSH + connected components
     * ONCE end-to-end; the self-contained overload above stays the
     * convenience path. */

@@ -595,9 +595,9 @@ object Dedup {
     * original), so a handful of rounds closes them; rounds run FUSED in
     * pairs — one persist + one count() action (a single scalar to the
     * driver, never the data) covers two propagation hops, halving driver
-    * round-trips on deeper chains. At larger diameters the classic
-    * large-star/small-star contraction would cut the hop count itself —
-    * same join shape.
+    * round-trips on deeper chains. Below `spark.graft.cc.localMaxEdges`
+    * directed edges with integral ids the same labels come from a driver
+    * union-find instead (see the gate below).
     *
     * Runs to the fix point; `maxIter` is a safety rail against adversarial
     * diameters and THROWS when exceeded rather than silently returning
@@ -686,16 +686,17 @@ object Dedup {
       throw new IllegalStateException(
         s"clusterPairs: min-label propagation did not converge in $maxIter " +
           "rounds (component diameter exceeds the safety rail); raise " +
-          "maxIter or switch to clusterPairsStar (large-star/small-star)")
+          "maxIter, or raise spark.graft.cc.localMaxEdges above the " +
+          "graph's directed edge count to take the driver union-find")
     lastRounds = iter
     val out = labels.select(col("id"), col("label").as("cluster_id"))
     edges.unpersist()
     out
   }
 
-  /** Dev telemetry: propagation/contraction rounds the LAST
-    * clusterPairs/clusterPairsStar call on this JVM executed — scaling
-    * attribution only (docs/SCALING.md), never a correctness input.
+  /** Dev telemetry: propagation rounds the LAST clusterPairs call on
+    * this JVM executed — scaling attribution only (docs/SCALING.md),
+    * never a correctness input.
     * 0 = the size-gated local union-find path ran (no rounds). */
   @volatile private[graft] var lastRounds: Int = 0
 
@@ -754,93 +755,6 @@ object Dedup {
         col("cluster_id").cast(idType).as("cluster_id")))
   }
 
-  /** Connected components via alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the ADVERSARIAL-DIAMETER path: converges in O(log n)
-    * rounds on any graph, where [[clusterPairs]]' min-label propagation
-    * pays O(diameter) rounds. Per round it costs two groupBy+join passes
-    * (vs one for propagation), so propagation stays the default for
-    * near-dup graphs (shallow stars); switch here when components can be
-    * long chains — sessionized click paths, citation chains, linked
-    * records.
-    *
-    * Same contract as [[clusterPairs]]: returns (id, cluster_id),
-    * cluster_id = smallest member id; throws rather than returning split
-    * clusters if `maxIter` rounds don't reach the star fix point.
-    */
-  def clusterPairsStar(pairs: DataFrame, aCol: String = "a_id",
-      bCol: String = "b_id", maxIter: Int = 25): DataFrame = {
-    // canonical undirected edge set: (u < v), no loops, distinct
-    def canon(e: DataFrame): DataFrame =
-      e.select(least(col("u"), col("v")).as("u"),
-          greatest(col("u"), col("v")).as("v"))
-        .where(col("u") =!= col("v")).distinct()
-
-    // large-star: every neighbor v > u rewires to m = min(Γ(u) ∪ {u})
-    def largeStar(e: DataFrame): DataFrame = {
-      val dir = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = dir.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      canon(dir.join(m, "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")))
-    }
-    // small-star: all smaller neighbors (and u itself) rewire to the min
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val m = dir.groupBy("u").agg(min("v").as("m"))
-      canon(dir.join(m, "u")
-        .select(explode(array(
-          struct(col("v").as("x"), col("m").as("y")),
-          struct(col("u").as("x"), col("m").as("y")))).as("e"))
-        .select(col("e.x").as("u"), col("e.y").as("v")))
-    }
-    // edge-set fingerprint: one tiny aggregate per round (count + order-
-    // independent hash sum) — a scalar to the driver, never the data
-    def fingerprint(e: DataFrame): (Long, String) = {
-      // decimal sum: a long sum of 64-bit hashes overflows under ANSI
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).first()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toPlainString)
-    }
-
-    // localCheckpoint each round: truncates BOTH the lineage and the
-    // logical plan — without it the plan nests two star passes per round
-    // and analyzer time explodes after ~8 rounds (propagation gets away
-    // without this because shallow graphs converge in 2-3 rounds)
-    var edges = canon(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
-      .localCheckpoint()
-    var fp = fingerprint(edges)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      edges = next
-      fp = nfp
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"clusterPairsStar: star contraction did not reach the fix point " +
-          s"in $maxIter rounds; raise maxIter")
-    lastRounds = iter
-    // fix point = disjoint stars canonicalized as (center, leaf) with
-    // center < leaf: leaves take the center's label, centers themselves.
-    // canon() drops self-loops, so an id appearing ONLY as (x, x) would
-    // vanish — restore every input node, defaulting to its own label,
-    // to keep the clusterPairs contract (singletons included).
-    val nodes = pairs.select(col(aCol).as("id"))
-      .union(pairs.select(col(bCol).as("id"))).distinct()
-    val labels = edges.select(col("u").as("id"), col("u").as("cluster_id"))
-      .union(edges.select(col("v").as("id"), col("u").as("cluster_id")))
-      .distinct()
-    nodes.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-  }
-
   /** Incremental connected-components maintenance: fold one ingest
     * batch's near-dup pairs into an existing corpus clustering without
     * re-running components over the corpus — the cluster-table analogue
@@ -850,8 +764,8 @@ object Dedup {
     *
     * Inputs: `existing` = the maintained `(id, cluster_id)` table, one
     * row per corpus doc including singletons, cluster_id = smallest
-    * member id (i.e. a CONVERGED [[clusterPairs]]/[[clusterPairsStar]]
-    * output extended with self-labeled singletons); `newIds` = every doc
+    * member id (i.e. a CONVERGED [[clusterPairs]] output extended with
+    * self-labeled singletons); `newIds` = every doc
     * id of the new batch as a column `id` (singletons included; disjoint
     * from `existing`); `newPairs` = the batch's near-dup pairs — the
     * new×old shape [[incrementalNearDupPairs]] returns plus the batch's

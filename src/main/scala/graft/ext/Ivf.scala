@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * driver / in literals — assignment is a per-row codegen'd expression, so
   * cell assignment is a map-only pass. At warehouse scale the corpus is
   * written partitioned by `cell`, so a query reads `nprobe` partitions,
-  * not the corpus. Training is Lloyd's algorithm where each iteration is
-  * one distributed aggregation (posexplode → avg per (cell, dim)) — the
-  * driver only ever holds k × dim numbers.
+  * not the corpus. Training is the one Lloyd's kernel ([[lloyd]], shared
+  * with PQ and IVF-PQ): each iteration is one distributed aggregation
+  * (posexplode → avg per (cell, dim)), and the driver only ever holds
+  * k × dim numbers.
   *
   * Deterministic: initial centroids are a hash-ordered sample of k
   * vectors (md5 over a fixed salt + id) — corpus-spanning regardless of
@@ -57,7 +58,8 @@ object Ivf {
       centroids: Seq[Seq[Double]]): Column =
     graft.functions.VectorOps.nearestCentroid(spark, emb, centroids)
 
-  /** Lloyd's k-means on the embedding column; returns k centroids.
+  /** Lloyd's k-means on the embedding column; returns k centroids: the
+    * `m = 1` case of the one k-means kernel, [[lloyd]].
     *
     * `roundMeansTo`: when set, every recomputed mean is rounded to that
     * many decimals (HALF_UP, after a +1e-9 nudge) before the next
@@ -68,52 +70,63 @@ object Ivf {
     * uses the rounded form on both sides. Seeds are exact float casts
     * and are never rounded. */
   def train(corpus: DataFrame, embCol: String, idCol: String, k: Int,
-      iters: Int = 5, roundMeansTo: Option[Int] = None): Seq[Seq[Double]] = {
-    var centroids: Seq[Seq[Double]] = initSample(corpus, embCol, idCol, k)
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-    // dim from the sampled seed rows — the dedicated
-    // `corpus.select(size(emb)).first()` probe was one more
-    // driver-blocking job per training for a value the sample already
-    // carries (r19; dims are uniform by the operator's contract)
-    val dim = centroids.headOption.map(_.size).getOrElse(0)
-    require(dim > 0, s"cannot train IVF on an empty corpus or embeddings (dim $dim)")
+      iters: Int = 5, roundMeansTo: Option[Int] = None): Seq[Seq[Double]] =
+    lloyd(corpus, embCol, idCol, 1, k, iters, roundMeansTo).head
+
+  /** The one Lloyd's k-means kernel behind [[train]] (m = 1),
+    * [[Pq.train]] and [[IvfPq.build]]: k-means in each of `m` equal
+    * slices of the embedding, seeded from [[initSample]] (exact double
+    * casts). Returns m codebooks: books(j)(c) is centroid c of subspace j.
+    *
+    * Each iteration is ONE distributed aggregation: the m nearest-centroid
+    * indexes are assigned in a projection BELOW the posexplode, so each
+    * evaluates once per row (next to posexplode in one projection they
+    * would re-evaluate per exploded element, dim× the work), then values
+    * average per (subspace, cell, pos). Only the k·dim means reach the
+    * driver; a cell that drew no rows keeps its centroid. */
+  private[ext] def lloyd(corpus: DataFrame, embCol: String, idCol: String,
+      m: Int, k: Int, iters: Int,
+      roundMeansTo: Option[Int]): Seq[Seq[Seq[Double]]] = {
+    val seeds = initSample(corpus, embCol, idCol, k)
+      .map(_.getSeq[Any](0).map {
+        case f: Float => f.toDouble
+        case d: Double => d
+        case n: Number => n.doubleValue()
+      }.toIndexedSeq).toSeq
+    // dim from the sampled seed rows: no probe job (dims are uniform by
+    // the operator's contract)
+    val dim = seeds.headOption.map(_.size).getOrElse(0)
+    require(dim > 0,
+      s"cannot train k-means on an empty corpus or embeddings (dim $dim)")
+    require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
+    val subDim = dim / m
+    def parity(x: Double): Double = roundMeansTo.fold(x)(s =>
+      BigDecimal(x + 1e-9).setScale(s, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    var books: Seq[Seq[Seq[Double]]] = (0 until m).map(j =>
+      seeds.map(_.slice(j * subDim, (j + 1) * subDim)))
+    val jOf = (col("pos") / subDim).cast("int") // subspace of a position
     (1 to iters).foreach { _ =>
-      // cell assignment in a PROJECTION BELOW the Generate, exploded in a
-      // second select — evaluated once per row (Generate only forwards
-      // `cell` per emitted element; CollapseProject cannot merge a Project
-      // through Generate). r19: this replaces the r11 assign-then-JOIN
-      // shape, which shuffled the full exploded corpus (n·dim rows) plus
-      // the assignment frame EVERY iteration just to glue `cell` onto
-      // `(pos, v)` — guide §2.4, remove shuffles outright: the only
-      // remaining exchange per iteration is the k·dim-group partial
-      // aggregate. (Putting nearestCell NEXT TO posexplode in one
-      // projection would re-evaluate it per exploded element — dim× the
-      // work; the two-step select keeps exactly one evaluation per row.)
-      val assigned = corpus
-        .select(nearestCell(corpus.sparkSession, col(embCol), centroids)
-          .as("cell"), col(embCol))
-        .select(col("cell"), posexplode(col(embCol)).as(Seq("pos", "v")))
-      val means = assigned.groupBy("cell", "pos")
-        .agg(avg(col("v").cast("double")).as("m"))
-        .collect().map(r => (r.getAs[Int]("cell"), r.getAs[Int]("pos"),
-          r.getAs[Double]("m")))
-      val byCell = means.groupBy(_._1)
-      def parity(m: Double): Double = roundMeansTo match {
-        case Some(s) => BigDecimal(m + 1e-9)
-          .setScale(s, BigDecimal.RoundingMode.HALF_UP).toDouble
-        case None => m
-      }
-      centroids = centroids.zipWithIndex.map { case (old, i) =>
-        byCell.get(i) match {
-          case Some(ms) =>
-            val arr = new Array[Double](dim)
-            ms.foreach { case (_, p, m) => arr(p) = parity(m) }
-            arr.toSeq
-          case None => old // empty cell keeps its centroid
+      val means = corpus
+        .select(array((0 until m).map(j =>
+          nearestCell(corpus.sparkSession, Pq.subspace(embCol, j, m, subDim),
+            books(j))): _*).as("__cells"), col(embCol))
+        .select(col("__cells"), posexplode(col(embCol)).as(Seq("pos", "v")))
+        .select(jOf.as("j"), pmod(col("pos"), lit(subDim)).as("p"),
+          element_at(col("__cells"), jOf + 1).as("cell"), col("v"))
+        .groupBy("j", "cell", "p")
+        .agg(avg(col("v").cast("double")).as("mn"))
+        .collect()
+        .map(r => ((r.getAs[Int]("j"), r.getAs[Int]("cell"),
+          r.getAs[Int]("p")), r.getAs[Double]("mn"))).toMap
+      books = books.zipWithIndex.map { case (book, j) =>
+        book.zipWithIndex.map { case (old, c) =>
+          if (means.contains((j, c, 0)))
+            (0 until subDim).map(p => parity(means((j, c, p))))
+          else old // empty cell
         }
       }
     }
-    centroids
+    books
   }
 
   /** Cell assignment column for writing the corpus partitioned by cell. */
@@ -132,9 +145,8 @@ object Ivf {
   def probedCells(emb: Column, centroids: Seq[Seq[Double]],
       nprobe: Int): Column = {
     require(nprobe >= 1 && nprobe <= centroids.size, "1 <= nprobe <= k")
-    val cents = array(centroids.map(c => array(c.map(lit): _*)): _*)
     val paired = zip_with(
-      transform(cents, c => aggregate(
+      transform(matrixLit(centroids), c => aggregate(
         zip_with(c, emb, (a, b) => (a - b.cast("double")) * (a - b.cast("double"))),
         lit(0.0), _ + _)),
       sequence(lit(0), lit(centroids.size - 1)),
@@ -154,38 +166,56 @@ object Ivf {
   def annJoin(queries: DataFrame, corpus: DataFrame, embCol: String,
       idCol: String, centroids: Seq[Seq[Double]], k: Int,
       nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     graft.functions.VectorOps.register(corpus.sparkSession)
     val c = withCell(corpus, embCol, centroids)
       .select(col(idCol).as("nbr_id"), col(embCol).as("__nbr_emb"),
         col("cell"))
     val q = queries.select(col(idCol).as("q_id"), col(embCol).as("__q_emb"),
       explode(probedCells(col(embCol), centroids, nprobe)).as("cell"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("nbr_id"))
-    q.join(c, "cell")
+    topKPerQuery(q.join(c, "cell")
       .select(col("q_id"), col("nbr_id"),
         Similarity.cosineCodegen(col("__q_emb"), col("__nbr_emb"))
-          .as("cosine"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k).drop("__rn")
+          .as("cosine")), col("cosine").desc, k)
   }
 
   /** ANN search: exact cosine within the `nprobe` cells nearest the query. */
   def annTopK(corpus: DataFrame, embCol: String, idCol: String,
       centroids: Seq[Seq[Double]], query: Seq[Double], k: Int,
       nprobe: Int): DataFrame = {
-    val cells = centroids.zipWithIndex.map { case (c, i) =>
-      val d = c.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum
-      (d, i)
-    }.sortBy(x => (x._1, x._2)).take(nprobe).map(_._2)
     val q = array(query.map(lit): _*)
     graft.functions.VectorOps.register(corpus.sparkSession)
     withCell(corpus, embCol, centroids)
-      .filter(col("cell").isin(cells.map(x => x: Any): _*))
+      .filter(col("cell").isin(nearestCells(centroids, query, nprobe): _*))
       .select(col(idCol),
         Similarity.cosineCodegen(col(embCol), q).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
+  }
+
+  /** The `nprobe` cells nearest a driver-side query vector by squared
+    * L2 to the centroids, ties to the lower cell index: the probe list of
+    * the single-query searches ([[annTopK]], [[IvfPq.search]]). */
+  private[ext] def nearestCells(centroids: Seq[Seq[Double]],
+      query: Seq[Double], nprobe: Int): Seq[Int] =
+    centroids.zipWithIndex.map { case (c, i) => (sqL2(c, query), i) }
+      .sorted.take(nprobe).map(_._2)
+
+  /** Squared L2 distance of two driver-side vectors. */
+  private[ext] def sqL2(a: Seq[Double], b: Seq[Double]): Double =
+    a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+
+  /** A k × dim centroid matrix as a nested array literal. */
+  private[ext] def matrixLit(rows: Seq[Seq[Double]]): Column =
+    array(rows.map(r => array(r.map(lit): _*)): _*)
+
+  /** The tail of the batch searches ([[annJoin]], [[IvfPq.searchBatch]]):
+    * each `q_id`'s k best `nbr_id` rows by `order`, ties to the lower
+    * `nbr_id`. */
+  private[ext] def topKPerQuery(pairs: DataFrame, order: Column,
+      k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("q_id")
+      .orderBy(order, col("nbr_id"))
+    pairs.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= k).drop("__rn")
   }
 }

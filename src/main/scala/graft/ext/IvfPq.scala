@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: the index frame is (id, cell, m codes) — bytes per
   * vector; write it partitioned by `cell` and a query reads `nprobe`
   * partitions and scores codes with per-cell lookup tables (no float
-  * math per dim, no shuffle, one TakeOrdered). Build cost is the two
-  * trainings (both distributed Lloyd's with only centroids on the
-  * driver) plus one encode projection.
+  * math per dim, no shuffle, one TakeOrdered). Build cost is two runs of
+  * the one Lloyd's kernel ([[Ivf.lloyd]]: the cells, then the residual
+  * codebooks, only centroids on the driver) plus one encode projection.
   */
 object IvfPq {
 
@@ -28,7 +28,7 @@ object IvfPq {
       m: Int, k: Int = 256, iters: Int = 3): (DataFrame, Index) = {
     val spark = corpus.sparkSession
     val cells = Ivf.train(corpus, embCol, idCol, nCells, iters)
-    val cellsLit = array(cells.map(c => array(c.map(lit): _*)): _*)
+    val cellsLit = Ivf.matrixLit(cells)
     // checkpoint the residual frame ONCE (r19, guide §2.4): Pq.train runs
     // 1 + iters actions over it and the final encode reads it again —
     // each used to re-evaluate the nearest-cell argmin and the residual
@@ -53,30 +53,15 @@ object IvfPq {
     * score with m array lookups. Returns (idCol, adc) ascending. */
   def search(index: DataFrame, meta: Index, idCol: String,
       query: Seq[Double], k: Int, nprobe: Int): DataFrame = {
-    val m = meta.book.m
-    val subDim = meta.book.subDim
-    require(query.size == m * subDim, "query dim mismatch")
-    val probed = meta.cells.zipWithIndex.map { case (c, i) =>
-      (c.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum, i)
-    }.sortBy(x => (x._1, x._2)).take(nprobe).map(_._2)
+    require(query.size == meta.book.m * meta.book.subDim, "query dim mismatch")
+    val probed = Ivf.nearestCells(meta.cells, query, nprobe)
     // per probed cell: the RESIDUAL query's m × k' squared-L2 table
-    val tables = array(probed.map { ci =>
-      val qr = query.zip(meta.cells(ci)).map { case (q, c) => q - c }
-      array(meta.book.centroids.zipWithIndex.map { case (cents, j) =>
-        val qs = qr.slice(j * subDim, (j + 1) * subDim)
-        array(cents.map(c =>
-          lit(c.zip(qs).map { case (a, b) => (a - b) * (a - b) }.sum)): _*)
-      }: _*)
-    }: _*)
-    val probedLit = array(probed.map(lit): _*)
+    val tables = array(probed.map(ci => Pq.distanceTable(meta.book,
+      query.zip(meta.cells(ci)).map { case (q, c) => q - c })): _*)
     val table = element_at(tables,
-      array_position(probedLit, col("cell")).cast("int"))
-    val adc = aggregate(
-      zip_with(col("pq_code"), sequence(lit(1), lit(m)),
-        (c, j) => element_at(element_at(table, j), c + 1)),
-      lit(0.0), (acc, x) => acc + x)
-    index.filter(col("cell").isin(probed.map(x => x: Any): _*))
-      .select(col(idCol), adc.as("adc"))
+      array_position(array(probed.map(lit): _*), col("cell")).cast("int"))
+    index.filter(col("cell").isin(probed: _*))
+      .select(col(idCol), Pq.adc(col("pq_code"), table, meta.book.m).as("adc"))
       .orderBy(col("adc").asc, col(idCol))
       .limit(k)
   }
@@ -92,20 +77,17 @@ object IvfPq {
     * k rows per query, ADC ascending. */
   def searchBatch(index: DataFrame, meta: Index, queries: DataFrame,
       embCol: String, idCol: String, k: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val m = meta.book.m
     val subDim = meta.book.subDim
-    val cellsLit = array(meta.cells.map(c => array(c.map(lit): _*)): _*)
     // m × k' × subDim codebook literal
-    val bookLit = array(meta.book.centroids.map(b =>
-      array(b.map(c => array(c.map(lit): _*)): _*)): _*)
+    val bookLit = array(meta.book.centroids.map(Ivf.matrixLit): _*)
     val q = queries
       .select(col(idCol).as("q_id"), col(embCol).as("__q"),
         explode(Ivf.probedCells(col(embCol), meta.cells, nprobe)).as("cell"))
       // residual against THIS probed cell's centroid, then the m × k'
       // squared-L2 table of its subvectors vs the codebook
       .withColumn("__qr", zip_with(col("__q"),
-        element_at(cellsLit, col("cell") + 1),
+        element_at(Ivf.matrixLit(meta.cells), col("cell") + 1),
         (a, b) => a.cast("double") - b))
       .withColumn("__table",
         transform(sequence(lit(0), lit(m - 1)), j =>
@@ -115,16 +97,10 @@ object IvfPq {
                 (a, b) => (a - b) * (a - b)),
               lit(0.0), (acc, x) => acc + x))))
       .select(col("q_id"), col("cell"), col("__table"))
-    val adc = aggregate(
-      zip_with(col("pq_code"), sequence(lit(1), lit(m)),
-        (c, j) => element_at(element_at(col("__table"), j), c + 1)),
-      lit(0.0), (acc, x) => acc + x)
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adc").asc, col("nbr_id"))
-    q.join(index.select(col(idCol).as("nbr_id"), col("cell"),
+    Ivf.topKPerQuery(q.join(index.select(col(idCol).as("nbr_id"), col("cell"),
         col("pq_code")), "cell")
-      .select(col("q_id"), col("nbr_id"), adc.as("adc"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k).drop("__rn")
+      .select(col("q_id"), col("nbr_id"),
+        Pq.adc(col("pq_code"), col("__table"), m).as("adc")),
+      col("adc").asc, k)
   }
 }

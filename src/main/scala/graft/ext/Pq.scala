@@ -10,15 +10,15 @@ import org.apache.spark.sql.functions._
   * 10B-vector corpus drops from terabytes to tens of gigabytes and ANN
   * scoring becomes m table lookups per row instead of d multiplies.
   *
-  * Scale shape: codebooks are tiny (m × k × d/m doubles) and train on a
-  * sample via the same distributed Lloyd's iterations as [[Ivf.train]] —
-  * the driver only ever holds centroids. Encoding is a per-row
-  * expression pass (the codegen `NearestCentroid` per subspace — no
-  * UDF, no shuffle). Search precomputes the query's m × k distance
-  * table on the driver and scores rows with m array lookups
-  * (asymmetric distance computation); combine with IVF cell pruning for
-  * the full IVF-PQ shape: partition by cell, scan `nprobe` cells,
-  * score codes.
+  * Scale shape: codebooks are tiny (m × k × d/m doubles) and train with
+  * the one Lloyd's kernel ([[Ivf.lloyd]], all m subspaces in one
+  * distributed aggregation per iteration) — the driver only ever holds
+  * centroids. Encoding is a per-row expression pass (the codegen
+  * `NearestCentroid` per subspace — no UDF, no shuffle). Search
+  * precomputes the query's m × k distance table on the driver and
+  * scores rows with m array lookups (asymmetric distance computation);
+  * combine with IVF cell pruning for the full IVF-PQ shape: partition by
+  * cell, scan `nprobe` cells, score codes.
   */
 object Pq {
 
@@ -29,69 +29,20 @@ object Pq {
     require(centroids.size == m && centroids.forall(_.forall(_.size == subDim)))
   }
 
-  private def subspace(embCol: String, j: Int, subDim: Int): Column =
-    slice(col(embCol), j * subDim + 1, subDim)
+  /** Subvector j of `subDim` dims (the whole embedding when m = 1). */
+  private[ext] def subspace(embCol: String, j: Int, m: Int,
+      subDim: Int): Column =
+    if (m == 1) col(embCol) else slice(col(embCol), j * subDim + 1, subDim)
 
-  /** Train per-subspace codebooks with distributed Lloyd's iterations.
-    * ALL m subspaces update in ONE job per iteration (per-row assignment
-    * array → dims exploded once → mean per (subspace, cell, pos)) — m
-    * separate [[Ivf.train]] calls would pay m× the scheduling and scan
-    * cost for identical results. `k` ≤ 256 keeps codes byte-sized.
-    * Deterministic: initialized from a hash-ordered sample of k vectors
-    * ([[Ivf.initSample]] — corpus-spanning even when ids correlate with
-    * ingest slices), fixed iteration count. */
+  /** Train per-subspace codebooks: [[Ivf.lloyd]] over m subspaces, ALL
+    * updating in ONE job per iteration (m separate [[Ivf.train]] calls
+    * would pay m× the scheduling and scan cost for identical results).
+    * `k` ≤ 256 keeps codes byte-sized. Deterministic: hash-ordered seed
+    * sample, fixed iteration count. */
   def train(corpus: DataFrame, embCol: String, idCol: String, m: Int,
       k: Int = 256, iters: Int = 3): Codebook = {
-    val spark = corpus.sparkSession
-    // float corpora and double residual vectors (IvfPq) both train here
-    val first = Ivf.initSample(corpus, embCol, idCol, k)
-      .map(_.getSeq[Any](0).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-        case n: Number => n.doubleValue()
-      }.toIndexedSeq)
-    // dim from the sampled seed rows (one fewer driver-blocking probe
-    // job, r19; dims are uniform by the operator's contract)
-    val dim = first.headOption.map(_.size).getOrElse(0)
-    require(dim > 0 && dim % m == 0,
-      s"dim $dim must divide into m=$m subspaces")
-    val subDim = dim / m
-    var books: Seq[Seq[Seq[Double]]] = (0 until m).map(j =>
-      first.toSeq.map(_.slice(j * subDim, (j + 1) * subDim)))
-    (1 to iters).foreach { _ =>
-      // assignments in a PROJECTION BELOW the Generate, exploded in a
-      // second select (same shape as Ivf.train, r19): the m
-      // nearest-centroid expressions evaluate once per row and Generate
-      // forwards the m-int `__cells` array per element — next to
-      // posexplode in ONE projection they would re-evaluate per exploded
-      // element (dim× the work), and the previous assign-then-JOIN shape
-      // shuffled the full exploded corpus every iteration just to glue
-      // the assignment on (guide §2.4).
-      val means = corpus
-        .select(array((0 until m).map(j =>
-          graft.functions.VectorOps.nearestCentroid(spark,
-            subspace(embCol, j, subDim), books(j))): _*).as("__cells"),
-          col(embCol))
-        .select(col("__cells"), posexplode(col(embCol)).as(Seq("pos", "v")))
-        .select((col("pos") / subDim).cast("int").as("j"),
-          pmod(col("pos"), lit(subDim)).as("p"),
-          element_at(col("__cells"),
-            (col("pos") / subDim).cast("int") + 1).as("cell"),
-          col("v"))
-        .groupBy("j", "cell", "p")
-        .agg(avg(col("v").cast("double")).as("mn"))
-        .collect()
-        .map(r => ((r.getAs[Int]("j"), r.getAs[Int]("cell"),
-          r.getAs[Int]("p")), r.getAs[Double]("mn"))).toMap
-      books = books.zipWithIndex.map { case (book, j) =>
-        book.zipWithIndex.map { case (old, c) =>
-          if (means.contains((j, c, 0)))
-            (0 until subDim).map(p => means((j, c, p)))
-          else old // empty cell keeps its centroid
-        }
-      }
-    }
-    Codebook(m, subDim, books)
+    val books = Ivf.lloyd(corpus, embCol, idCol, m, k, iters, None)
+    Codebook(m, books.head.head.size, books)
   }
 
   /** Adds `codeCol` (array<int>, one nearest-centroid index per
@@ -102,7 +53,7 @@ object Pq {
     val spark = corpus.sparkSession
     corpus.withColumn(codeCol, array((0 until book.m).map(j =>
       graft.functions.VectorOps.nearestCentroid(spark,
-        subspace(embCol, j, book.subDim), book.centroids(j))): _*))
+        subspace(embCol, j, book.m, book.subDim), book.centroids(j))): _*))
   }
 
   /** Top-k by asymmetric distance: the query's m × k squared-L2 table is
@@ -112,18 +63,26 @@ object Pq {
   def adcTopK(encoded: DataFrame, codeCol: String, idCol: String,
       book: Codebook, query: Seq[Double], k: Int): DataFrame = {
     require(query.size == book.m * book.subDim, "query dim mismatch")
-    val table = array(book.centroids.zipWithIndex.map { case (cents, j) =>
-      val q = query.slice(j * book.subDim, (j + 1) * book.subDim)
-      array(cents.map(c =>
-        lit(c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)): _*)
-    }: _*)
-    val adc = aggregate(
-      zip_with(col(codeCol),
-        sequence(lit(1), lit(book.m)),
-        (c, j) => element_at(element_at(table, j), c + 1)),
-      lit(0.0), (acc, x) => acc + x)
-    encoded.select(col(idCol), adc.as("adc"))
+    encoded.select(col(idCol),
+        adc(col(codeCol), distanceTable(book, query), book.m).as("adc"))
       .orderBy(col("adc").asc, col(idCol))
       .limit(k)
   }
+
+  /** The query's m × k squared-L2 table against the codebook as a
+    * driver-computed literal: row j holds subvector j's distance to each
+    * centroid of subspace j. */
+  private[ext] def distanceTable(book: Codebook, query: Seq[Double]): Column =
+    array(book.centroids.zipWithIndex.map { case (cents, j) =>
+      val q = query.slice(j * book.subDim, (j + 1) * book.subDim)
+      array(cents.map(c => lit(Ivf.sqL2(c, q))): _*)
+    }: _*)
+
+  /** Asymmetric distance of a code column: Σ_j table[j][code[j]], m
+    * array lookups and adds per row. */
+  private[ext] def adc(code: Column, table: Column, m: Int): Column =
+    aggregate(
+      zip_with(code, sequence(lit(1), lit(m)),
+        (c, j) => element_at(element_at(table, j), c + 1)),
+      lit(0.0), (acc, x) => acc + x)
 }

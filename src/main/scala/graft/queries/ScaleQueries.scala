@@ -542,8 +542,10 @@ object ScaleQueries {
 
     // Fixed-width histogram over portable bucket arithmetic (no
     // engine-specific width_bucket): quantity distribution in 10 bins.
+    // DuckDB widens least/greatest over INT to BIGINT; the outer cast
+    // keeps the oracle's bucket INTEGER like Profile.histogram's.
     Q("x_histogram",
-      """SELECT least(9, greatest(0, CAST(floor((l_quantity - 1.0) / 50.0 * 10) AS INT))) AS bucket,
+      """SELECT CAST(least(9, greatest(0, CAST(floor((l_quantity - 1.0) / 50.0 * 10) AS INT))) AS INT) AS bucket,
         |       CAST(count(*) AS BIGINT) AS n
         |FROM lineitem WHERE l_quantity IS NOT NULL
         |GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, d) =>

@@ -288,13 +288,29 @@ class ExtSpec extends SparkSpec {
     assert(kept == Set(1L, 3L))
   }
 
+  /** `clusterPairs` on both sides of its driver gate: the union-find at
+    * the default `spark.graft.cc.localMaxEdges` budget and min-label
+    * propagation at budget 0. Checks that each side took its path and
+    * that both return the same labels. */
+  private def clustersBothWays(
+      pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val local = Dedup.clusterPairs(pairs).as[(Long, Long)].collect().toMap
+    assert(Dedup.lastRounds == 0, "the default budget takes the union-find")
+    val dist = withSQLConf("spark.graft.cc.localMaxEdges" -> "0") {
+      val d = Dedup.clusterPairs(pairs).as[(Long, Long)].collect().toMap
+      assert(Dedup.lastRounds > 0, "budget 0 runs the propagation loop")
+      d
+    }
+    assert(local == dist, "union-find and propagation labels must agree")
+    local
+  }
+
   test("clusterPairs closes transitive chains into one component") {
     // chain 1-2-3-4-5 (diameter 4 — exercises the convergence loop past
     // the fused warm rounds) plus a separate pair 10-11
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("a_id", "b_id")
-    val got = Dedup.clusterPairs(pairs)
-      .as[(Long, Long)].collect().toMap
+    val got = clustersBothWays(pairs)
     assert((1L to 5L).forall(got(_) == 1L))
     assert(got(10L) == 10L && got(11L) == 10L)
     assert(got.size == 7)
@@ -304,14 +320,31 @@ class ExtSpec extends SparkSpec {
     // a 40-node chain (diameter 39) exercises many fused-hop iterations;
     // near-dup graphs are far shallower, so this over-covers reality
     val chain = (0L until 39L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val labels = Dedup.clusterPairs(chain)
-      .as[(Long, Long)].collect().toMap
+    val labels = clustersBothWays(chain)
     assert(labels.size == 40)
     assert(labels.values.forall(_ == 0L), "one component, min-id label")
     // and a disjoint second component keeps its own min label
     val two = chain.union(Seq((100L, 101L), (101L, 102L)).toDF("a_id", "b_id"))
-    val l2 = Dedup.clusterPairs(two).as[(Long, Long)].collect().toMap
+    val l2 = clustersBothWays(two)
     assert(l2(102L) == 100L && l2(39L) == 0L)
+  }
+
+  test("clusterPairs throws past maxIter instead of returning split " +
+      "clusters") {
+    // diameter 39 needs 40 propagation rounds; a 10-round rail must fail
+    // loudly and name both ways out
+    val chain = (0L until 39L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val e = intercept[IllegalStateException] {
+      withSQLConf("spark.graft.cc.localMaxEdges" -> "0") {
+        Dedup.clusterPairs(chain, maxIter = 10).collect()
+      }
+    }
+    assert(e.getMessage.contains("maxIter") &&
+      e.getMessage.contains("spark.graft.cc.localMaxEdges"), e.getMessage)
+    // the union-find below the budget has no rail to hit
+    val labels = Dedup.clusterPairs(chain, maxIter = 10)
+      .as[(Long, Long)].collect().toMap
+    assert(labels.size == 40 && labels.values.forall(_ == 0L))
   }
 
   test("clusterPairs: size-gated local union-find ≡ distributed loop") {
@@ -321,31 +354,9 @@ class ExtSpec extends SparkSpec {
     // random graphs including chains, self-loops and singleton pairs —
     // and that the telemetry distinguishes the two paths.
     val rnd = new scala.util.Random(41)
-    (1 to 3).foreach { trial =>
+    (1 to 3).foreach { _ =>
       val edges = Seq.fill(80)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-      val df = edges.toDF("a_id", "b_id")
-      val local = Dedup.clusterPairs(df).as[(Long, Long)].collect().toMap
-      assert(Dedup.lastRounds == 0, "small integral graph takes the local path")
-      spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-      try {
-        val dist = Dedup.clusterPairs(df).as[(Long, Long)].collect().toMap
-        assert(Dedup.lastRounds > 0, "0 threshold forces the distributed loop")
-        assert(local == dist, s"trial $trial: local labels must equal distributed")
-      } finally spark.conf.unset("spark.graft.cc.localMaxEdges")
-    }
-  }
-
-  test("clusterPairsStar matches label propagation on random graphs") {
-    val rnd = new scala.util.Random(7)
-    (1 to 5).foreach { trial =>
-      val n = 60
-      // self-loops stay IN: ids whose only pair is (x, x) must come back
-      // as singleton clusters from both implementations
-      val edges = Seq.fill(70)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      val df = edges.toDF("a_id", "b_id")
-      val prop = Dedup.clusterPairs(df).as[(Long, Long)].collect().toMap
-      val star = Dedup.clusterPairsStar(df).as[(Long, Long)].collect().toMap
-      assert(star == prop, s"trial $trial: star labels must equal propagation")
+      clustersBothWays(edges.toDF("a_id", "b_id"))
     }
   }
 
@@ -397,20 +408,12 @@ class ExtSpec extends SparkSpec {
     assert(m.size == 1002)
   }
 
-  test("clusterPairsStar keeps self-loop-only ids as singletons") {
+  test("clusterPairs keeps self-loop-only ids as singletons on both " +
+      "sides of the gate") {
     val pairs = Seq((1L, 2L), (7L, 7L), (9L, 9L), (2L, 3L))
       .toDF("a_id", "b_id")
-    val star = Dedup.clusterPairsStar(pairs).as[(Long, Long)].collect().toMap
-    assert(star == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 9L))
-  }
-
-  test("clusterPairsStar closes a 200-node chain in logarithmic rounds") {
-    // diameter 199: propagation would need ~100 fused iterations;
-    // star contraction converges within its default 25-round rail
-    val chain = (0L until 199L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val labels = Dedup.clusterPairsStar(chain).as[(Long, Long)].collect().toMap
-    assert(labels.size == 200)
-    assert(labels.values.forall(_ == 0L))
+    assert(clustersBothWays(pairs) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 9L))
   }
 
   test("simhash: identical texts agree, near-dups differ in few bits") {

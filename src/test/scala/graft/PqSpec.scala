@@ -54,4 +54,11 @@ class PqSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("divide"))
   }
+
+  test("PQ on an empty corpus names the empty corpus, not the dim") {
+    val ex = intercept[IllegalArgumentException] {
+      Pq.train(corpus.limit(0), "embedding", "vec_id", m = 4, k = 4)
+    }
+    assert(ex.getMessage.contains("empty corpus"), ex.getMessage)
+  }
 }

@@ -59,4 +59,20 @@ class SemDedupSpec extends SparkSpec {
       .as[(Long, Int, Int)].collect()
     assert(flags.forall(_._3 == 1), "nothing reaches cosine 0.99999")
   }
+
+  test("building the flag frame runs no Spark job") {
+    val rnd = new scala.util.Random(5)
+    val wide = (0 until 400).map(i =>
+      (i.toLong, Array.fill(8)(rnd.nextFloat()))).toDF("vec_id", "embedding")
+    val cents = (0 until 4).map(c => Seq.tabulate(8)(p => ((c + p) % 4) / 4.0))
+    val dir = java.nio.file.Files.createTempDirectory("graft-semdedup")
+      .toString + "/corpus"
+    wide.write.parquet(dir)
+    Seq(wide.localCheckpoint(), spark.read.parquet(dir)).foreach { c =>
+      val jobs = jobsRunBy {
+        SemDedup.dedupFlagsWithCentroids(c, "embedding", "vec_id", 0.9, cents)
+      }
+      assert(jobs == 0, s"$jobs jobs while building the flag frame")
+    }
+  }
 }

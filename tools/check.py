@@ -196,7 +196,7 @@ def check_one(name):
     if [c for c,_ in gcols] != [c for c,_ in ecols]:
         print(f"FAIL {name}: columns {gcols} vs {ecols}"); return False
     if gcols != ecols:
-        print(f"WARN {name}: type drift {gcols} vs {ecols}")
+        print(f"FAIL {name}: type drift {gcols} vs {ecols}"); return False
     gsel = ", ".join(f'"{c}"' for c,_ in gcols)
     gN = con.sql("SELECT count(*) FROM got").fetchone()[0]
     eN = con.sql("SELECT count(*) FROM exp").fetchone()[0]
