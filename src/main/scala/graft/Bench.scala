@@ -159,15 +159,20 @@ object Bench {
     val total = results.values.sum
     val json =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs,"host_calibration_sec":${fmt(hostCal)},"sf":"$sfDir"}"""
-    // stdout captures get tail-truncated by harnesses; always persist the
+    // stdout captures get tail-truncated by harnesses; persist the
     // COMPLETE per-query map to a file too (SPARK_GRAFT_BENCH_OUT
     // overrides the default ./bench_full.json) so round-over-round
-    // comparison never depends on scraping a log tail.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not write $outPath: $e") }
+    // comparison never depends on scraping a log tail. A filtered run
+    // writes only to an explicit SPARK_GRAFT_BENCH_OUT, so it never
+    // overwrites the full-suite file.
+    val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(Option.when(nameFilter.isEmpty)("bench_full.json"))
+    outPath.foreach { p =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(p),
+        (json + "\n").getBytes("UTF-8"))
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] could not write $p: $e") }
+    }
     // the ONE JSON line goes out LAST, after spark.stop(), so no shutdown
     // logging can follow it and a tail-truncated capture keeps the line
     // (r17's prev-bench parse failed exactly here — VERDICT r18 item 6/7)

@@ -1,12 +1,15 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StructField, StructType}
 
 /** Shared plumbing of the size-gated driver fast paths
   * (`ext.Graph.pageRank`, `ext.Dedup.clusterPairs`): the conf-tunable
-  * edge budget and the id types a driver loop over longs accepts. Each
-  * caller keeps its own key, default and branch condition.
+  * edge budget, the id types a driver loop over longs accepts, and the
+  * frame that carries the loop's answer back. Each caller keeps its own
+  * key, default and branch condition.
   */
 private[graft] object DriverGate {
 
@@ -25,5 +28,22 @@ private[graft] object DriverGate {
   def integralIds(t: DataType): Boolean = t match {
     case LongType | IntegerType | ShortType | ByteType => true
     case _ => false
+  }
+
+  /** Rows per slice of a [[resultFrame]]. */
+  private val RowsPerSlice = 4096
+
+  /** A driver loop's answer as a DataFrame: `rows` under the non-nullable
+    * `fields`, in `min(defaultParallelism, 1 + rows / RowsPerSlice)`
+    * slices, with every long column cast back to the input's `idType`. */
+  def resultFrame(spark: SparkSession, rows: Seq[Row],
+      fields: Seq[(String, DataType)], idType: DataType): DataFrame = {
+    val schema = StructType(fields.map { case (n, t) =>
+      StructField(n, t, nullable = false) })
+    val slices = math.min(spark.sparkContext.defaultParallelism,
+      1 + rows.size / RowsPerSlice)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
+      .select(fields.map { case (n, t) =>
+        if (t == LongType) col(n).cast(idType).as(n) else col(n) }: _*)
   }
 }

@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
 
@@ -27,38 +28,33 @@ object Tables {
 
   /** Spread a DataFrame across the session's parallelism before CPU-heavy
     * per-row compute. Small local files arrive as ONE partition (splits
-    * are byte-based, `spark.sql.files.maxPartitionBytes`), which serializes
-    * expensive expressions; at warehouse scale inputs already have many
-    * splits and this becomes a no-op-sized round-robin shuffle. */
+    * are byte-based, `spark.sql.files.maxPartitionBytes`), and AQE
+    * coalesces small shuffle tails to byte-sized partition counts; either
+    * way expensive expressions run nearly single-threaded.
+    *
+    * The gate is the OPTIMIZER'S size estimate, so it runs no job: a frame
+    * estimated under parallelism × the AQE advisory partition size is
+    * round-robined to `defaultParallelism` (a tiny shuffle); anything
+    * larger already has enough splits and is returned unchanged, so the
+    * warehouse-scale path pays no extra exchange. On a frame that is
+    * already spread, Catalyst's CollapseRepartition folds the new
+    * round-robin into the existing one. A driver-built frame (a
+    * `LocalRelation`) is scanned in one slice per row up to the
+    * parallelism, so one with at least `defaultParallelism` rows is
+    * already spread and is returned unchanged. */
   def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // toRdd reads the physical plan's partition count without df.rdd's
-    // extra DeserializeToObject conversion (row encoders never engage)
-    if (df.queryExecution.toRdd.getNumPartitions >= target) df
-    else df.repartition(target)
-  }
-
-  /** [[spread]] for frames that sit on a JOIN/AGGREGATE tail, where the
-    * partition-count probe would be disastrous: `toRdd` on an adaptive
-    * plan materializes every upstream exchange to pick the final plan, so
-    * probing a lazy join tail executes the whole upstream once at plan-
-    * build time (and the repartitioned query then re-runs it). This
-    * variant gates on the OPTIMIZER'S size estimate instead — no jobs,
-    * no execution: a frame estimated under parallelism × the AQE
-    * advisory partition size is cheap to round-robin (tiny shuffle,
-    * big parallelism win for CPU-heavy per-row work downstream — AQE
-    * coalesces small shuffle tails to byte-sized partition counts that
-    * serialize expensive expressions); anything estimated larger
-    * already has enough splits and passes through untouched, so the
-    * 100 TB path never pays a probe or an extra exchange. */
-  def spreadIfSmall(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val target = sess.sparkContext.defaultParallelism
     val advisory = sess.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < BigInt(advisory) * target) df.repartition(target) else df
+    df.queryExecution.optimizedPlan match {
+      case local: LocalRelation if local.data.length >= target => df
+      case plan if plan.stats.sizeInBytes < BigInt(advisory) * target =>
+        df.repartition(target)
+      case _ => df
+    }
   }
+
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")

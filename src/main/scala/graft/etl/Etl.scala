@@ -91,34 +91,6 @@ object Etl {
     !loaded
   }
 
-  /** Computed persisted column (reference `solde_naturel AS (naissances -
-    * deces) PERSISTED`): materialize at write time. */
-  def withComputed(df: DataFrame, name: String, expr: Column): DataFrame =
-    df.withColumn(name, expr)
-
-  /** Skew-safe equi-join via key salting: the skewed (large) side gets a
-    * random-ish salt in [0, salts); the small side is replicated once per
-    * salt value. The join key becomes (key, salt), splitting a hot key
-    * across `salts` reducers. AQE's skew-join handles sort-merge skew
-    * automatically; salting is for the cases AQE can't split (e.g. a
-    * single massive key in a shuffled hash join or aggregation).
-    * Deterministic: salt derives from a hash of the whole row, not rand().
-    * Join types where the small side may emit unmatched rows (right/full
-    * outer) are rejected: the small side is replicated `salts` times, so
-    * each unmatched row would appear `salts` times in the output. */
-  def saltedJoin(large: DataFrame, small: DataFrame, key: String,
-      salts: Int, joinType: String = "inner"): DataFrame = {
-    require(Set("inner", "left", "left_outer", "leftouter", "left_semi",
-        "leftsemi", "left_anti", "leftanti").contains(joinType.toLowerCase),
-      s"saltedJoin: joinType '$joinType' would duplicate unmatched " +
-        "small-side rows (replicated per salt); use inner/left/semi/anti")
-    val l = large.withColumn("__salt",
-      pmod(hash(large.columns.toIndexedSeq.map(col): _*), lit(salts)))
-    val s = small.withColumn("__salt",
-      explode(array((0 until salts).map(lit): _*)))
-    l.join(s, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
   /** Year-partitioned fact write — the scale layout (SURVEY §4: replaces
     * the reference's fact indexes with partition pruning + DPP). */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String,

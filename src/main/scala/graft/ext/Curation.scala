@@ -324,9 +324,7 @@ object Curation {
     // runs nearly single-threaded — measured 12.4 s of x_pipeline_e2e's
     // 13.4 s contamination stage at sf1 with NO benchmark join at all
     // (deduped arrived as 7 ~1MB partitions; re-spread ran it in 4.7 s).
-    // spreadIfSmall gates on the optimizer ESTIMATE, so a lazy join tail
-    // is never probe-executed and the at-scale path adds no exchange.
-    graft.core.Tables.spreadIfSmall(docs)
+    graft.core.Tables.spread(docs)
       .select(col(idCol),
         explode_outer(array_distinct(Dedup.shingles(col(textCol), n)))
           .as("__s"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.core.DriverGate
 
 /** Deduplication operators for training-data pipelines, designed for the
@@ -398,8 +399,7 @@ object Dedup {
     * string pass + k·|shingles| md5 calls, no shuffle, no interpreted
     * lambdas). Docs with fewer than `shingleN` tokens have no signature
     * and are dropped. Row-local, so it runs unchanged on a stream; the
-    * batch callers apply [[graft.core.Tables.spread]] first (it probes
-    * `toRdd`, which a streaming frame cannot run). */
+    * batch callers apply [[graft.core.Tables.spread]] first. */
   private[graft] def signed(df: DataFrame, textCol: String,
       keep: Seq[String], k: Int, shingleN: Int): DataFrame = {
     graft.functions.MinHashSig.register(df.sparkSession, shingleN, k)
@@ -738,21 +738,9 @@ object Dedup {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val labels = parent.keysIterator
-      .map(v => org.apache.spark.sql.Row(v, find(v))).toSeq
-    val spark = edges.sparkSession
-    val longSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cluster_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    Some(spark.createDataFrame(
-        spark.sparkContext.parallelize(labels,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + labels.size / 4096))),
-        longSchema)
-      .select(col("id").cast(idType).as("id"),
-        col("cluster_id").cast(idType).as("cluster_id")))
+    Some(DriverGate.resultFrame(edges.sparkSession,
+      parent.keysIterator.map(v => org.apache.spark.sql.Row(v, find(v))).toSeq,
+      Seq("id" -> LongType, "cluster_id" -> LongType), idType))
   }
 
   /** Incremental connected-components maintenance: fold one ingest

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.core.DriverGate
 
 /** Iterative graph analytics over edge DataFrames. The connected-
@@ -262,19 +263,8 @@ object Graph {
       pr = next
       it += 1
     }
-    val spark = withDeg.sparkSession
-    val outRows = ids.indices
-      .map(v => org.apache.spark.sql.Row(ids(v), pr(v)))
-    val longSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("pr",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(outRows,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + outRows.size / 8192))),
-        longSchema)
-      .select(col("node").cast(idType).as("node"), col("pr"))
+    DriverGate.resultFrame(withDeg.sparkSession,
+      ids.indices.map(v => org.apache.spark.sql.Row(ids(v), pr(v))),
+      Seq("node" -> LongType, "pr" -> DoubleType), idType)
   }
 }

@@ -55,10 +55,7 @@ object SemDedup {
       col("__e").as("a_emb"), col("__n").as("a_norm"))
     val r = assigned.select(col("cell"), col(idCol).as("b_id"),
       col("__e").as("b_emb"), col("__n").as("b_norm"))
-    // the estimate-based gate: `spread`'s partition-count probe would run
-    // the join's upstream stage while this frame is being built
-    val dropped = graft.core.Tables.spreadIfSmall(
-      l.join(r, "cell").filter(col("a_id") < col("b_id")))
+    val dropped = l.join(r, "cell").filter(col("a_id") < col("b_id"))
       .filter(round(
         graft.functions.VectorOps.vecDot(col("a_emb"), col("b_emb")) /
           nullif(col("a_norm") * col("b_norm"), lit(0.0)) + lit(1e-9), 6)

@@ -247,9 +247,7 @@ object Similarity {
     val planes = hyperplanes(bits, dim)
     // Norms are computed ONCE per vector before the pair join (computing
     // cosine() per pair would re-derive both norms for every candidate —
-    // 3x the array passes); the join output is re-spread because AQE
-    // coalesces the small bucket shuffle into few partitions, serializing
-    // the per-pair dot products. Float arrays stay float end-to-end:
+    // 3x the array passes). Float arrays stay float end-to-end:
     // vec_dot widens per element in its codegen loop, and the pair join
     // shuffles half the bytes a transform-cast to double would carry.
     val b = graft.core.Tables.spread(corpus).select(col(idCol),
@@ -260,8 +258,7 @@ object Similarity {
       col("__e").as("a_emb"), col("__norm").as("a_norm"))
     val r = b.select(col("bucket"), col(idCol).as("b_id"),
       col("__e").as("b_emb"), col("__norm").as("b_norm"))
-    val pairs = l.join(r, "bucket").filter(col("a_id") < col("b_id"))
-    graft.core.Tables.spread(pairs)
+    l.join(r, "bucket").filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
         (VectorOps.vecDot(col("a_emb"), col("b_emb")) /
           nullif(col("a_norm") * col("b_norm"), lit(0.0))).as("cosine"))

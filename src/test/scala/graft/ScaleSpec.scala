@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.etl.Etl
 
-/** Scale mechanics: partition pruning on partitioned writes, salted skew
-  * joins, and spread()'s parallelism contract. */
+/** Scale mechanics: partition pruning on partitioned writes, bucketed
+  * joins, sketches, and spread()'s parallelism contract. */
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,23 +44,6 @@ class ScaleSpec extends SparkSpec {
     assert(rows == Seq((1L, None), (2L, Some("promo"))))
     // and predicates on the new column still prune correctly
     assert(unified.filter($"campaign" === "promo").count() == 1)
-  }
-
-  test("salted join splits a hot key and matches the plain join result") {
-    // 10k rows of one hot key + a small dimension
-    val large = (1 to 10000).map(i => (if (i % 10 == 0) "cold" + i else "HOT", i))
-      .toDF("k", "v")
-    val small = Seq(("HOT", "hot-dim"), ("cold10", "c10")).toDF("k", "label")
-    val plain = large.join(small, Seq("k")).agg(count(lit(1)), sum("v")).first()
-    val salted = Etl.saltedJoin(large, small, "k", salts = 8)
-      .agg(count(lit(1)), sum("v")).first()
-    assert(salted.getLong(0) == plain.getLong(0))
-    assert(salted.getLong(1) == plain.getLong(1))
-    // every salt bucket got some of the hot key (the split actually happened)
-    val buckets = large.withColumn("__salt",
-      pmod(hash(large.columns.map(col): _*), lit(8)))
-      .filter($"k" === "HOT").select("__salt").distinct().count()
-    assert(buckets > 1)
   }
 
   test("bloom prefilter prunes non-matching rows and preserves join results") {
@@ -120,5 +104,40 @@ class ScaleSpec extends SparkSpec {
     val spreadDf = graft.core.Tables.spread(docs)
     assert(spreadDf.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     assert(spreadDf.count() == docs.count())
+  }
+
+  /** The curation chain's head: spread, quality filter, select. */
+  private def spreadKept(): DataFrame = graft.ext.Curation.qualityFilter(
+      graft.core.Tables.spread(graft.core.Tables.load(spark, sf001, "documents")),
+      "text")
+    .filter(col(graft.ext.Curation.KeepCol)).select("doc_id", "text")
+
+  test("spread decides from the plan: no job and no new exchange on a spread frame") {
+    val kept = spreadKept()
+    var again: DataFrame = null
+    assert(jobsRunBy { again = graft.core.Tables.spread(kept) } == 0)
+    assert(again.queryExecution.optimizedPlan.canonicalized ==
+      kept.queryExecution.optimizedPlan.canonicalized)
+  }
+
+  test("spread returns a frame estimated over the gate unchanged") {
+    val docs = graft.core.Tables.load(spark, sf001, "documents")
+    withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1") {
+      assert(graft.core.Tables.spread(docs) eq docs)
+    }
+  }
+
+  test("spread keeps a driver-built frame that already has a slice per core") {
+    val n = spark.sparkContext.defaultParallelism
+    val full = (1 to n).toDF("id")
+    assert(graft.core.Tables.spread(full) eq full)
+    val few = (1 until n).toDF("id")
+    val spreadFew = graft.core.Tables.spread(few)
+    assert(few.rdd.getNumPartitions < n && spreadFew.rdd.getNumPartitions == n)
+  }
+
+  test("nearDupPairs over a spread frame is built without a job") {
+    val kept = spreadKept()
+    assert(jobsRunBy { graft.ext.Dedup.nearDupPairs(kept, "text", "doc_id") } == 0)
   }
 }
