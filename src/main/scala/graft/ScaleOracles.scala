@@ -475,7 +475,6 @@ object ScaleOracles {
     // identical recipe: the bloom path's contract is exact-path output
     "x_substring_dedup_bloom" -> substringDedup,
     "x_window_dedup_remove" -> windowRemove,
-    "x_window_dedup_remove_bloom" -> windowRemove,
     "x_pagerank" -> pageRank,
     "x_semdedup" -> semDedup)
 }

@@ -35,7 +35,7 @@ object GraftSession {
     * Measured working sets (4-core host, Janino compiles counted through
     * `CodegenMetrics.METRIC_COMPILATION_TIME`): one round of the nine
     * perfbench `mart_reads` queries generates ~230 distinct classes,
-    * `warehouse_load` ~225 and `curation` ~135, the full 150-query suite
+    * `warehouse_load` ~225 and `curation` ~135, the full query suite
     * at sf0.001 ~1.5k. At 100 entries every class was evicted before its
     * next use: a second round of the mart queries recompiled 215 classes,
     * and now 0 (with `useIdInClassName` below). `graft.Bench` at sf0.1:

@@ -299,11 +299,7 @@ object Curation {
     * distinct shingle set BROADCASTS; the corpus explodes its shingles
     * once, the broadcast left-join marks hits with no corpus shuffle of
     * text, and one (id) aggregation — count vs matched count — yields
-    * the rate. At extreme corpus scale the same shape runs with a bloom
-    * filter over benchmark shingles (`bloom_filter_agg`/`might_contain`)
-    * to avoid even the broadcast hash probe, at the cost of a bounded
-    * false-positive rate — exactness is why the broadcast join is the
-    * default.
+    * the rate.
     *
     * Output: idCol, n_shingles, n_contaminated, contamination (null for
     * docs too short to shingle). */
@@ -332,74 +328,6 @@ object Curation {
       .groupBy(idCol)
       .agg(count(col("__s")).as("n_shingles"),
         count(col("__bs")).as("n_contaminated"))
-      .withColumn("contamination",
-        when(col("n_shingles") > 0,
-          col("n_contaminated").cast("double") /
-            col("n_shingles").cast("double")))
-  }
-
-  /** [[contamination]]'s extreme-scale variant, with EXACTLY the same
-    * output (same counts, same rate — the Bloom filter only bounds
-    * intermediate volume, it never changes the answer; the
-    * `Dedup.windowDupStatsBloom` treatment):
-    *
-    *   - the distinct benchmark shingles fold into ONE bloom-filter
-    *     binary (a few MB regardless of benchmark size) — the only
-    *     thing broadcast; the full shingle-set broadcast the exact
-    *     path pays disappears.
-    *   - every corpus row probes the bloom with a per-row HOF; only
-    *     PROBABLE hits (true contamination + the bloom's ~3%
-    *     false-positive rate at its sizing — derived from the actual
-    *     benchmark-shingle count by default, see
-    *     [[graft.ext.Dedup.bloomSizeHint]]) survive to explode. Clean
-    *     corpus shingles — the overwhelming majority — never leave
-    *     their row.
-    *   - the surviving candidates (hit volume, not corpus-shingle
-    *     volume) join the exact benchmark set once, removing bloom
-    *     false positives, so `n_contaminated` is exact. */
-  def contaminationBloom(docs: DataFrame, textCol: String, idCol: String,
-      benchmark: DataFrame, benchTextCol: String, n: Int = 3,
-      expectedItems: Long = 0L): DataFrame = {
-    graft.functions.BloomOps.register(docs.sparkSession)
-    // materialized once (benchmark-sized, no corpus data): serves both
-    // the bloom aggregate and the false-positive-removing join. NOT
-    // spread like [[contamination]]'s bench side: this subtree is
-    // materialized once and feeds a driver-side head() — r18's A/B read
-    // the extra round-robin exchange as a small regression on that
-    // latency-bound path, while the exact path's per-query broadcast
-    // rebuild measured 2.3× faster spread
-    val bench = benchmark
-      .select(explode(Dedup.shingles(col(benchTextCol), n)).as("__bs"))
-      .distinct()
-      .localCheckpoint()
-    // Option(..): an EMPTY benchmark aggregates to a null bloom binary —
-    // then nothing can be contaminated, rather than a null-propagation
-    // surprise inside the HOF
-    // size from the materialized benchmark-shingle set when no explicit
-    // hint (0): one cheap job over the checkpointed frame; a fixed
-    // constant over- or under-sizes at the two scale extremes and
-    // sizing never changes the answer (FPs removed by the exact join)
-    val bytes = Option(bench
-      .select(call_function("bloom_filter_agg", xxhash64(col("__bs")),
-        lit(graft.ext.Dedup.bloomSizeHint(bench, expectedItems))).as("bf"))
-      .head().getAs[Array[Byte]](0))
-    val candArr = bytes match {
-      case Some(b) => filter(col("__dsh"), s =>
-        call_function("might_contain", lit(b), xxhash64(s)))
-      case None => array().cast("array<string>")
-    }
-    docs
-      .withColumn("__dsh", array_distinct(Dedup.shingles(col(textCol), n)))
-      // LEFT join (not semi): zero-candidate docs keep their null row so
-      // they still report n_contaminated = 0; the right-side marker is
-      // null exactly for bloom false positives and the null row
-      .select(col(idCol), size(col("__dsh")).cast("long").as("n_shingles"),
-        explode_outer(candArr).as("__s"))
-      .join(bench.select(col("__bs").as("__s"), lit(1).as("__hit")),
-        Seq("__s"), "left")
-      .groupBy(idCol)
-      .agg(first(col("n_shingles")).as("n_shingles"),
-        count(col("__hit")).as("n_contaminated"))
       .withColumn("contamination",
         when(col("n_shingles") > 0,
           col("n_contaminated").cast("double") /

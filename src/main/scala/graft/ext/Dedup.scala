@@ -91,6 +91,22 @@ object Dedup {
           i => element_at(col("__chunks"), i + 1)), " ").as("text_dedup"))
   }
 
+  /** Digest array of the stride-1 `w`-token windows of `textCol` (empty
+    * for docs with fewer than `w` tokens, null for null text — both
+    * vanish under the explode/filter that consumes this) — shared by the
+    * substring-dedup kernels so all of them flag the SAME windows. Fused
+    * codegen pass (`functions.WindowDigests`): the HOF form (per-window
+    * slice + array_join + md5) dominated the whole operator's CPU; the
+    * fused pass normalizes the token stream once and runs each md5
+    * straight off the compact buffer. */
+  private def windowDigests(df: DataFrame, textCol: String,
+      w: Int): Column = {
+    graft.functions.WindowDigests.register(df.sparkSession, w)
+    // the fused pass lowercases internally (same UTF8String.toLowerCase
+    // as the built-in lower())
+    graft.functions.WindowDigests.windowDigests(col(textCol), w)
+  }
+
   /** Duplicated-substring detection over OVERLAPPING token windows — the
     * discovery half of exact substring dedup (public method: Lee et al.
     * 2022, "Deduplicating Training Data Makes Language Models Better",
@@ -107,31 +123,14 @@ object Dedup {
     * Scale shape (100 TB): each doc emits (size − w + 1) 16-byte digests;
     * the count aggregation shuffles (digest, partial-count) with map-side
     * combine, and the per-doc regroup shuffles (id, digest) pairs — raw
-    * window text never leaves the row pass. The production bound at
-    * corpus scale is a two-pass Bloom prepass (first pass builds a filter
-    * of once-seen digests, second pass only shuffles candidates) —
-    * `functions.BloomOps` has the plumbing; this operator keeps the exact
-    * one-pass form the oracle can verify.
+    * window text never leaves the row pass. [[windowDupStatsBloom]]
+    * returns the same rows with a Bloom prepass that keeps unique
+    * windows out of the regroup: on a 4-core host it is the faster of
+    * the two at sf1 and the slower at sf0.1 (`PERF_bloom_twins.json`).
     *
     * Output: (id, n_windows, n_dup_windows, dup_ratio); docs with fewer
     * than `w` tokens have no windows and vanish (same convention as
     * [[spanDedup]] for token-less docs). */
-  /** Digest array of the stride-1 `w`-token windows of `textCol` (empty
-    * for docs with fewer than `w` tokens, null for null text — both
-    * vanish under the explode/filter that consumes this) — shared by the
-    * exact and the Bloom-prepass substring-dedup paths so both flag the
-    * SAME windows. Fused codegen pass (`functions.WindowDigests`): the
-    * HOF form (per-window slice + array_join + md5) dominated the whole
-    * operator's CPU; the fused pass normalizes the token stream once and
-    * runs each md5 straight off the compact buffer. */
-  private def windowDigests(df: DataFrame, textCol: String,
-      w: Int): Column = {
-    graft.functions.WindowDigests.register(df.sparkSession, w)
-    // the fused pass lowercases internally (same UTF8String.toLowerCase
-    // as the built-in lower())
-    graft.functions.WindowDigests.windowDigests(col(textCol), w)
-  }
-
   def windowDupStats(df: DataFrame, textCol: String, idCol: String,
       w: Int): DataFrame = {
     require(w > 0, "window width must be positive")
@@ -146,6 +145,23 @@ object Dedup {
         col("n_dup_windows").cast("double") / col("n_windows"), 4))
   }
 
+  /** Bloom sizing for [[windowDupStatsBloom]]: count the
+    * ALREADY-MATERIALIZED dup-digest set (localCheckpoint'ed, so this is
+    * one cheap cached-partition job, not a rescan) and add 25% headroom.
+    * A fixed constant is wrong at both ends — r18 measured a 4M default
+    * costing 2.3× on the sf0.1 bench (a ~3.6 MB filter built, merged
+    * across every map task and shipped in the plan for a few thousand
+    * actual dups), while at 100 TB corpus scale it would undersize the
+    * filter and let its false-positive rate climb back toward the exact
+    * path's explode volume. Floor 4096 keeps the degenerate small-corpus
+    * filter from being all-collisions. Sizing never changes results —
+    * false positives are removed by the exact join that follows. */
+  private def bloomSize(build: DataFrame): Long =
+    math.max(4096L, {
+      val n = build.count()
+      n + n / 4
+    })
+
   /** [[windowDupStats]]'s Bloom-prepass form — the production bound at
     * corpus scale, with EXACTLY the same output (same flagged windows,
     * same counts; the Bloom filter only bounds intermediate volume, it
@@ -155,8 +171,7 @@ object Dedup {
     *     map-side combined): the duplicated digests — count > 1 — are
     *     materialized once (flagged-window volume, typically a small
     *     fraction of the corpus) and folded into ONE Bloom-filter binary
-    *     (a few MB regardless of corpus size, the
-    *     `Curation.contaminationBloom` shape).
+    *     (a few MB regardless of corpus size), sized by [[bloomSize]].
     *   - pass 2: a pure row-local projection re-derives each doc's
     *     window digests and probes the Bloom with a HOF — only PROBABLE
     *     duplicates survive to explode. Bloom false positives are then
@@ -166,35 +181,12 @@ object Dedup {
     *     count join + regroup re-shuffle EVERY window; here unique
     *     windows — the overwhelming majority — never leave their row).
     *
-    * `expectedDups` sizes the Bloom (false-positive rate only affects
-    * candidate volume, not correctness). The default 0 means DERIVE it
-    * from the materialized dup-digest set (count + 25% headroom — one
-    * cheap job over the checkpointed frame): a fixed constant is wrong
-    * at both ends — r18 measured the old 4M default costing 2.3× on the
-    * sf0.1 bench (a ~3.6 MB filter built, merged across every map task
-    * and shipped in the plan for a few thousand actual dups), while at
-    * 100 TB corpus scale 4M would be a silent UNDERsizing whose
-    * false-positive rate quietly re-approaches the exact path's explode
-    * volume. Output and row set are identical to [[windowDupStats]];
-    * docs with fewer than `w` tokens vanish, docs whose windows are all
-    * unique report 0 dups. */
-  /** Bloom sizing: honor an explicit caller hint (> 0); otherwise count
-    * the ALREADY-MATERIALIZED build side (localCheckpoint'ed by every
-    * caller, so this is one cheap cached-partition job, not a rescan)
-    * and add 25% headroom. Floor 4096 keeps the degenerate small-corpus
-    * filter from being all-collisions. Sizing never changes results —
-    * false positives are removed by the exact join that follows. */
-  private[graft] def bloomSizeHint(build: DataFrame, hint: Long): Long =
-    if (hint > 0L) hint
-    else math.max(4096L, {
-      val n = build.count()
-      n + n / 4
-    })
-
+    * Output and row set are identical to [[windowDupStats]]; docs with
+    * fewer than `w` tokens vanish, docs whose windows are all unique
+    * report 0 dups. */
   def windowDupStatsBloom(df: DataFrame, textCol: String, idCol: String,
-      w: Int, expectedDups: Long = 0L): DataFrame = {
+      w: Int): DataFrame = {
     require(w > 0, "window width must be positive")
-    graft.functions.BloomOps.register(df.sparkSession)
     // window CONSTRUCTION (tokenize, slice, join, md5) dominates this
     // operator's CPU — measured 1.5x the whole exact path when pass 2
     // re-derived it from text. Materialize the per-doc digest arrays
@@ -209,13 +201,8 @@ object Dedup {
       .groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1)
       .localCheckpoint()
-    // Option(..): zero duplicates aggregate to a null bloom binary —
-    // then no window can be a candidate (everything is unique)
-    val sizeHint = bloomSizeHint(dups, expectedDups)
-    val bytes = Option(dups
-      .select(call_function("bloom_filter_agg", xxhash64(col("__h")),
-        lit(sizeHint)).as("bf"))
-      .head().getAs[Array[Byte]](0))
+    // None: zero duplicates, so no window can be a candidate
+    val bytes = graft.functions.BloomOps.build(dups, "__h", bloomSize(dups))
     val candArr = bytes match {
       case Some(b) => filter(col("__wins"), h =>
         call_function("might_contain", lit(b), xxhash64(h)))
@@ -258,15 +245,10 @@ object Dedup {
     * map-side combine; flagged occurrences (dup volume) regroup to doc
     * grain as covered-position sets; the final cut joins doc text against
     * that doc-keyed set once and trims row-locally. Window text never
-    * shuffles. [[windowDupRemoveBloom]] produces identical output with a
-    * Bloom prepass that bounds the SECOND exchange: only
-    * bloom-probable candidates explode and regroup for the
-    * first-occurrence test. Its pass 1 is the same digest-grain
-    * aggregate as here — one (count, min-struct) row per distinct
-    * digest per map partition still shuffles, which on a unique-heavy
-    * corpus is ~all-window volume; the tighter "unique windows never
-    * leave their row" bound belongs to [[windowDupStatsBloom]], whose
-    * stats output needs no per-occurrence positions. */
+    * shuffles. Every window reaches the first-occurrence aggregate —
+    * one (count, min-struct) row per distinct digest per map partition,
+    * ~all-window volume on a unique-heavy corpus — because the cut needs
+    * the global first (id, pos) per digest, which no sketch can carry. */
   def windowDupRemove(df: DataFrame, textCol: String, idCol: String,
       w: Int): DataFrame = {
     require(w > 0, "window width must be positive")
@@ -282,58 +264,6 @@ object Dedup {
     // inner join: unique windows drop out here; survivors are flagged
     // unless they ARE the first occurrence
     val flagged = occ.join(firsts, "__h")
-      .filter(!(col(idCol) === col("__f.i") && col("__p") === col("__f.p")))
-      .select(col(idCol), col("__p"))
-    cutCovered(df, textCol, idCol, w, flagged)
-  }
-
-  /** [[windowDupRemove]] with a Bloom prepass on the CANDIDATE exchange —
-    * EXACTLY the same output (the bloom bounds intermediate volume, never
-    * the answer). Precisely which exchange it bounds: pass 1 (dupFirsts)
-    * is the same digest-grain aggregate as the exact path — it
-    * posexplodes every window and shuffles one (count, min-struct) row
-    * per distinct digest per map partition, ~all-window volume on a
-    * unique-heavy corpus, because the remove semantics need the global
-    * first (id, pos) which no sketch can carry. What the bloom saves is
-    * pass 2: only bloom-probable duplicates explode and regroup for the
-    * first-occurrence test, and the exact join against the materialized
-    * dup-digest set removes bloom false positives before that test. The
-    * stronger "unique windows never shuffle at all" bound is
-    * [[windowDupStatsBloom]]'s, whose stats-only output doesn't need
-    * first-occurrence positions. */
-  def windowDupRemoveBloom(df: DataFrame, textCol: String, idCol: String,
-      w: Int, expectedDups: Long = 0L): DataFrame = {
-    require(w > 0, "window width must be positive")
-    graft.functions.BloomOps.register(df.sparkSession)
-    // digest arrays materialized once (digest-grain, no text): the
-    // dup-count pass and the candidate scoring pass both read it
-    val wins = df.select(col(idCol), windowDigests(df, textCol, w).as("__wins"))
-      .filter(size(col("__wins")) > 0)
-      .localCheckpoint()
-    val dupFirsts = wins
-      .select(col(idCol), posexplode(col("__wins")).as(Seq("__p", "__h")))
-      .groupBy("__h")
-      .agg(count(lit(1)).as("__c"),
-        min(struct(col(idCol).as("i"), col("__p").as("p"))).as("__f"))
-      .filter(col("__c") > 1)
-      .localCheckpoint()
-    val bytes = Option(dupFirsts
-      .select(call_function("bloom_filter_agg", xxhash64(col("__h")),
-        lit(bloomSizeHint(dupFirsts, expectedDups))).as("bf"))
-      .head().getAs[Array[Byte]](0))
-    val candArr = bytes match {
-      case Some(b) => filter(
-        transform(col("__wins"), (h, i) =>
-          struct(i.as("p"), h.as("h"))),
-        s => call_function("might_contain", lit(b), xxhash64(s("h"))))
-      case None => array().cast("array<struct<p:int,h:binary>>")
-    }
-    val flagged = wins
-      .select(col(idCol), explode(candArr).as("__c0"))
-      .select(col(idCol), col("__c0.p").as("__p"), col("__c0.h").as("__h"))
-      // inner join drops bloom false positives (and would drop unique
-      // windows, but those never probed true in the first place)
-      .join(dupFirsts.select(col("__h"), col("__f")), "__h")
       .filter(!(col(idCol) === col("__f.i") && col("__p") === col("__f.p")))
       .select(col(idCol), col("__p"))
     cutCovered(df, textCol, idCol, w, flagged)

@@ -17,21 +17,10 @@ import org.apache.spark.sql.functions._
   * Vector math runs through `graft.functions.VecDot`, a native Catalyst
   * expression with `doGenCode` (a primitive loop per row) — the
   * higher-order-function formulation (`aggregate(zip_with(...))`)
-  * interprets its lambda per element and never enters codegen. The HOF
-  * variants are kept for sessions without the registry entry.
+  * interprets its lambda per element and never enters codegen.
   */
 object Similarity {
   import graft.functions.VectorOps
-
-  /** Dot product of two array<double> columns (HOF fallback — see
-    * [[VectorOps.vecDot]] for the codegen path used by the operators). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / nullif(norm(a) * norm(b), lit(0.0))
 
   /** Codegen cosine (requires VectorOps.register on the session; handles
     * float/double element mixes without a transform-cast pass). */
@@ -246,7 +235,7 @@ object Similarity {
     VectorOps.register(corpus.sparkSession)
     val planes = hyperplanes(bits, dim)
     // Norms are computed ONCE per vector before the pair join (computing
-    // cosine() per pair would re-derive both norms for every candidate —
+    // cosineCodegen per pair would re-derive both norms for every candidate —
     // 3x the array passes). Float arrays stay float end-to-end:
     // vec_dot widens per element in its codegen loop, and the pair join
     // shuffles half the bytes a transform-cast to double would carry.

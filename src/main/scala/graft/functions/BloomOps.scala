@@ -39,24 +39,31 @@ object BloomOps {
         BloomFilterMightContain(exprs(0), exprs(1))), "built-in")
   }
 
+  /** The Bloom-filter binary over `df`'s `key` column, sized for
+    * `expectedItems` — one small aggregate job whose result is a
+    * driver-side scalar, the same shape as a broadcast variable, NOT a
+    * per-row collect. None when `df` is empty (the aggregate is null):
+    * then no probe can match. Registers the two functions, so callers
+    * can probe the result with `might_contain`. */
+  def build(df: DataFrame, key: String,
+      expectedItems: Long): Option[Array[Byte]] = {
+    register(df.sparkSession)
+    Option(df
+      .select(call_function("bloom_filter_agg",
+        xxhash64(col(key)), lit(expectedItems)).as("bf"))
+      .head().getAs[Array[Byte]](0))
+  }
+
   /** `large` rows whose `largeKey` might appear among `small`'s
-    * `smallKey` values (bloom pre-filter; no false negatives). The bloom
-    * binary is a driver-side scalar — that is one small aggregate job,
-    * the same shape as a broadcast variable, NOT a per-row collect. */
+    * `smallKey` values (bloom pre-filter; no false negatives). */
   def prefilter(large: DataFrame, largeKey: String,
       small: DataFrame, smallKey: String,
-      expectedItems: Long = 1000000L): DataFrame = {
-    register(large.sparkSession)
-    val bytes = Option(small
-      .select(call_function("bloom_filter_agg",
-        xxhash64(col(smallKey)), lit(expectedItems)).as("bf"))
-      .head().getAs[Array[Byte]](0))
-    bytes match {
+      expectedItems: Long = 1000000L): DataFrame =
+    build(small, smallKey, expectedItems) match {
       case Some(b) => large.filter(
         call_function("might_contain", lit(b), xxhash64(col(largeKey))))
-      // empty build side aggregates to a null bloom: nothing can match
-      // the join that follows, so drop everything up front
+      // empty build side: nothing can match the join that follows, so
+      // drop everything up front
       case None => large.filter(lit(false))
     }
-  }
 }

@@ -482,25 +482,6 @@ object Compaction {
     lease
   }
 
-  /** Crash-safe swap of a leaf's data files, with roll-forward recovery:
-    *
-    *  1. verify no staged name collides with an existing target file —
-    *     abort otherwise, nothing touched;
-    *  2. COMMIT: write the manifest (staging dir + old-file list) to a
-    *     temp name and rename it into the target;
-    *  3. adopt every fresh file from `staging` into `target`;
-    *  4. drop the old files; 5. drop the manifest and the staging dir.
-    *
-    * A crash before (2) leaves the target bit-identical (the orphaned
-    * staging dir is swept by the next run); a crash after (2) leaves a
-    * manifest that [[recoverSwap]] — called by the compaction sweep and
-    * by every upsert batch before it reads the target — completes: adopt
-    * what's still staged, drop what the manifest lists, clean up. So
-    * duplicates from a mid-swap crash are TRANSIENT: visible only to a
-    * reader racing the window between (2) and (4), healed before the next
-    * merge reads the table. Shared by the compaction sweep and the
-    * streaming upsert sink: one copy of the durability-critical
-    * protocol. */
   /** Run `body` holding the single-writer lease on `target`, releasing
     * it afterwards. The critical section should cover the WHOLE
     * read→merge→stage→swap sequence of a table rewrite, not just the
@@ -581,6 +562,25 @@ object Compaction {
       try fs.delete(lease, false) catch { case _: java.io.IOException => () }
   }
 
+  /** Crash-safe swap of a leaf's data files, with roll-forward recovery:
+    *
+    *  1. verify no staged name collides with an existing target file —
+    *     abort otherwise, nothing touched;
+    *  2. COMMIT: write the manifest (staging dir + old-file list) to a
+    *     temp name and rename it into the target;
+    *  3. adopt every fresh file from `staging` into `target`;
+    *  4. drop the old files; 5. drop the manifest and the staging dir.
+    *
+    * A crash before (2) leaves the target bit-identical (the orphaned
+    * staging dir is swept by the next run); a crash after (2) leaves a
+    * manifest that [[recoverSwap]] — called by the compaction sweep and
+    * by every upsert batch before it reads the target — completes: adopt
+    * what's still staged, drop what the manifest lists, clean up. So
+    * duplicates from a mid-swap crash are TRANSIENT: visible only to a
+    * reader racing the window between (2) and (4), healed before the next
+    * merge reads the table. Shared by the compaction sweep and the
+    * streaming upsert sink: one copy of the durability-critical
+    * protocol. */
   private[graft] def swapDataFiles(fs: FileSystem, staging: HPath,
       target: HPath, leaseTtlMs: Long = DefaultLeaseTtlMs): Unit =
     withSwapLease(fs, target, leaseTtlMs)(

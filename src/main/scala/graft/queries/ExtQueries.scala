@@ -177,33 +177,6 @@ object ExtQueries {
         .orderBy("doc_id")
     },
 
-    // Bloom-prepass contamination — the corpus-scale bound for the query
-    // above: benchmark shingles fold into ONE bloom binary (the only
-    // broadcast — no full shingle-set broadcast), clean corpus shingles
-    // never leave their row, and the exact join over the few bloom
-    // survivors removes false positives. The oracle is the EXACT path's
-    // SQL verbatim: identical output is the property under test (the
-    // bloom bounds intermediate volume, never the answer).
-    Q("x_contamination_bloom",
-      s"""WITH tok AS (SELECT doc_id, $LTOKS AS ltoks FROM documents),
-         |sh AS (SELECT doc_id, list_distinct($SHINGLES) AS dsh FROM tok
-         |       WHERE len(ltoks) >= 3),
-         |ds AS (SELECT doc_id, unnest(dsh) AS s FROM sh WHERE doc_id % 17 <> 0),
-         |bench AS (SELECT DISTINCT unnest(dsh) AS s FROM sh WHERE doc_id % 17 = 0)
-         |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-         |       CAST(count(b.s) AS BIGINT) AS n_contaminated,
-         |       round(count(b.s) * 1.0 / count(*) + 1e-7, 4) AS contamination
-         |FROM ds d LEFT JOIN bench b ON d.s = b.s
-         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-      val shingleable = docsSpread(s, d)
-        .filter(size(TextAnalysis.tokens(lower(col("text")))) >= 3)
-      Curation.contaminationBloom(
-          shingleable.filter(col("doc_id") % 17 =!= 0), "text", "doc_id",
-          shingleable.filter(col("doc_id") % 17 === 0), "text", n = 3)
-        .withColumn("contamination", Fp.r(col("contamination"), 4))
-        .orderBy("doc_id")
-    },
-
     // Repetition ratio (Gopher-style quality signal): 1 − distinct/total
     // 2-gram shingles, a pure per-row projection — boilerplate and
     // degenerate generations repeat; clean prose doesn't.
@@ -1134,16 +1107,6 @@ object ExtQueries {
         .orderBy("doc_id")
     },
 
-    // Bloom-prepass candidate generation for the rewrite above — same
-    // oracle SQL verbatim: identical surviving text is the property
-    // under test (parity between exact and Bloom candidate generation).
-    Q("x_window_dedup_remove_bloom", WindowRemoveOracle.sql) { (s, d) =>
-      Dedup.windowDupRemoveBloom(docsSpread(s, d), "text", "doc_id", w = 8)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          md5(col("text").cast("binary")).as("text_digest"))
-        .orderBy("doc_id")
-    },
-
     // Trained quality classifier (the DCLM / FineWeb-Edu curation shape):
     // logistic regression on surface features, full-batch gradient
     // descent where each step is ONE distributed aggregation (the
@@ -1167,7 +1130,7 @@ object ExtQueries {
   * positions, first occurrence per digest via row_number over
   * (doc_id, pos), flagged windows expand to covered token positions,
   * an anti join keeps surviving tokens, and the reassembled text is
-  * digest-compared. Shared verbatim by the exact and Bloom gate rows. */
+  * digest-compared. */
 private[queries] object WindowRemoveOracle {
   private val LTOKS = "list_filter(string_split(lower(text),' '), x -> x <> '')"
   val sql: String =

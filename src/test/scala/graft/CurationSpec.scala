@@ -319,29 +319,10 @@ class CurationSpec extends SparkSpec {
     assert(out(3L) == ((0L, 0L, None)))
   }
 
-  test("contaminationBloom agrees with the exact join on real documents") {
-    val all = graft.core.Tables.load(spark, sf001, "documents")
-      .filter(size(split($"text", " ")) >= 3)
-    val bench = all.filter($"doc_id" % 17 === 0)
-    val corpus = all.filter($"doc_id" % 17 =!= 0)
-    def collect(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "n_shingles", "n_contaminated")
-        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val exact = collect(
-      Curation.contamination(corpus, "text", "doc_id", bench, "text"))
-    val bloom = collect(
-      Curation.contaminationBloom(corpus, "text", "doc_id", bench, "text"))
-    // identical output is the contract (not a probabilistic accident):
-    // the bloom only bounds candidate volume; the exact join against
-    // the benchmark set removes its false positives
-    assert(bloom == exact)
-    assert(exact.exists(_._3 > 0), "fixture should contain SOME overlap")
-  }
-
-  test("contaminationBloom: empty benchmark means nothing is contaminated") {
+  test("contamination: empty benchmark means nothing is contaminated") {
     val docs = Seq((1L, "the quick brown fox jumps")).toDF("doc_id", "text")
     val bench = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val out = Curation.contaminationBloom(docs, "text", "doc_id", bench, "text")
+    val out = Curation.contamination(docs, "text", "doc_id", bench, "text")
       .as[(Long, Long, Long, Option[Double])].collect().head
     assert(out == ((1L, 3L, 0L, Some(0.0))))
   }

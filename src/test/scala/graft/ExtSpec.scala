@@ -117,17 +117,9 @@ class ExtSpec extends SparkSpec {
       (6L, "q", 3L, 2L)))
   }
 
-  test("windowDupRemoveBloom matches the exact rewrite row-for-row") {
-    val exact = Dedup.windowDupRemove(removeFixture, "text", "doc_id", w = 2)
-      .orderBy("doc_id").as[(Long, String, Long, Long)].collect()
-    val bloom = Dedup.windowDupRemoveBloom(removeFixture, "text", "doc_id", w = 2)
-      .orderBy("doc_id").as[(Long, String, Long, Long)].collect()
-    assert(bloom === exact)
-  }
-
-  test("windowDupRemoveBloom on an all-unique corpus (null bloom binary)") {
+  test("windowDupRemove on an all-unique corpus") {
     val df = Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text")
-    val out = Dedup.windowDupRemoveBloom(df, "text", "doc_id", w = 2)
+    val out = Dedup.windowDupRemove(df, "text", "doc_id", w = 2)
       .orderBy("doc_id").as[(Long, String, Long, Long)].collect()
     assert(out === Array((1L, "a b c", 3L, 0L), (2L, "d e f", 3L, 0L)))
   }
