@@ -37,7 +37,6 @@ object Bm25 {
       topK: Int = 20): DataFrame = {
     require(terms.nonEmpty && terms == terms.map(_.toLowerCase),
       "query terms must be non-empty lowercase literals")
-    graft.functions.TermFreqs.register(docs.sparkSession)
     def tfCol(t: String) = s"__tf_$t"
     def dfCol(t: String) = s"__df_$t"
     val perDoc = graft.core.Tables.spread(docs)
@@ -111,7 +110,6 @@ object Bm25 {
       queries: DataFrame, queryIdCol: String = "query_id",
       termCol: String = "term", k1: Double = 1.2, b: Double = 0.75,
       topK: Int = 10): DataFrame = {
-    graft.functions.TermFreqs.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     // dedupe defensively: duplicate (query, term) rows would otherwise
     // double-count that term's contribution to the query's score

@@ -151,10 +151,12 @@ object Bpe {
 
   /** [[train]] plus the driver-round count (each round = one vocab-grain
     * pair-count job + one bounded fetch) — the number a production-vocab
-    * cost model needs (rounds × per-round latency; see docs/SCALING.md). */
+    * cost model needs (rounds × per-round latency; see docs/SCALING.md).
+    * Trains on the words of frequency >= `minWordFreq` (1 keeps all), the
+    * same floor as [[trainLocal]]. */
   private[graft] def trainRounds(df: DataFrame, textCol: String,
       numMerges: Int, checkpointEvery: Int = 16,
-      batchSize: Int = 64): (Seq[Merge], Int) = {
+      batchSize: Int = 64, minWordFreq: Long = 1L): (Seq[Merge], Int) = {
     require(numMerges > 0, "numMerges must be positive")
     require(batchSize > 0, "batchSize must be positive")
     // materialize the word count ONCE (r18): the symbol-inventory collect
@@ -163,7 +165,8 @@ object Bpe {
     // corpus-sized word-count shuffle (exchange reuse never spans jobs).
     // The frame is vocab-grain (distinct words + freq), so the
     // materialization is bounded regardless of corpus size.
-    val words = vocab(df, textCol).localCheckpoint()
+    val words = vocab(df, textCol).filter(col("freq") >= minWordFreq)
+      .localCheckpoint()
     // symbol inventory = base charset ∪ merges applied so far: bounded
     // (alphabet + vocab sized), maintained driver-side with no extra
     // per-round job; feeds selectBatch's grown-pair collision guard
@@ -232,11 +235,9 @@ object Bpe {
     * Scale shape (100 TB): ONE corpus-sized shuffle (word count), one
     * bounded driver fetch — `maxVocabWords` is the explicit budget, and
     * the count is checked BEFORE collecting so an unexpectedly diverse
-    * corpus never OOMs the driver. Over budget at floor 1 it returns
-    * the distributed [[train]]'s merges instead (result-identical, one
-    * job per round). With `minWordFreq > 1` it fails loudly instead:
-    * [[train]] has no word floor, so falling back would silently return
-    * the unfloored merges.
+    * corpus never OOMs the driver. Over budget it runs the distributed
+    * rounds of [[train]] over the same floored vocabulary instead
+    * (result-identical, one job per round).
     * The loop itself is O(total symbols) amortized per merge via
     * incremental pair-count maintenance + a lazy-deletion heap: a
     * 32k–100k vocab trains in driver seconds with ZERO per-merge Spark
@@ -267,21 +268,15 @@ object Bpe {
     // memory through the fallback's per-round jobs.
     val words = vocab(df, textCol).filter(col("freq") >= minWordFreq)
       .persist()
-    val (n, rows) =
+    val rows =
       try {
-        val n = words.count()
-        (n, if (n > maxVocabWords) None
-            else Some(words.collect().map(r => (r.getString(0), r.getLong(1)))))
+        if (words.count() > maxVocabWords) None
+        else Some(words.collect().map(r => (r.getString(0), r.getLong(1))))
       } finally words.unpersist()
     rows match {
       case Some(v) => trainOnVocab(v, numMerges)
-      case None =>
-        require(minWordFreq == 1L,
-          s"distinct-word vocabulary ($n, at minWordFreq=$minWordFreq) " +
-            s"exceeds the driver budget ($maxVocabWords), and the " +
-            "distributed train() has no word floor: raise maxVocabWords " +
-            "or minWordFreq, or pre-filter the corpus")
-        train(df, textCol, numMerges)
+      case None => trainRounds(df, textCol, numMerges,
+        minWordFreq = minWordFreq)._1
     }
   }
 
@@ -452,7 +447,6 @@ object Bpe {
     * corpus never saw maps to null — the caller's OOV signal. */
   def encodeIds(df: DataFrame, textCol: String, merges: Seq[Merge],
       vocab: Seq[(Long, String)]): DataFrame = {
-    graft.functions.VocabLookup.register(df.sparkSession)
     val vlit = typedlit(vocab.map { case (id, t) => (t, id) }.toMap)
     encode(df, textCol, merges)
       .withColumn("bpe_ids",
@@ -472,7 +466,6 @@ object Bpe {
     * interpreted replace-all pass per MERGE per word. */
   def encode(df: DataFrame, textCol: String,
       merges: Seq[Merge]): DataFrame = {
-    graft.functions.BpeEncode.register(df.sparkSession)
     val mlit = typedlit(merges.sortBy(_.rank).map(m => (m.lhs, m.rhs)))
     df.withColumn("bpe_tokens",
         graft.functions.BpeEncode.bpeEncodeText(lower(col(textCol)), mlit))

@@ -41,7 +41,6 @@ object Curation {
     * or aggregate `drop_reason` for the curation report. */
   def qualityFilter(df: DataFrame, textCol: String,
       rules: QualityRules = QualityRules()): DataFrame = {
-    graft.functions.TextStats.register(df.sparkSession)
     val st = graft.functions.TextStats.textStats(col(textCol))
     val nt = col("__st.n_tokens")
     val pr = col("__st.n_punct").cast("double") /
@@ -84,8 +83,8 @@ object Curation {
     * task (a web corpus is ~90 % one language: at 100 TB that is a
     * single-task sort of ~90 TB), so instead:
     *
-    *   1. split each stratum's id-ordered stream into `buckets` buckets
-    *      (two bucketing modes below);
+    *   1. split each stratum's id-ordered stream into `buckets` range
+    *      buckets (below);
     *   2. per-(stratum, bucket) token totals: a map-side-combined
     *      aggregate of buckets × strata rows (tiny);
     *   3. exclusive per-stratum running offsets over that tiny frame
@@ -95,34 +94,17 @@ object Curation {
     *
     * Output is IDENTICAL to the single-window formulation for any bucket
     * count/boundaries (offsets cancel bucketing out) — PROVIDED the
-    * totals pass and the window pass see the SAME bucket assignment.
-    * The two modes guarantee that differently, trading materialization
-    * against upstream recompute:
-    *
-    * - `materialize = true` (default): range-partition on (strata…, id),
-    *   stamp `spark_partition_id`, and localCheckpoint (eager,
-    *   spillable, lineage-truncating) the frame ONCE — both consumers
-    *   read the pinned physical layout. Needed because range boundaries
-    *   come from seeded-per-plan-instance reservoir sampling, and
-    *   exchange REUSE is pruning-fragile (r14: separate exchanges under
-    *   a count() action → divergent boundaries → garbage offsets). One
-    *   upstream pass — right when upstream is expensive (BPE encode
-    *   measured ~9 s per pass at sf10). The checkpoint is as wide as
-    *   `df`: project fat columns (text, embeddings) away BEFORE packing.
-    * - `materialize = false`: bucket = a pure FUNCTION of the id VALUE —
-    *   approx-quantile boundaries of `idCol` computed once on the
-    *   driver (bounded: `buckets`-1 doubles) and inlined as a codegen'd
-    *   comparison-sum. Both consumers evaluate the same literal
-    *   expression, so they cannot diverge and NOTHING materializes; the
-    *   price is upstream recompute per pass (the boundary pass reads
-    *   `idCol` only — column-pruned — and totals + window each read
-    *   (keys, token)). Right when upstream is a cheap pruned scan.
-    *   Monotonicity makes it exact: long→double casting is monotone and
-    *   the per-bound comparisons are strict, so id₁ < id₂ ⇒ bucket(id₁)
-    *   ≤ bucket(id₂) within every stratum even where the cast rounds,
-    *   and boundary-value balance is the only thing approximation can
-    *   affect. Requires a numeric `idCol` — non-numeric ids fall back
-    *   to the materialized mode.
+    * totals pass and the window pass see the SAME bucket assignment:
+    * range-partition on (strata…, id), stamp `spark_partition_id`, and
+    * localCheckpoint (eager, spillable, lineage-truncating) the frame
+    * ONCE — both consumers read the pinned physical layout. Needed
+    * because range boundaries come from seeded-per-plan-instance
+    * reservoir sampling, and exchange REUSE is pruning-fragile (r14:
+    * separate exchanges under a count() action → divergent boundaries →
+    * garbage offsets). One upstream pass — right when upstream is
+    * expensive (BPE encode measured ~9 s per pass at sf10). The
+    * checkpoint is as wide as `df`: project fat columns (text,
+    * embeddings) away BEFORE packing.
     *
     * `buckets` <= 0 means spark.sql.shuffle.partitions.
     *
@@ -131,38 +113,18 @@ object Curation {
     * (same contract as the single-window shape it replaces). NULL keys
     * are legal: a NULL stratum (or id) forms one group, exactly as the
     * single-window `partitionBy` treated it — every internal join is
-    * null-safe (`<=>`), a NULL id value-buckets to bucket 0 (all
-    * comparisons fail), matching NULLS FIRST ordering. */
+    * null-safe (`<=>`). */
   private[graft] def distributedCumsum(df: DataFrame, tokenCol: String,
       idCol: String, partitionCols: Seq[String], buckets: Int,
-      cumCol: String, bucketCol: String,
-      materialize: Boolean = true): DataFrame = {
+      cumCol: String, bucketCol: String): DataFrame = {
     val b0 = if (buckets > 0) buckets
       else df.sparkSession.sessionState.conf.numShufflePartitions
     Seq(cumCol, bucketCol, "__graft_loc", "__graft_off").foreach(c =>
       require(!df.columns.contains(c), s"input already has column $c"))
-    val keyCols = partitionCols :+ idCol
-    val numericId = df.schema(idCol).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    val bucketed =
-      if (materialize || !numericId)
-        df.repartitionByRange(b0, keyCols.map(col): _*)
-          .withColumn(bucketCol, spark_partition_id())
-          .localCheckpoint()
-      else {
-        val bounds: Seq[Double] =
-          if (b0 <= 1) Nil
-          else {
-            val probs = (1 until b0).map(_.toDouble / b0)
-            val q = df.select(percentile_approx(col(idCol).cast("double"),
-              typedlit(probs), lit(10000)).as("q")).head()
-            if (q.isNullAt(0)) Nil else q.getSeq[Double](0)
-          }
-        val bucketExpr = bounds
-          .map(x => when(col(idCol).cast("double") > lit(x), 1).otherwise(0))
-          .reduceOption(_ + _).getOrElse(lit(0))
-        df.withColumn(bucketCol, bucketExpr)
-      }
+    val bucketed = df
+      .repartitionByRange(b0, (partitionCols :+ idCol).map(col): _*)
+      .withColumn(bucketCol, spark_partition_id())
+      .localCheckpoint()
     val totals = bucketed
       .groupBy(partitionCols.map(col) :+ col(bucketCol): _*)
       .agg(sum(col(tokenCol).cast("long")).as("__graft_tot"))
@@ -202,16 +164,15 @@ object Curation {
     * fully global pack: `partitionCols = Nil` is legal) parallelizes
     * across `buckets` range buckets instead of serializing through one
     * window task. `idCol` must be unique per stratum for deterministic
-    * output. Every input column rides through the pack shuffle (and the
-    * default materialization) — project fat columns (text, embeddings)
-    * away before packing; `materialize = false` (numeric ids) trades the
-    * checkpoint for upstream recompute — see [[distributedCumsum]]. */
+    * output. Every input column rides through the pack shuffle and the
+    * checkpoint — project fat columns (text, embeddings) away before
+    * packing. */
   def packShards(df: DataFrame, tokenCol: String, idCol: String,
       budget: Long, partitionCols: Seq[String],
-      buckets: Int = 0, materialize: Boolean = true): DataFrame = {
+      buckets: Int = 0): DataFrame = {
     require(budget >= 1, "budget must be positive")
     distributedCumsum(df, tokenCol, idCol, partitionCols, buckets,
-        "__cum", "__graft_bucket", materialize)
+        "__cum", "__graft_bucket")
       .withColumn("shard_id",
         floor((col("__cum") - col(tokenCol)) / lit(budget.toDouble))
           .cast("int"))
@@ -252,8 +213,8 @@ object Curation {
     * exact single-exchange plan asserted in CurationSpec. */
   def packSequences(df: DataFrame, tokenCol: String, idCol: String,
       seqLen: Int, partitionCols: Seq[String],
-      buckets: Int = 0, startOffsets: Option[DataFrame] = None,
-      materialize: Boolean = true): DataFrame = {
+      buckets: Int = 0,
+      startOffsets: Option[DataFrame] = None): DataFrame = {
     require(seqLen >= 1, "seqLen must be positive")
     val L = lit(seqLen.toDouble)
     // manifests need only (strata, id, token count) — project narrow so
@@ -262,7 +223,7 @@ object Curation {
     val narrow = df.select(
       ((partitionCols :+ idCol) :+ tokenCol).distinct.map(col): _*)
     val cum = distributedCumsum(narrow, tokenCol, idCol, partitionCols,
-      buckets, "__end", "__graft_bucket", materialize)
+      buckets, "__end", "__graft_bucket")
     val offset = startOffsets match {
       case None => cum
       case Some(o) =>

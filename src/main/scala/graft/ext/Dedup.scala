@@ -99,13 +99,10 @@ object Dedup {
     * slice + array_join + md5) dominated the whole operator's CPU; the
     * fused pass normalizes the token stream once and runs each md5
     * straight off the compact buffer. */
-  private def windowDigests(df: DataFrame, textCol: String,
-      w: Int): Column = {
-    graft.functions.WindowDigests.register(df.sparkSession, w)
+  private def windowDigests(textCol: String, w: Int): Column =
     // the fused pass lowercases internally (same UTF8String.toLowerCase
     // as the built-in lower())
     graft.functions.WindowDigests.windowDigests(col(textCol), w)
-  }
 
   /** Duplicated-substring detection over OVERLAPPING token windows — the
     * discovery half of exact substring dedup (public method: Lee et al.
@@ -134,7 +131,7 @@ object Dedup {
   def windowDupStats(df: DataFrame, textCol: String, idCol: String,
       w: Int): DataFrame = {
     require(w > 0, "window width must be positive")
-    val winArr = windowDigests(df, textCol, w)
+    val winArr = windowDigests(textCol, w)
     val ex = df.select(col(idCol), explode(winArr).as("__h"))
     val counts = ex.groupBy("__h").agg(count(lit(1)).as("__c"))
     ex.join(counts, "__h")
@@ -192,7 +189,7 @@ object Dedup {
     // re-derived it from text. Materialize the per-doc digest arrays
     // ONCE (node-local, digest-grain: ~20 bytes/window, no text, no
     // shuffle); the count pass and the scoring pass both read it.
-    val wins = df.select(col(idCol), windowDigests(df, textCol, w).as("__wins"))
+    val wins = df.select(col(idCol), windowDigests(textCol, w).as("__wins"))
       .filter(size(col("__wins")) > 0)
       .localCheckpoint()
     // pass 1: exact dup-digest set, materialized once — serves both the
@@ -253,7 +250,7 @@ object Dedup {
       w: Int): DataFrame = {
     require(w > 0, "window width must be positive")
     val occ = df
-      .select(col(idCol), posexplode(windowDigests(df, textCol, w))
+      .select(col(idCol), posexplode(windowDigests(textCol, w))
         .as(Seq("__p", "__h")))
     // global first occurrence per DUPLICATED digest (c > 1): min over the
     // (id, pos) struct — lexicographic, total, deterministic
@@ -332,7 +329,6 @@ object Dedup {
     * batch callers apply [[graft.core.Tables.spread]] first. */
   private[graft] def signed(df: DataFrame, textCol: String,
       keep: Seq[String], k: Int, shingleN: Int): DataFrame = {
-    graft.functions.MinHashSig.register(df.sparkSession, shingleN, k)
     df.select(keep.map(col) :+ graft.functions.MinHashSig
         .minhashSig(col(textCol), shingleN, k).as("__m"): _*)
       .filter(col("__m").isNotNull)

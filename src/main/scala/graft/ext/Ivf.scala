@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorOps
 
 /** IVF (inverted-file) approximate nearest neighbor — the clustered
   * alternative to random-hyperplane LSH (`Similarity`): partition the
@@ -48,15 +49,6 @@ object Ivf {
         col(idCol))
       .limit(k)
       .select(col(embCol)).collect()
-
-  /** Index (0-based) of the nearest centroid (ties break to the lowest
-    * index — deterministic). `graft.functions.NearestCentroid` is a
-    * native expression with `doGenCode` — a k×dim primitive loop per row —
-    * where the HOF formulation (aggregate ∘ zip_with per centroid) would
-    * interpret its lambdas per element. */
-  def nearestCell(spark: org.apache.spark.sql.SparkSession, emb: Column,
-      centroids: Seq[Seq[Double]]): Column =
-    graft.functions.VectorOps.nearestCentroid(spark, emb, centroids)
 
   /** Lloyd's k-means on the embedding column; returns k centroids: the
     * `m = 1` case of the one k-means kernel, [[lloyd]].
@@ -108,7 +100,7 @@ object Ivf {
     (1 to iters).foreach { _ =>
       val means = corpus
         .select(array((0 until m).map(j =>
-          nearestCell(corpus.sparkSession, Pq.subspace(embCol, j, m, subDim),
+          VectorOps.nearestCentroid(Pq.subspace(embCol, j, m, subDim),
             books(j))): _*).as("__cells"), col(embCol))
         .select(col("__cells"), posexplode(col(embCol)).as(Seq("pos", "v")))
         .select(jOf.as("j"), pmod(col("pos"), lit(subDim)).as("p"),
@@ -132,8 +124,7 @@ object Ivf {
   /** Cell assignment column for writing the corpus partitioned by cell. */
   def withCell(corpus: DataFrame, embCol: String,
       centroids: Seq[Seq[Double]]): DataFrame =
-    corpus.withColumn("cell",
-      nearestCell(corpus.sparkSession, col(embCol), centroids))
+    corpus.withColumn("cell", VectorOps.nearestCentroid(col(embCol), centroids))
 
   /** The `nprobe` nearest cell indices for a VECTOR COLUMN (per-row
     * probe ranking — no driver involvement, so it works for query SETS,
@@ -166,7 +157,6 @@ object Ivf {
   def annJoin(queries: DataFrame, corpus: DataFrame, embCol: String,
       idCol: String, centroids: Seq[Seq[Double]], k: Int,
       nprobe: Int): DataFrame = {
-    graft.functions.VectorOps.register(corpus.sparkSession)
     val c = withCell(corpus, embCol, centroids)
       .select(col(idCol).as("nbr_id"), col(embCol).as("__nbr_emb"),
         col("cell"))
@@ -183,7 +173,6 @@ object Ivf {
       centroids: Seq[Seq[Double]], query: Seq[Double], k: Int,
       nprobe: Int): DataFrame = {
     val q = array(query.map(lit): _*)
-    graft.functions.VectorOps.register(corpus.sparkSession)
     withCell(corpus, embCol, centroids)
       .filter(col("cell").isin(nearestCells(centroids, query, nprobe): _*))
       .select(col(idCol),

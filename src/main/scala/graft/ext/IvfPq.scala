@@ -26,7 +26,6 @@ object IvfPq {
     * index (centroids only — k·dim + m·k'·subDim doubles). */
   def build(corpus: DataFrame, embCol: String, idCol: String, nCells: Int,
       m: Int, k: Int = 256, iters: Int = 3): (DataFrame, Index) = {
-    val spark = corpus.sparkSession
     val cells = Ivf.train(corpus, embCol, idCol, nCells, iters)
     val cellsLit = Ivf.matrixLit(cells)
     // checkpoint the residual frame ONCE (r19, guide §2.4): Pq.train runs
@@ -36,7 +35,7 @@ object IvfPq {
     // residual) — the same order of size as the corpus the caller
     // already persists, reclaimed by the context cleaner with the result
     val withRes = corpus
-      .withColumn("cell", Ivf.nearestCell(spark, col(embCol), cells))
+      .withColumn("cell", graft.functions.VectorOps.nearestCentroid(col(embCol), cells))
       .withColumn("__res",
         zip_with(col(embCol), element_at(cellsLit, col("cell") + 1),
           (a, b) => a - b))

@@ -53,7 +53,6 @@ object LangModel {
   /** Per-document distinct-bigram frequencies: (idCol, bigram, tf). */
   def docBigrams(docs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
-    graft.functions.TermFreqs.register(docs.sparkSession)
     graft.core.Tables.spread(docs)
       .select(col(idCol), explode(
         graft.functions.TermFreqs.termFreqs(bigramText(col(textCol)))))

@@ -50,9 +50,8 @@ object Pq {
     * the float vectors. Pure per-row codegen expressions. */
   def encode(corpus: DataFrame, embCol: String, book: Codebook,
       codeCol: String = "pq_code"): DataFrame = {
-    val spark = corpus.sparkSession
     corpus.withColumn(codeCol, array((0 until book.m).map(j =>
-      graft.functions.VectorOps.nearestCentroid(spark,
+      graft.functions.VectorOps.nearestCentroid(
         subspace(embCol, j, book.m, book.subDim), book.centroids(j))): _*))
   }
 

@@ -45,8 +45,6 @@ object SemDedup {
     * another re-deriving the same model. */
   def dedupFlagsWithCentroids(corpus: DataFrame, embCol: String,
       idCol: String, tau: Double, centroids: Seq[Seq[Double]]): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.VectorOps.register(spark)
     val assigned = graft.core.Tables.spread(
       Ivf.withCell(corpus, embCol, centroids))
       .select(col(idCol), col("cell"), col(embCol).as("__e"),

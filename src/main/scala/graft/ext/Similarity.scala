@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
 object Similarity {
   import graft.functions.VectorOps
 
-  /** Codegen cosine (requires VectorOps.register on the session; handles
-    * float/double element mixes without a transform-cast pass). */
+  /** Codegen cosine (handles float/double element mixes without a
+    * transform-cast pass). */
   def cosineCodegen(a: Column, b: Column): Column =
     VectorOps.vecDot(a, b) /
       nullif(VectorOps.vecNorm(a) * VectorOps.vecNorm(b), lit(0.0))
@@ -53,7 +53,6 @@ object Similarity {
   /** Exact top-k by cosine against one query vector (broadcast). */
   def topKCosine(corpus: DataFrame, embCol: String, idCol: String,
       query: Seq[Double], k: Int): DataFrame = {
-    VectorOps.register(corpus.sparkSession)
     val q = array(query.map(lit): _*)
     graft.core.Tables.spread(corpus).select(col(idCol),
       cosineCodegen(col(embCol), q).as("cosine"))
@@ -70,9 +69,7 @@ object Similarity {
 
   /** Random-hyperplane LSH bucket id: one bit per plane = sign of the
     * projection. Same-bucket vectors are cosine-similar candidates.
-    * Projections run through the codegen `vec_dot` — callers must
-    * `VectorOps.register(spark)` first (every DataFrame-taking entry
-    * point in this object does). */
+    * Projections run through the codegen `vec_dot`. */
   def lshBucket(emb: Column, planes: Seq[Seq[Int]]): Column =
     concat_ws("", planes.map { p =>
       val plane = array(p.map(v => lit(v.toDouble)): _*)
@@ -107,7 +104,6 @@ object Similarity {
     * not a full pass. */
   def annTopKCosine(corpus: DataFrame, embCol: String, idCol: String,
       query: Seq[Double], k: Int, bits: Int = 8, probes: Int = 1): DataFrame = {
-    VectorOps.register(corpus.sparkSession)
     val planes = hyperplanes(bits, query.size)
     val buckets = probeBuckets(query, planes, probes)
     val q = array(query.map(lit): _*)
@@ -150,7 +146,6 @@ object Similarity {
     require(maxBucketCandidates >= 1, "maxBucketCandidates must be >= 1")
     require(probes >= 1 && probes <= bits + 1,
       s"probes must be in [1, bits+1], got $probes")
-    VectorOps.register(corpus.sparkSession)
     val planes = hyperplanes(bits, dim)
     // norms once per vector before the pair join (not per pair)
     val b = graft.core.Tables.spread(corpus)
@@ -232,7 +227,6 @@ object Similarity {
     * within buckets (equi-join), never across the full cross product. */
   def nearDupEmbeddings(corpus: DataFrame, embCol: String, idCol: String,
       threshold: Double, bits: Int, dim: Int): DataFrame = {
-    VectorOps.register(corpus.sparkSession)
     val planes = hyperplanes(bits, dim)
     // Norms are computed ONCE per vector before the pair join (computing
     // cosineCodegen per pair would re-derive both norms for every candidate —

@@ -103,7 +103,6 @@ object TextAnalysis {
     // per-doc term counts come out of the fused TermFreqs row pass
     // already aggregated: no (doc, token-occurrence) shuffle at all —
     // the first wide operation is the (much smaller) df aggregation
-    graft.functions.TermFreqs.register(df.sparkSession)
     val tf = graft.core.Tables.spread(df)
       .select(col(idCol),
         explode(graft.functions.TermFreqs.termFreqs(col(textCol))))
@@ -130,7 +129,6 @@ object TextAnalysis {
     * shuffle). Null for docs with no tokens. */
   def withTokenEntropy(df: DataFrame, textCol: String,
       outCol: String = "token_entropy"): DataFrame = {
-    graft.functions.TokenEntropy.register(df.sparkSession)
     df.withColumn(outCol,
       graft.functions.TokenEntropy.tokenEntropy(col(textCol)))
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -34,17 +34,10 @@ case class AccentFold(child: Expression) extends UnaryExpression {
 }
 
 object AccentFold {
-  /** Column API (input must be a string column). Resolves through the
-    * function registry, so `register(spark)` (or GraftExtensions) must
-    * have run in the session first — Spark 4 keeps the Expression↔Column
-    * bridge private, the registry is the public seam. */
+  /** Column API (input must be a string column); SQL:
+    * `SELECT accent_fold(nom) FROM ...`. Resolves through the function
+    * table [[graft.plans.GraftExtensions]], which every `GraftSession`
+    * installs. */
   def accentFold(c: Column): Column =
     org.apache.spark.sql.functions.call_function("accent_fold", c)
-
-  /** SQL registration: `SELECT accent_fold(nom) FROM ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "accent_fold",
-      FnReg.checked("accent_fold", 1)(exprs => AccentFold(exprs.head)),
-      "built-in")
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bloom-filter join pruning — the explicit form of Spark's own runtime
@@ -19,40 +17,24 @@ import org.apache.spark.sql.functions._
   * results are identical to the unfiltered join.
   *
   * Uses Spark's own `BloomFilterAggregate` / `BloomFilterMightContain`
-  * Catalyst expressions (codegen'd, spill-safe) registered under
-  * `bloom_filter_agg` / `might_contain`, keyed by `xxhash64` like the
-  * built-in runtime filter.
+  * Catalyst expressions (codegen'd, spill-safe), injected by
+  * [[graft.plans.GraftExtensions]] as `bloom_filter_agg` /
+  * `might_contain`, keyed by `xxhash64` like the built-in runtime filter.
   */
 object BloomOps {
-
-  /** Idempotent registration for SQL / `call_function` use. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_filter_agg",
-      FnReg.checkedRange("bloom_filter_agg", 1, 3)(exprs => exprs.size match {
-        case 1 => new BloomFilterAggregate(exprs.head)
-        case 2 => new BloomFilterAggregate(exprs(0), exprs(1))
-        case _ => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      }), "built-in")
-    reg.createOrReplaceTempFunction("might_contain",
-      FnReg.checked("might_contain", 2)(exprs =>
-        BloomFilterMightContain(exprs(0), exprs(1))), "built-in")
-  }
 
   /** The Bloom-filter binary over `df`'s `key` column, sized for
     * `expectedItems` — one small aggregate job whose result is a
     * driver-side scalar, the same shape as a broadcast variable, NOT a
     * per-row collect. None when `df` is empty (the aggregate is null):
-    * then no probe can match. Registers the two functions, so callers
-    * can probe the result with `might_contain`. */
+    * then no probe can match. Callers probe the result with
+    * `might_contain`. */
   def build(df: DataFrame, key: String,
-      expectedItems: Long): Option[Array[Byte]] = {
-    register(df.sparkSession)
+      expectedItems: Long): Option[Array[Byte]] =
     Option(df
       .select(call_function("bloom_filter_agg",
         xxhash64(col(key)), lit(expectedItems)).as("bf"))
       .head().getAs[Array[Byte]](0))
-  }
 
   /** `large` rows whose `largeKey` might appear among `small`'s
     * `smallKey` values (bloom pre-filter; no false negatives). */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -101,14 +100,6 @@ object BottomKStrings {
 }
 
 object BottomK {
-  /** Register `bottom_k(expr, k)` for SQL and call_function use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k",
-      FnReg.checked("bottom_k", 2)(exprs => BottomKStrings(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue())),
-      "built-in")
-
   def bottomK(c: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("bottom_k", c,
       org.apache.spark.sql.functions.lit(k))

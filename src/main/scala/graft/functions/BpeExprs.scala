@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -250,16 +250,9 @@ case class BpeEncodeText(left: Expression, right: Expression)
 }
 
 object BpeEncode {
-  /** Column API; requires [[register]] (the Spark 4 registry seam, same
-    * as [[AccentFold]]). `merges` must be a literal array-of-struct
-    * column (`typedlit(Seq[(String, String)])`, rank order). */
+  /** `merges` must be a literal array-of-struct column
+    * (`typedlit(Seq[(String, String)])`, rank order). */
   def bpeEncodeText(text: Column, merges: Column): Column =
     org.apache.spark.sql.functions.call_function(
       "bpe_encode_text", text, merges)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode_text",
-      FnReg.checked("bpe_encode_text", 2)(es => BpeEncodeText(es(0), es(1))),
-      "built-in")
 }

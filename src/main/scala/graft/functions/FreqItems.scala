@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -125,14 +124,6 @@ case class FreqItemsSketch(
 }
 
 object FreqItems {
-  /** Register `freq_items(expr, k)` for SQL and call_function use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items",
-      FnReg.checked("freq_items", 2)(exprs => FreqItemsSketch(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue())),
-      "built-in")
-
   def freqItems(c: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("freq_items", c,
       org.apache.spark.sql.functions.lit(k))

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -398,12 +399,6 @@ object TextStats {
 
   def textStats(c: Column): Column =
     org.apache.spark.sql.functions.call_function("text_stats", c)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_stats",
-      FnReg.checked("text_stats", 1)(exprs => TextStats(exprs.head)),
-      "built-in")
 }
 
 /** Per-row MinHash signature + distinct shingles (see
@@ -433,16 +428,8 @@ case class MinHashSig(child: Expression, shingleN: Int, k: Int)
 
 object MinHashSig {
   def minhashSig(c: Column, shingleN: Int = 3, k: Int = 8): Column =
-    org.apache.spark.sql.functions.call_function(s"minhash_sig_${shingleN}_$k", c)
-
-  /** Registers `minhash_sig_<n>_<k>` (params aren't SQL-passable). */
-  def register(spark: SparkSession, shingleN: Int = 3, k: Int = 8): Unit = {
-    val name = s"minhash_sig_${shingleN}_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      FnReg.checked(name, 1)(exprs => MinHashSig(exprs.head, shingleN, k)),
-      "built-in")
-  }
+    org.apache.spark.sql.functions.call_function("minhash_sig", c,
+      lit(shingleN), lit(k))
 }
 
 /** Per-row window-digest array (see [[TextExprsImpl.windowDigests]]). */
@@ -465,16 +452,7 @@ case class WindowDigests(child: Expression, w: Int) extends UnaryExpression {
 
 object WindowDigests {
   def windowDigests(c: Column, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(s"window_digests_$w", c)
-
-  /** Registers `window_digests_<w>` (params aren't SQL-passable). */
-  def register(spark: SparkSession, w: Int): Unit = {
-    val name = s"window_digests_$w"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      FnReg.checked(name, 1)(exprs => WindowDigests(exprs.head, w)),
-      "built-in")
-  }
+    org.apache.spark.sql.functions.call_function("window_digests", c, lit(w))
 }
 
 /** Per-row term-frequency map (see [[TextExprsImpl.termFreqs]]). */
@@ -496,11 +474,6 @@ case class TermFreqs(child: Expression) extends UnaryExpression {
 object TermFreqs {
   def termFreqs(c: Column): Column =
     org.apache.spark.sql.functions.call_function("term_freqs", c)
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "term_freqs",
-      FnReg.checked("term_freqs", 1)(exprs => TermFreqs(exprs.head)),
-      "built-in")
 }
 
 /** Per-row token-distribution Shannon entropy (see
@@ -529,11 +502,6 @@ case class TokenEntropy(child: Expression) extends UnaryExpression {
 object TokenEntropy {
   def tokenEntropy(c: Column): Column =
     org.apache.spark.sql.functions.call_function("token_entropy", c)
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_entropy",
-      FnReg.checked("token_entropy", 1)(exprs => TokenEntropy(exprs.head)),
-      "built-in")
 }
 
 /** Per-row 64-bit SimHash bit string (see [[TextExprsImpl.simhash]]). */
@@ -554,9 +522,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 object SimHash64 {
   def simhash64(c: Column): Column =
     org.apache.spark.sql.functions.call_function("simhash64", c)
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      FnReg.checked("simhash64", 1)(exprs => SimHash64(exprs.head)),
-      "built-in")
 }

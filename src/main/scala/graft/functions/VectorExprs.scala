@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,7 +76,7 @@ case class VecDot(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_dot"
 
-  // vec_dot is registered session-wide as SQL: without this check, an
+  // vec_dot is callable from SQL: without this check, an
   // array<int>/array<string> argument would read element slots through
   // getFloat/getDouble and silently return garbage instead of failing
   // analysis.
@@ -196,8 +196,6 @@ case class NearestCentroidBc(child: Expression,
 }
 
 object VectorOps {
-  /** Column API (requires [[register]] on the session first — Spark 4's
-    * Expression↔Column bridge is private, the registry is the seam). */
   def vecDot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
 
@@ -214,45 +212,40 @@ object VectorOps {
     * call. Keys are (applicationId, full matrix) — content equality, so
     * a hash collision can never serve the wrong centroids, and a
     * restarted SparkContext can never be handed a dead broadcast.
-    * Eviction ONLY unpersists executor blocks (re-fetchable from the
-    * driver if a straggler still needs them) — it never drops registry
-    * entries, which could yank a function out from under an in-flight
-    * plan; stale registry closures cost driver memory bounded by the
-    * distinct matrices of the session, which the driver held anyway. */
+    * Eviction only unpersists executor blocks (re-fetchable from the
+    * driver if a straggler still needs them), so an in-flight plan that
+    * holds an evicted handle still runs. */
   private val MaxCachedBroadcasts = 8
   private val bcCache = new java.util.LinkedHashMap[(String, Seq[Seq[Double]]),
     org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]](16, 0.75f, true)
 
-  /** `nearest_centroid` takes the centroid matrix at registration time (a
-    * literal matrix is not SQL-passable). The registered name is unique
-    * per matrix so concurrent queries with different centroids (e.g. the
-    * parallel Verify dump) can never clobber each other's registration.
-    *
-    * Representation switch: small matrices embed in the expression (zero
-    * extra machinery); past [[BroadcastThresholdElems]] the matrix ships
-    * as a broadcast variable — once per executor, not once per task —
-    * so large-k×dim IVF/PQ assignment stays cheap on a 1000-executor
-    * cluster. Results are bit-identical either way. */
-  def nearestCentroid(spark: SparkSession, emb: Column,
-      centroids: Seq[Seq[Double]]): Column = {
+  /** 0-based index of the nearest of `centroids` to `emb` (squared L2,
+    * ties break to the lowest index): a k×dim primitive loop per row in
+    * generated code, where the HOF formulation (aggregate ∘ zip_with per
+    * centroid) would interpret its lambdas per element. The matrix
+    * travels as a literal argument of `nearest_centroid`. */
+  def nearestCentroid(emb: Column, centroids: Seq[Seq[Double]]): Column =
+    org.apache.spark.sql.functions.call_function("nearest_centroid", emb,
+      org.apache.spark.sql.functions.typedlit(centroids))
+
+  /** The `nearest_centroid` builder's representation switch: small
+    * matrices embed in the expression (zero extra machinery); past
+    * [[BroadcastThresholdElems]] the matrix ships as a broadcast
+    * variable — once per executor, not once per task — so large-k×dim
+    * IVF/PQ assignment stays cheap on a 1000-executor cluster. Results
+    * are bit-identical either way. */
+  private[graft] def centroidExpr(emb: Expression,
+      centroids: Seq[Seq[Double]]): Expression = {
     val elems = centroids.size * centroids.headOption.map(_.size).getOrElse(0)
-    if (elems <= BroadcastThresholdElems) {
-      val name = "nearest_centroid_" + java.lang.Integer.toHexString(
-        java.util.Arrays.deepHashCode(
-          centroids.map(_.toArray).toArray[AnyRef]))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name,
-        FnReg.checked(name, 1)(exprs => NearestCentroid(exprs.head, centroids)),
-        "built-in")
-      org.apache.spark.sql.functions.call_function(name, emb)
-    } else {
-      val mat = centroids.map(_.toArray).toArray
-      val key = (spark.sparkContext.applicationId, centroids)
+    if (elems <= BroadcastThresholdElems) NearestCentroid(emb, centroids)
+    else {
+      val sc = org.apache.spark.SparkContext.getOrCreate()
+      val key = (sc.applicationId, centroids)
       val bc = bcCache.synchronized {
         val cached = bcCache.get(key)
         val b = if (cached != null) cached
         else {
-          val fresh = spark.sparkContext.broadcast(mat)
+          val fresh = sc.broadcast(centroids.map(_.toArray).toArray)
           bcCache.put(key, fresh)
           fresh
         }
@@ -264,24 +257,7 @@ object VectorOps {
         }
         b
       }
-      // name by broadcast id, NOT content hash: the cache already dedups
-      // identical matrices onto one broadcast (so the name is stable for
-      // them), while distinct matrices get distinct ids — a 32-bit
-      // content-hash collision could otherwise clobber a concurrent
-      // query's registration and silently swap its centroids
-      val name = "nearest_centroid_bc_" + bc.id
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name,
-        FnReg.checked(name, 1)(exprs => NearestCentroidBc(exprs.head, bc)),
-        "built-in")
-      org.apache.spark.sql.functions.call_function(name, emb)
+      NearestCentroidBc(emb, bc)
     }
   }
-
-  /** Idempotent; `SELECT vec_dot(a, b)` afterwards. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      FnReg.checked("vec_dot", 2)(exprs => VecDot(exprs.head, exprs(1))),
-      "built-in")
 }

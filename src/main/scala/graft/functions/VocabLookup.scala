@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -103,16 +103,8 @@ case class VocabLookupAll(left: Expression, right: Expression)
 }
 
 object VocabLookup {
-  /** Column API; requires [[register]] (the Spark 4 registry seam, same
-    * as [[AccentFold]]). `vocab` must be a literal map column
-    * (`typedlit(Map[String, Long])`). */
+  /** `vocab` must be a literal map column (`typedlit(Map[String, Long])`). */
   def vocabLookupAll(tokens: Column, vocab: Column): Column =
     org.apache.spark.sql.functions.call_function(
       "vocab_lookup_all", tokens, vocab)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vocab_lookup_all",
-      FnReg.checked("vocab_lookup_all", 2)(es => VocabLookupAll(es(0), es(1))),
-      "built-in")
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -61,10 +61,6 @@ object WeightedMean
   // one UserDefinedFunction instance: udaf() runs encoder reflection,
   // no reason to repeat it per call site
   private lazy val fn = udaf(this)
-
-  /** Register as SQL function `weighted_mean(value, weight)`. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("weighted_mean", fn)
 
   def weightedMean(value: Column, weight: Column): Column =
     fn.apply(value, weight)

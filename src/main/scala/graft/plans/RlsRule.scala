@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, In, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -79,39 +78,4 @@ object RlsInjectionRule {
   /** Marks a Filter node as RLS-injected so the fixed-point analyzer does
     * not stack a second copy. */
   val InjectedTag: TreeNodeTag[Boolean] = TreeNodeTag[Boolean]("graft.rls.injected")
-}
-
-/** `SparkSessionExtensions` entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectResolutionRule(session => RlsInjectionRule(session))
-    // bounded-heap top-k-per-key replacing sort-based row_number windows
-    // (no-op unless the plan matches; see TopKPerKey.scala)
-    e.injectPlannerStrategy(session => TopKPerKeyStrategy(session))
-    // every builder validates arity up front: wrong arg count from SQL
-    // raises a proper AnalysisException (WRONG_NUM_ARGS) naming the
-    // function and the expected count, not an IndexOutOfBoundsException
-    def fn(name: String, clazz: String, arity: Int,
-        builder: Seq[Expression] => Expression): Unit =
-      e.injectFunction(
-        (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-          new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-            clazz, name),
-          graft.functions.FnReg.checked(name, arity)(builder)))
-    fn("accent_fold", "graft.functions.AccentFold", 1,
-      exprs => graft.functions.AccentFold(exprs.head))
-    fn("vec_dot", "graft.functions.VecDot", 2,
-      exprs => graft.functions.VecDot(exprs.head, exprs(1)))
-    fn("text_stats", "graft.functions.TextStats", 1,
-      exprs => graft.functions.TextStats(exprs.head))
-    fn("simhash64", "graft.functions.SimHash64", 1,
-      exprs => graft.functions.SimHash64(exprs.head))
-    fn("term_freqs", "graft.functions.TermFreqs", 1,
-      exprs => graft.functions.TermFreqs(exprs.head))
-    // default MinHash geometry (3-word shingles, 8 hashes)
-    fn("minhash_sig_3_8", "graft.functions.MinHashSig", 1,
-      exprs => graft.functions.MinHashSig(exprs.head, 3, 8))
-  }
 }

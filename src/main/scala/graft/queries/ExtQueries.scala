@@ -96,7 +96,6 @@ object ExtQueries {
          |FROM feat ORDER BY doc_id""".stripMargin) { (s, d) =>
       // all features from ONE fused per-row pass (graft.functions.TextStats);
       // the arithmetic below mirrors the oracle's CASE/ratio shapes exactly
-      graft.functions.TextStats.register(s)
       val st = docsSpread(s, d)
         .withColumn("__st", graft.functions.TextStats.textStats(col("text")))
       val nt = col("__st.n_tokens")
@@ -290,15 +289,12 @@ object ExtQueries {
          |SELECT doc_id, lang, n_tokens,
          |       CAST(floor((cum - n_tokens) / 1000.0) AS INT) AS shard_id
          |FROM c ORDER BY lang, doc_id""".stripMargin) { (s, d) =>
-      // narrow projection + the no-materialization mode (this gate keeps
-      // the fast path oracle-verified at every SF; sf1 A/B vs
-      // materialized is a wash here — the boundary pass reads doc_id
-      // only, but the totals pass re-tokenizes)
+      // narrow projection: the cumsum checkpoints what it is given
       val withTok = docsSpread(s, d).withColumn("n_tokens",
         size(TextAnalysis.tokens(col("text"))))
         .select("doc_id", "lang", "n_tokens")
       Curation.packShards(withTok, "n_tokens", "doc_id",
-          budget = 1000L, partitionCols = Seq("lang"), materialize = false)
+          budget = 1000L, partitionCols = Seq("lang"))
         .select("doc_id", "lang", "n_tokens", "shard_id")
         .orderBy("lang", "doc_id")
     },
@@ -379,15 +375,12 @@ object ExtQueries {
          |       CAST(min(doc_id) AS BIGINT) AS first_doc,
          |       CAST(max(doc_id) AS BIGINT) AS last_doc
          |FROM s GROUP BY 1, 2 ORDER BY lang, seq_id""".stripMargin) { (s, d) =>
-      // materialized mode: the upstream includes tokenization (a
-      // computed projection, not a bare scan), so one tokenize pass +
-      // the narrow checkpoint beats the fast path's tokenize-per-pass
-      // (sf1 A/B: 1.04 vs 1.65 s; x_shard_pack keeps the fast path so
-      // BOTH modes stay oracle-verified at every SF)
+      // packSequences projects (strata, id, tokens) before the cumsum's
+      // checkpoint, so the text is tokenized once
       val withTok = docsSpread(s, d).withColumn("n_tok",
         size(TextAnalysis.tokens(col("text"))))
       Curation.packSequences(withTok, "n_tok", "doc_id",
-          seqLen = 512, partitionCols = Seq("lang"), materialize = true)
+          seqLen = 512, partitionCols = Seq("lang"))
         .select("lang", "seq_id", "n_docs", "n_tokens", "first_doc", "last_doc")
         .orderBy("lang", "seq_id")
     },
@@ -601,7 +594,6 @@ object ExtQueries {
     Q("x_dedup_bottomk_sketch",
       """SELECT source, array_to_string((list_sort(list(md5(text))))[1:4], ',') AS sketch
         |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      graft.functions.BottomK.register(s)
       // joined to one string: the driver's pandas-side compare can't sort
       // rows on a raw array column (unhashable ndarray)
       docs(s, d).groupBy("source")
@@ -628,7 +620,6 @@ object ExtQueries {
         |SELECT doc_id,
         |       string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY bit_idx) AS simhash
         |FROM acc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.functions.SimHash64.register(s)
       docsSpread(s, d).select(col("doc_id"),
         graft.functions.SimHash64.simhash64(col("text")).as("simhash"))
         .orderBy("doc_id")
@@ -672,7 +663,6 @@ object ExtQueries {
       (s, d) =>
         // codegen vec_dot directly on the float arrays — the HOF cosine over
         // transform-cast arrays interprets every element
-        graft.functions.VectorOps.register(s)
         val corpus = embs(s, d)
         val qv = corpus.filter(col("vec_id") === 0)
           .select("embedding").first().getSeq[Float](0).map(_.toDouble)
@@ -869,7 +859,6 @@ object ExtQueries {
          |  round(avg(kept) + 1e-7, 4) AS keep_rate,
          |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
          |FROM r GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      graft.functions.TextStats.register(s)
       val st = docsSpread(s, d)
         .withColumn("__st", graft.functions.TextStats.textStats(col("text")))
       val nt = col("__st.n_tokens")
@@ -907,7 +896,6 @@ object ExtQueries {
          |        FROM tok GROUP BY 1)
          |SELECT token, cnt, 1 AS sketch_ok
          |FROM cnt ORDER BY cnt DESC, token LIMIT 10""".stripMargin) { (s, d) =>
-      graft.functions.FreqItems.register(s)
       val k = 64
       val toks = docsSpread(s, d)
         .select(explode(TextAnalysis.tokens(lower(col("text")))).as("token"))

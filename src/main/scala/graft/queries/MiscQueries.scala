@@ -26,9 +26,8 @@ object MiscQueries {
 
   /** Exact cosine top-k ordered by the ROUNDED value (ties → vec_id) so
     * the limit-k cut is reproducible in the DuckDB oracle. */
-  private def exactCosTop(s: SparkSession, corpus: DataFrame,
+  private def exactCosTop(corpus: DataFrame,
       qv: Seq[Double], k: Int): DataFrame = {
-    graft.functions.VectorOps.register(s)
     val q = array(qv.map(lit): _*)
     Tables.spread(corpus).select(col("vec_id"),
       Fp.r(Similarity.cosineCodegen(col("embedding"), q), 4).as("cosine"))
@@ -39,9 +38,8 @@ object MiscQueries {
     * e·e − 2·e·q + q·q over the codegen vec_dot (three primitive loops,
     * no per-element HOF interpretation); the algebraic rearrangement vs
     * the oracle's Σ(e−q)² differs by ≪ the 1e-7 rounding nudge. */
-  private def exactL2Top(s: SparkSession, corpus: DataFrame,
+  private def exactL2Top(corpus: DataFrame,
       qv: Seq[Double], k: Int): DataFrame = {
-    graft.functions.VectorOps.register(s)
     val q = array(qv.map(lit): _*)
     val qq = qv.map(x => x * x).sum
     Tables.spread(corpus).select(col("vec_id"),
@@ -576,7 +574,6 @@ object MiscQueries {
       val qBucket = planes.map(p =>
         if (p.zip(qv).map { case (w, x) => x * w }.sum > 0) "1" else "0").mkString
       val q = array(qv.map(lit): _*)
-      graft.functions.VectorOps.register(s)
       corpus
         .withColumn("bucket", Similarity.lshBucket(col("embedding"), planes))
         .filter(col("bucket") === qBucket)
@@ -628,7 +625,6 @@ object MiscQueries {
         .select("embedding").first().getSeq[Float](0).map(_.toDouble)
       val buckets = Similarity.probeBuckets(qv, planes, probes = 3)
       val q = array(qv.map(lit): _*)
-      graft.functions.VectorOps.register(s)
       corpus
         .withColumn("bucket", Similarity.lshBucket(col("embedding"), planes))
         .filter(col("bucket").isin(buckets: _*))
@@ -671,7 +667,7 @@ object MiscQueries {
       // collect the exact top-10 ONCE and emit it as a local relation —
       // returning the lazy exact-scan DF would re-run the corpus scan
       // when the caller executes the result
-      val exactRows = exactCosTop(s, corpus, qv, 10).collect()
+      val exactRows = exactCosTop(corpus, qv, 10).collect()
       val ok = if ((ivfIds & exactRows.map(_.getLong(0)).toSet).size >= 5) 1 else 0
       import s.implicits._
       exactRows.map(r => (r.getLong(0), r.getDouble(1), ok)).toSeq
@@ -711,7 +707,6 @@ object MiscQueries {
         .select("q_id", "nbr_id").collect()
         .groupBy(_.getLong(0)).view
         .mapValues(_.map(_.getLong(1)).toSet).toMap
-      graft.functions.VectorOps.register(s)
       val q = broadcast(queries.select(col("vec_id").as("q_id"),
         col("embedding").as("__q")))
       val w = Window.partitionBy("q_id")
@@ -777,7 +772,7 @@ object MiscQueries {
           graft.ext.Pq.encode(corpus, "embedding", book),
           "pq_code", "vec_id", book, qv, k = depth)
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val exactRows = exactL2Top(s, corpus, qv, 10).collect()
+      val exactRows = exactL2Top(corpus, qv, 10).collect()
       val ok =
         if ((shortlist & exactRows.map(_.getLong(0)).toSet).size >= 5) 1 else 0
       import s.implicits._
@@ -811,7 +806,7 @@ object MiscQueries {
       val shortlist = graft.ext.IvfPq.search(index, meta, "vec_id", qv,
         k = 50, nprobe = 4)
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val exactRows = exactL2Top(s, corpus, qv, 10).collect()
+      val exactRows = exactL2Top(corpus, qv, 10).collect()
       val ok =
         if ((shortlist & exactRows.map(_.getLong(0)).toSet).size >= 3) 1 else 0
       import s.implicits._

@@ -326,10 +326,9 @@ object Relational {
         |        / CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
         |        + 1e-7, 4) AS wavg_price
         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      graft.functions.WeightedMean.register(s)
       t(s, d, "lineitem").groupBy("l_returnflag")
-        .agg(Fp.r(expr("weighted_mean(l_extendedprice, l_quantity)"), 4)
-          .as("wavg_price"))
+        .agg(Fp.r(graft.functions.WeightedMean.weightedMean(
+          col("l_extendedprice"), col("l_quantity")), 4).as("wavg_price"))
         .orderBy("l_returnflag")
     },
 
@@ -958,7 +957,6 @@ object Relational {
     Q("f_accent_fold",
       """SELECT n_name, strip_accents(n_name || '-éÜç') AS folded
         |FROM nation ORDER BY n_name""".stripMargin) { (s, d) =>
-      graft.functions.AccentFold.register(s)
       t(s, d, "nation").select(col("n_name"),
         graft.functions.AccentFold.accentFold(
           concat(col("n_name"), lit("-éÜç"))).as("folded"))

@@ -91,8 +91,9 @@ object SecurityGenerators {
   /** Column form of [[foldLogin]], composed from the codegen
     * [[graft.functions.AccentFold]] expression + built-ins instead of a
     * Scala UDF, so login derivation stays inside whole-stage codegen.
-    * Requires `accent_fold` in the session registry (GraftExtensions or
-    * `AccentFold.register`). */
+    * Sessions come from `GraftSession`, whose [[graft.plans.GraftExtensions]]
+    * injects `accent_fold`; a foreign session adds
+    * `spark.sql.extensions=graft.plans.GraftExtensions`. */
   def foldLoginCol(prenom: Column, nom: Column): Column = {
     def fold(c: Column): Column = regexp_replace(
       lower(graft.functions.AccentFold.accentFold(c)), "[^a-z0-9]", "")

@@ -9,7 +9,6 @@ class BottomKSpec extends SparkSpec {
   import spark.implicits._
 
   test("bottom_k keeps the k smallest across partition merges") {
-    BottomK.register(spark)
     val df = (1 to 1000).map(i => ("g", f"v$i%04d")).toDF("g", "v")
       .repartition(16) // forces serialize/merge across partial aggregates
     val out = df.groupBy("g").agg(BottomK.bottomK($"v", 5).as("sk"))
@@ -18,14 +17,12 @@ class BottomKSpec extends SparkSpec {
   }
 
   test("bottom_k keeps duplicates (multiset semantics, like list_sort)") {
-    BottomK.register(spark)
     val df = Seq("b", "a", "a", "c").toDF("v")
     val out = df.agg(BottomK.bottomK($"v", 3).as("sk")).first().getSeq[String](0)
     assert(out == Seq("a", "a", "b"))
   }
 
   test("bottom_k works in SQL and ignores nulls") {
-    BottomK.register(spark)
     Seq(Some("z"), None, Some("m"), Some("a")).toDF("v")
       .createOrReplaceTempView("bk_in")
     val out = spark.sql("SELECT bottom_k(v, 2) AS sk FROM bk_in")
@@ -34,7 +31,6 @@ class BottomKSpec extends SparkSpec {
   }
 
   test("KMV sketches estimate Jaccard between groups") {
-    BottomK.register(spark)
     // two overlapping element sets: 0-99 and 50-149 → true J = 50/150 = 1/3;
     // md5 makes the value space uniform, as KMV requires
     def h(i: Int) = java.security.MessageDigest.getInstance("MD5")

@@ -118,7 +118,6 @@ class BpeSpec extends SparkSpec {
       (real.size until 50000).map(i => (i.toLong, s"tok_$i")) :+
       (50000L, "😀π") // supplementary-plane + BMP unicode key
     val vlit = typedlit(vocab.map { case (id, t) => (t, id) }.toMap)
-    graft.functions.VocabLookup.register(spark)
     val toks = Seq((1L, Seq("a", "tok_49999", "😀π", "NOT_IN_VOCAB", null)))
       .toDF("doc_id", "bpe_tokens")
     val both = toks.select(
@@ -246,16 +245,15 @@ class BpeSpec extends SparkSpec {
       Bpe.train(uni, "text", 4, batchSize = 1))
   }
 
-  test("trainLocal: the maxVocabWords driver budget fails loudly before " +
-      "collecting") {
-    // with a word floor: six words at frequency 2 pass it and exceed the
-    // budget, and the unfloored train() fallback (the floor-1 case, next
-    // test) would change the merges, so it fails instead
-    val docs = Seq((1L, "a b c d e f a b c d e f")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      Bpe.trainLocal(docs, "text", 4, maxVocabWords = 3, minWordFreq = 2L)
-    }
-    assert(e.getMessage.contains("driver budget"))
+  test("trainLocal: over the driver budget, trains the floored vocabulary") {
+    // three words at frequency 2 pass the floor and exceed the budget;
+    // the two singletons would add merges if the fallback ignored the
+    // floor (the unfloored train() learns 7, the floored vocabulary 4)
+    val docs = Seq((1L, "ab abc bcd ab abc bcd xyz qq")).toDF("doc_id", "text")
+    val over = Bpe.trainLocal(docs, "text", 8, maxVocabWords = 2,
+      minWordFreq = 2L)
+    assert(over == Bpe.trainLocal(docs, "text", 8, minWordFreq = 2L))
+    assert(over.size == 4 && Bpe.train(docs, "text", 8).size == 7)
   }
 
   test("trainLocal: over the driver budget it returns the distributed " +
@@ -430,7 +428,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("null merges literal is a typed analysis error, not an NPE") {
-    graft.functions.BpeEncode.register(spark)
     val df = Seq("abc").toDF("text")
     val eNull = intercept[org.apache.spark.sql.AnalysisException] {
       df.selectExpr("bpe_encode_text(text, " +

@@ -10,7 +10,6 @@ class CatalystSpec extends SparkSpec {
   import spark.implicits._
 
   test("accent_fold expression folds accents, null-safe, via Column API") {
-    AccentFold.register(spark)
     val df = Seq(Some("Jérôme Lefèvre"), Some("Édith"), None)
       .toDF("nom")
     val out = df.select(AccentFold.accentFold($"nom").as("folded"))
@@ -25,7 +24,6 @@ class CatalystSpec extends SparkSpec {
 
   test("weighted_mean Aggregator: decimal-exact, null-safe, partition-stable") {
     import graft.functions.WeightedMean
-    WeightedMean.register(spark)
     val df = Seq(
       ("a", Some(10.0), Some(2.0)),
       ("a", Some(40.0), Some(1.0)),
@@ -46,8 +44,6 @@ class CatalystSpec extends SparkSpec {
   }
 
   test("wrong function arity raises AnalysisException, not IndexOutOfBounds") {
-    AccentFold.register(spark)
-    graft.functions.VectorOps.register(spark)
     val e1 = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT accent_fold('a', 'b')")
     }

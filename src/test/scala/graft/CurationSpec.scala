@@ -166,56 +166,6 @@ class CurationSpec extends SparkSpec {
       .agg(sum("n_tokens")).head().getLong(0) == 24L)
   }
 
-  test("distributedCumsum materialize=false: the value-bucketed fast path " +
-      "matches the single-window cumsum, spans a dominant stratum across " +
-      "buckets, keeps null keys, and falls back for string ids") {
-    import org.apache.spark.sql.expressions.Window
-    val rng = new scala.util.Random(11)
-    val rows = (1L to 1000L).map { i =>
-      (i, if (i <= 900) "en" else s"l${i % 7}", rng.nextInt(50) + 1)
-    }
-    val docs = rows.toDF("doc_id", "lang", "n_tok")
-    val w = Window.partitionBy($"lang").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expect = docs.withColumn("ref", sum($"n_tok".cast("long")).over(w))
-      .select($"doc_id", $"ref").as[(Long, Long)].collect().toMap
-    val cum = Curation.distributedCumsum(docs, "n_tok", "doc_id",
-      Seq("lang"), buckets = 8, cumCol = "__cum", bucketCol = "__b",
-      materialize = false)
-    assert(cum.select($"doc_id", $"__cum").as[(Long, Long)]
-      .collect().toMap == expect)
-    // the dominant stratum spreads across id-quantile buckets (>1 task)
-    assert(cum.filter($"lang" === "en")
-      .select("__b").distinct().count() > 1)
-    // no materialization: the plan has no checkpointed RDD scan
-    val plan = cum.queryExecution.executedPlan.toString
-    assert(!plan.contains("ExistingRDD"), plan.take(400))
-    // null stratum + null id survive the fast path too
-    val withNulls = Seq(
-      (Option(1L), Option("en"), 5), (Option(2L), Option.empty[String], 7),
-      (Option.empty[Long], Option("en"), 3))
-      .toDF("doc_id", "lang", "n_tok")
-    val nf = Curation.distributedCumsum(withNulls, "n_tok", "doc_id",
-      Seq("lang"), buckets = 4, cumCol = "__cum", bucketCol = "__b",
-      materialize = false)
-    assert(nf.count() == 3)
-    // null id buckets to 0 and sorts first: en = (null→3, 1→8)
-    assert(nf.filter($"doc_id" === 1L).select("__cum").head().getLong(0) == 8L)
-    // a string id cannot value-bucket — silently uses the materialized path
-    val sdocs = docs.withColumn("sid", format_string("k%05d", $"doc_id"))
-      .select("sid", "lang", "n_tok")
-    val scum = Curation.distributedCumsum(sdocs, "n_tok", "sid",
-      Seq("lang"), buckets = 8, cumCol = "__cum", bucketCol = "__b",
-      materialize = false)
-    val sExpect = sdocs.withColumn("ref",
-        sum($"n_tok".cast("long")).over(Window.partitionBy($"lang")
-          .orderBy($"sid")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select($"sid", $"ref").as[(String, Long)].collect().toMap
-    assert(scum.select($"sid", $"__cum").as[(String, Long)]
-      .collect().toMap == sExpect)
-  }
-
   test("sampleStratified: deterministic, honors per-stratum thresholds") {
     val docs = (0L until 1000L).map(i =>
       (i, if (i % 2 == 0) "en" else "fr")).toDF("doc_id", "lang")

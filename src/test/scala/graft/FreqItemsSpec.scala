@@ -7,7 +7,6 @@ class FreqItemsSpec extends SparkSpec {
   import spark.implicits._
 
   private def sketchOf(items: Seq[String], k: Int, parts: Int = 4) = {
-    FreqItems.register(spark)
     items.toDF("x").repartition(parts)
       .agg(FreqItems.freqItems(col("x"), k).as("sk"))
       .first().getMap[String, Long](0)
@@ -47,7 +46,6 @@ class FreqItemsSpec extends SparkSpec {
   }
 
   test("nulls are skipped, SQL registration and arity check work") {
-    FreqItems.register(spark)
     val sk = Seq(Some("a"), None, Some("a"), Some("b"), None)
       .toDF("x").selectExpr("freq_items(x, 4) AS sk")
       .first().getMap[String, Long](0)
@@ -61,7 +59,6 @@ class FreqItemsSpec extends SparkSpec {
   test("grouped aggregation keeps per-group sketches independent") {
     val df = ((1 to 20).map(i => ("g1", s"a$i")) ++
       Seq.fill(30)(("g2", "hot"))).toDF("g", "x")
-    FreqItems.register(spark)
     val rows = df.repartition(5).groupBy("g")
       .agg(FreqItems.freqItems(col("x"), 8).as("sk"))
       .collect().map(r => r.getString(0) -> r.getMap[String, Long](1)).toMap

@@ -30,7 +30,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("TextStats agrees with the HOF formulations field by field") {
-    TextStats.register(spark)
     val t = col("text")
     val got = corpus.select(
       $"doc_id",
@@ -66,7 +65,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("MinHashSig agrees with the HOF shingle/minhash formulation") {
-    MinHashSig.register(spark, 3, 8)
     val sh = Dedup.shingles(col("text"), 3)
     val hofCols = (0 until 8).map(i => Dedup.minhash(sh, i).as(s"e_mh$i"))
     val got = corpus.select(
@@ -89,7 +87,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("MinHashSig dsh is the distinct shingle set") {
-    MinHashSig.register(spark, 3, 8)
     val got = corpus.select($"doc_id",
       MinHashSig.minhashSig(col("text"), 3, 8).getField("dsh").as("dsh"),
       array_sort(array_distinct(Dedup.shingles(col("text"), 3))).as("e"))
@@ -102,7 +99,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("MinHashSig survives k > 1000 (seed prefixes past 3 digits)") {
-    MinHashSig.register(spark, 2, 1001)
     val sh = Dedup.shingles(col("text"), 2)
     val r = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
       .select(MinHashSig.minhashSig($"text", 2, 1001).as("m"),
@@ -118,7 +114,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("SimHash64 agrees with the HOF formulation") {
-    SimHash64.register(spark)
     val got = corpus.select($"doc_id",
       SimHash64.simhash64(col("text")).as("fast"),
       Dedup.simhash(col("text")).as("slow")).collect()
@@ -127,7 +122,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("TermFreqs agrees with explode-then-count") {
-    graft.functions.TermFreqs.register(spark)
     val got = corpus.select($"doc_id",
       explode(graft.functions.TermFreqs.termFreqs($"text")))
       .select($"doc_id", $"key", $"value")
@@ -140,7 +134,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("WindowDigests agrees with the HOF slice/join/md5 formulation") {
-    graft.functions.WindowDigests.register(spark, 3)
     val toks = TextAnalysis.tokens(lower($"text"))
     val hof = when(size(toks) >= 3,
       transform(sequence(lit(0), size(toks) - 3),
@@ -160,7 +153,6 @@ class TextExprsSpec extends SparkSpec {
   test("WindowDigests HOF parity holds on whitespace/unicode edges") {
     // both tokenizers split on the single ASCII space ONLY — tabs,
     // newlines and NBSP are token characters; this pins that contract
-    graft.functions.WindowDigests.register(spark, 2)
     val edges = Seq(
       "a  b   c",              // runs of spaces
       "a\tb c\nd",             // tab/newline inside tokens
@@ -190,8 +182,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("null text yields null outputs, not a crash") {
-    TextStats.register(spark); SimHash64.register(spark)
-    MinHashSig.register(spark, 3, 8)
     val r = Seq((1L, null: String)).toDF("doc_id", "text")
       .select(TextStats.textStats($"text"),
         MinHashSig.minhashSig($"text", 3, 8),
@@ -200,7 +190,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("type validation rejects non-string / non-vector inputs at analysis") {
-    TextStats.register(spark); VectorOps.register(spark)
     val df = Seq((1, Array(1, 2))).toDF("n", "arr")
     intercept[org.apache.spark.sql.AnalysisException] {
       df.select(TextStats.textStats($"n")).collect()
